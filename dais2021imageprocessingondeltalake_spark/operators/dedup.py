@@ -14,11 +14,32 @@ Scale design (the whole point — these must work at 100 TB):
   signature) produces a hot key; AQE skew-join splitting (on in
   session.py) handles it, and `spark.sql.shuffle.partitions` bounds
   partition width.
+
+Every near-dup entry point is assembled from ONE private implementation
+per stage, so the md5-family oracle queries certify the same banding,
+join, verify and packing code the xxhash64 production paths run — the
+hash families differ only in their signature expressions:
+- `_shared_counts`: inverted-index self-join counting shared shingles
+  (ngram_jaccard_pairs, ngram_containment_pairs);
+- `_rarity_prefix` + `_prefix_candidates`: PPJoin rarity prefix, size
+  and positional filters (ngram_jaccard_pairs_prefix,
+  cross_corpus_near_dup_flags);
+- `_verify_jaccard`: exact shingle-set Jaccard of candidate pairs (the
+  prefix path and both cross_corpus_*_flags);
+- `_band_table`: MinHash signature → LSH band rows (minhash_lsh_pairs,
+  minhash_bands_md5, minhash_lsh_pairs_oph);
+- `_band_self_join`: the band-collision self-join (the three MinHash-LSH
+  pair producers and banded_hamming_pairs);
+- `_simhash`: per-token bit votes, sums and packing (simhash, simhash_md5);
+- `_flag_dups` (is_dup per new document) and `_attach_roots` (cluster
+  root per document).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .sampling import ensure_min_partitions
@@ -56,13 +77,8 @@ def _parallelize(df: DataFrame) -> DataFrame:
 MATERIALIZE_MODES = ("localCheckpoint", "persist", "checkpoint", None)
 
 
-def materialize_df(df: DataFrame, mode: str | bool | None, eager: bool = True) -> DataFrame:
-    """Pin `df` per the strategy table above. Booleans are accepted for
-    back-compat: True = "localCheckpoint", False = None."""
-    if mode is True:
-        mode = "localCheckpoint"
-    elif mode is False:
-        mode = None
+def materialize_df(df: DataFrame, mode: str | None, eager: bool = True) -> DataFrame:
+    """Pin `df` per the strategy table above."""
     if mode is None:
         return df
     if mode == "localCheckpoint":
@@ -121,6 +137,52 @@ def shingles(text_col, n: int = 3):
     )).otherwise(F.array().cast("array<string>"))
 
 
+def _exploded(sh: DataFrame) -> DataFrame:
+    """(doc, n_sh, s) — one row per shingle hash of a shingle table."""
+    return sh.select("doc", F.size("sh").alias("n_sh"), F.explode("sh").alias("s"))
+
+
+def _jaccard_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, shared, jaccard) of the pairs (with shared, n_a, n_b)
+    whose Jaccard = shared / (|A| + |B| - shared) reaches `threshold`."""
+    jaccard = F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared"))
+    return (
+        pairs.withColumn("jaccard", jaccard)
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "shared", "jaccard")
+    )
+
+
+def _shared_counts(
+    df: DataFrame, id_col: str, text_col: str, n: int, max_doc_freq: int | None
+) -> DataFrame:
+    """(doc_a, doc_b, shared, n_a, n_b) for every pair doc_a < doc_b that
+    shares at least one shingle: explode shingles → self-join on the
+    shingle (the inverted index) → count shared per pair. Shingles in
+    more than `max_doc_freq` documents are dropped before the self-join
+    (None keeps all; cost model in ngram_jaccard_pairs)."""
+    # the join key is xxhash64(shingle) (shingle_table), not the string:
+    # the shuffle carries 8-byte longs instead of ~20-char strings and the
+    # join compares longs. A cross-shingle hash collision would inflate
+    # `shared` by 1; with ~2^15 distinct shingles against a 2^64 space the
+    # birthday bound is ~1e-10 — far below any operational concern.
+    sh = shingle_table(df, id_col, text_col, n)
+    exploded = _exploded(sh)
+    if max_doc_freq is not None:
+        rare = shingle_doc_freq(sh).filter(F.col("dfreq") <= max_doc_freq).select("s")
+        exploded = exploded.join(rare, ["s"], "left_semi")
+    a, b = exploded.alias("a"), exploded.alias("b")
+    return (
+        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc") < F.col("b.doc")))
+        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+        .agg(
+            F.count(F.lit(1)).alias("shared"),
+            F.first("a.n_sh").alias("n_a"),
+            F.first("b.n_sh").alias("n_b"),
+        )
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -141,43 +203,8 @@ def ngram_jaccard_pairs(
     `shared` for pairs relying on dropped shingles — jaccard becomes a
     lower bound, so recall can only drop, never precision. The uncapped
     form doubles as the oracle-checkable ground truth for MinHash."""
-    sh = _parallelize(df).select(
-        F.col(id_col).alias("doc"), shingles(F.col(text_col), n).alias("shingles")
-    )
-    # join on xxhash64(shingle), not the string: the shuffle carries 8-byte
-    # longs instead of ~20-char strings and the join compares longs.
-    # A cross-shingle hash collision would inflate `shared` by 1; with
-    # ~2^15 distinct shingles against a 2^64 space the birthday bound is
-    # ~1e-10 — far below any operational concern.
-    exploded = sh.select(
-        F.col("doc"),
-        F.size("shingles").alias("n_sh"),
-        F.explode("shingles").alias("s"),
-    ).select("doc", "n_sh", F.xxhash64("s").alias("s"))
-    if max_doc_freq is not None:
-        rare = (
-            exploded.groupBy("s")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") <= max_doc_freq)
-            .select("s")
-        )
-        exploded = exploded.join(rare, ["s"], "left_semi")
-    a = exploded.alias("a")
-    b = exploded.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(
-            F.count(F.lit(1)).alias("shared"),
-            F.first("a.n_sh").alias("n_a"),
-            F.first("b.n_sh").alias("n_b"),
-        )
-    )
-    jaccard = F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared"))
-    return (
-        pairs.withColumn("jaccard", jaccard)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "shared", "jaccard")
+    return _jaccard_at_least(
+        _shared_counts(df, id_col, text_col, n, max_doc_freq), threshold
     )
 
 
@@ -202,38 +229,88 @@ def ngram_containment_pairs(
     `shared`, so containment is a lower bound: recall can drop, precision
     can't. Emits (doc_a, doc_b, shared, cont_a_in_b, cont_b_in_a) where
     max(directions) >= threshold."""
-    sh = _parallelize(df).select(
-        F.col(id_col).alias("doc"), shingles(F.col(text_col), n).alias("shingles")
-    )
-    exploded = sh.select(
-        F.col("doc"),
-        F.size("shingles").alias("n_sh"),
-        F.explode("shingles").alias("s"),
-    ).select("doc", "n_sh", F.xxhash64("s").alias("s"))
-    if max_doc_freq is not None:
-        rare = (
-            exploded.groupBy("s")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") <= max_doc_freq)
-            .select("s")
-        )
-        exploded = exploded.join(rare, ["s"], "left_semi")
-    a = exploded.alias("a")
-    b = exploded.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(
-            F.count(F.lit(1)).alias("shared"),
-            F.first("a.n_sh").alias("n_a"),
-            F.first("b.n_sh").alias("n_b"),
-        )
-    )
     return (
-        pairs.withColumn("cont_a_in_b", F.col("shared") / F.col("n_a"))
+        _shared_counts(df, id_col, text_col, n, max_doc_freq)
+        .withColumn("cont_a_in_b", F.col("shared") / F.col("n_a"))
         .withColumn("cont_b_in_a", F.col("shared") / F.col("n_b"))
         .filter(F.greatest("cont_a_in_b", "cont_b_in_a") >= threshold)
         .select("doc_a", "doc_b", "shared", "cont_a_in_b", "cont_b_in_a")
+    )
+
+
+def _rarity_prefix(sh: DataFrame, dfreq: DataFrame, threshold: float) -> DataFrame:
+    """(doc, n_sh, s, rn) — each document's PPJoin prefix: its first
+    p = |A| - ceil(t*|A|) + 1 shingles under the shared global order
+    (dfreq, s). If J(A,B) >= t then |A∩B| >= t*|A|, so a qualifying pair
+    MUST collide within both prefixes. Prefix filtering is correct under
+    ANY total order both sides share; rarity is the pruning heuristic.
+    Shingles absent from `dfreq` rank as df 0 (rarest, sort first: kept
+    in prefixes, so recall is untouched)."""
+    rarity = Window.partitionBy("doc").orderBy("dfreq", "s")
+    return (
+        _exploded(sh)
+        .join(dfreq, ["s"], "left")
+        .withColumn("dfreq", F.coalesce(F.col("dfreq"), F.lit(0)))
+        .withColumn("rn", F.row_number().over(rarity))
+        .filter(F.col("rn") <= F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1)
+        .select("doc", "n_sh", "s", "rn")
+    )
+
+
+def _prefix_candidates(
+    p_a: DataFrame, p_b: DataFrame, threshold: float, *on: Column
+) -> DataFrame:
+    """Distinct (doc_a, doc_b) whose rarity prefixes collide on a shingle
+    and that pass the size and positional filters; `on` adds further
+    join conditions over the `a`/`b` sides."""
+    a, b = p_a.alias("a"), p_b.alias("b")
+    # positional filter (PPJoin proper): a prefix collision at positions
+    # (rn_a, rn_b) bounds the total overlap by 1 + min(remaining shingles
+    # on each side); if that bound can't reach the overlap the threshold
+    # requires (J >= t  <=>  |A∩B| >= t/(1+t)*(|A|+|B|)), the pair can't
+    # qualify and never reaches verification.
+    overlap_needed = F.ceil(
+        F.lit(threshold / (1.0 + threshold)) * (F.col("a.n_sh") + F.col("b.n_sh"))
+    )
+    overlap_ubound = F.lit(1) + F.least(
+        F.col("a.n_sh") - F.col("a.rn"), F.col("b.n_sh") - F.col("b.rn")
+    )
+    cond = (
+        (F.col("a.s") == F.col("b.s"))
+        # size filter: J >= t forces t*|A| <= |B| and t*|B| <= |A|
+        & (F.col("b.n_sh") >= F.lit(threshold) * F.col("a.n_sh"))
+        & (F.col("a.n_sh") >= F.lit(threshold) * F.col("b.n_sh"))
+        & (overlap_ubound >= overlap_needed)
+    )
+    for c in on:
+        cond = cond & c
+    return (
+        a.join(b, cond)
+        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+        .dropDuplicates(["doc_a", "doc_b"])
+    )
+
+
+def _verify_jaccard(
+    cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame, threshold: float
+) -> DataFrame:
+    """(doc_a, doc_b, shared, jaccard) of the candidate pairs whose EXACT
+    shingle-set Jaccard reaches `threshold`: doc_a's set comes from
+    shingle table `sh_a`, doc_b's from `sh_b`, and each candidate costs one
+    sorted-array intersect (JVM, no Python)."""
+
+    def sets(sh: DataFrame, side: str) -> DataFrame:
+        return sh.select(
+            F.col("doc").alias(f"doc_{side}"),
+            F.col("sh").alias(f"sh_{side}"),
+            F.size("sh").alias(f"n_{side}"),
+        )
+
+    return _jaccard_at_least(
+        cand.join(sets(sh_a, "a"), ["doc_a"])
+        .join(sets(sh_b, "b"), ["doc_b"])
+        .withColumn("shared", F.size(F.array_intersect("sh_a", "sh_b"))),
+        threshold,
     )
 
 
@@ -243,7 +320,7 @@ def ngram_jaccard_pairs_prefix(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.2,
-    materialize: str | bool | None = "localCheckpoint",
+    materialize: str | None = "localCheckpoint",
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs with PREFIX FILTERING (the All-Pairs /
     PPJoin family: Bayardo et al. WWW'07, Xiao et al. WWW'08) — identical
@@ -274,57 +351,9 @@ def ngram_jaccard_pairs_prefix(
     executor loss recomputes blocks instead of killing the job.
     """
     sh = materialize_df(shingle_table(df, id_col, text_col, n), materialize)
-    exploded = sh.select("doc", F.size("sh").alias("n_sh"), F.explode("sh").alias("s"))
-    dfreq = exploded.groupBy("s").agg(F.count(F.lit(1)).alias("dfreq"))
-    from pyspark.sql import Window
-
-    rarity = Window.partitionBy("doc").orderBy("dfreq", "s")
-    prefix = (
-        exploded.join(dfreq, ["s"])
-        .withColumn("rn", F.row_number().over(rarity))
-        .filter(F.col("rn") <= F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1)
-        .select("doc", "n_sh", "s", "rn")
-    )
-    a, b = prefix.alias("a"), prefix.alias("b")
-    # positional filter (PPJoin proper): a prefix collision at positions
-    # (rn_a, rn_b) bounds the total overlap by 1 + min(remaining shingles
-    # on each side); if that bound can't reach the overlap the threshold
-    # requires (J >= t  <=>  |A∩B| >= t/(1+t)*(|A|+|B|)), the pair can't
-    # qualify and never reaches verification.
-    overlap_needed = F.ceil(
-        F.lit(threshold / (1.0 + threshold)) * (F.col("a.n_sh") + F.col("b.n_sh"))
-    )
-    overlap_ubound = F.lit(1) + F.least(
-        F.col("a.n_sh") - F.col("a.rn"), F.col("b.n_sh") - F.col("b.rn")
-    )
-    cand = (
-        a.join(
-            b,
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.doc") < F.col("b.doc"))
-            # size filter: J >= t forces t*|A| <= |B| and t*|B| <= |A|
-            & (F.col("b.n_sh") >= F.lit(threshold) * F.col("a.n_sh"))
-            & (F.col("a.n_sh") >= F.lit(threshold) * F.col("b.n_sh"))
-            & (overlap_ubound >= overlap_needed),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    sets_a = sh.select(
-        F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"), F.size("sh").alias("n_a")
-    )
-    sets_b = sh.select(
-        F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b"), F.size("sh").alias("n_b")
-    )
-    jaccard = F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared"))
-    return (
-        cand.join(sets_a, ["doc_a"])
-        .join(sets_b, ["doc_b"])
-        .withColumn("shared", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("jaccard", jaccard)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "shared", "jaccard")
-    )
+    prefix = _rarity_prefix(sh, shingle_doc_freq(sh), threshold)
+    cand = _prefix_candidates(prefix, prefix, threshold, F.col("a.doc") < F.col("b.doc"))
+    return _verify_jaccard(cand, sh, sh, threshold)
 
 
 # --------------------------------------------------------------------------
@@ -382,6 +411,46 @@ def minhash_signatures(
     )
 
 
+def _band_table(sigs: DataFrame, sig: list[str], bands: int, *carry: str) -> DataFrame:
+    """(doc, *carry, band_id, bv) — the LSH band table of a signature
+    table with a `doc` column: the signature values `sig` (SQL
+    expressions over `sigs`) split into `bands` runs of r = len(sig)/bands,
+    each run joined into one string band value, so two documents share a
+    band row iff they agree on all r values of that band. A pair with
+    Jaccard j collides w.p. 1-(1-j^r)^bands. One SQL string for the whole
+    band array (same Catalyst tree as the per-Column form — see the
+    minhash_signatures py4j note)."""
+    r = len(sig) // bands
+    if r * bands != len(sig):
+        raise ValueError(f"bands={bands} must divide the {len(sig)} signature values")
+    band_arr = ", ".join(
+        f"struct({j} AS band_id, concat_ws('|', {', '.join(sig[j * r:(j + 1) * r])}) AS bv)"
+        for j in range(bands)
+    )
+    return sigs.selectExpr("doc", *carry, f"explode(array({band_arr})) AS b").select(
+        "doc", *carry, "b.band_id", "b.bv"
+    )
+
+
+def _band_self_join(banded: DataFrame, *carry: Column) -> DataFrame:
+    """Distinct candidate pairs (doc_a < doc_b, *carry) of a band table
+    (doc, band_id, bv, ...): documents meet only where a band value
+    collides, so the shuffle is |docs| x |bands| rows, never all pairs.
+    `carry` are columns over the `a`/`b` sides kept per pair (the first
+    colliding band's row)."""
+    a, b = banded.alias("a"), banded.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.bv") == F.col("b.bv"))
+            & (F.col("a.doc") < F.col("b.doc")),
+        )
+        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"), *carry)
+        .dropDuplicates(["doc_a", "doc_b"])
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -391,45 +460,22 @@ def minhash_lsh_pairs(
     shingle_n: int = 3,
 ) -> DataFrame:
     """Near-dup candidate pairs via LSH banding: split the signature into
-    `bands` rows of r = num_hashes/bands values, hash each band, self-join
-    on (band_id, band_hash). A pair with Jaccard j collides w.p.
-    1-(1-j^r)^bands (r=4, b=8: j=0.5 → 0.42, j=0.8 → 0.97).
+    `bands` rows of r = num_hashes/bands values (bands must divide
+    num_hashes), self-join on (band_id, band value). A pair with Jaccard
+    j collides w.p. 1-(1-j^r)^bands (r=4, b=8: j=0.5 → 0.42, j=0.8 → 0.97).
 
     Returns distinct candidate pairs with their estimated Jaccard
     (signature agreement fraction) — callers verify exactly with
     ngram_jaccard on the candidates only."""
-    r = num_hashes // bands
     sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    # one SQL string for the whole band array (same Catalyst tree as the
-    # per-Column form — see the minhash_signatures py4j note)
-    band_arr = ", ".join(
-        "struct({b} AS band_id, xxhash64(concat_ws(',', {els})) AS band_hash)".format(
-            b=b,
-            els=", ".join(
-                f"element_at(minhash, {b * r + j + 1})" for j in range(r)
-            ),
-        )
-        for b in range(bands)
+    banded = _band_table(
+        sigs.withColumnRenamed(id_col, "doc"),
+        [f"element_at(minhash, {i + 1})" for i in range(num_hashes)],
+        bands,
+        "minhash",
     )
-    band_rows = sigs.selectExpr(
-        f"{id_col} AS doc", "minhash", f"explode(array({band_arr})) AS band"
-    ).select("doc", "minhash", "band.band_id", "band.band_hash")
-    a = band_rows.alias("a")
-    b = band_rows.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.col("a.minhash").alias("mh_a"),
-            F.col("b.minhash").alias("mh_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
+    cand = _band_self_join(
+        banded, F.col("a.minhash").alias("mh_a"), F.col("b.minhash").alias("mh_b")
     )
     est = F.size(
         F.filter(
@@ -445,37 +491,46 @@ def minhash_lsh_pairs(
 # --------------------------------------------------------------------------
 # SimHash
 # --------------------------------------------------------------------------
-def simhash(df: DataFrame, id_col: str, text_col: str = "text", bits: int = 64) -> DataFrame:
-    """64-bit SimHash per document, all JVM bitwise expressions: token →
-    xxhash64 → per-bit +1/-1 vote → sign vector → packed long."""
-    # explode distinct tokens → one xxhash64 per row → per-bit ±1 votes as
-    # flat columns → groupBy(id) with `bits` sum() aggs (map-side partial)
-    # → pack. Same flat-vs-nested codegen tradeoff as minhash_signatures.
+def _simhash(
+    df: DataFrame, id_col: str, text_col: str, h: Column, bit: Callable[[int], Column], bits: int
+) -> DataFrame:
+    """(id, simhash) over each document's distinct tokens: token hash `h`
+    (a column over `tok`) → per-bit ±1 votes, `bit(j)` being bit j of
+    column `h` as 0/1 → groupBy(id) with `bits` sum() aggs (map-side
+    partial) → bit j set iff its vote sum is positive, packed into a long.
+    Flat columns, not a nested array transform: same codegen tradeoff as
+    minhash_signatures."""
     exploded = _parallelize(df).select(
         F.col(id_col),
         F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
-    )
-    h = F.xxhash64("tok")
+    ).withColumn("h", h)
     votes = exploded.select(
         id_col,
         *[
-            # shiftright+mask extracts any bit incl. the sign bit (i=63)
-            F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, F.lit(1))
-            .otherwise(F.lit(-1))
-            .alias(f"b{i}")
-            for i in range(bits)
+            F.when(bit(j) == 1, F.lit(1)).otherwise(F.lit(-1)).alias(f"b{j}")
+            for j in range(bits)
         ],
     )
-    sums = votes.groupBy(id_col).agg(*[F.sum(f"b{i}").alias(f"v{i}") for i in range(bits)])
+    sums = votes.groupBy(id_col).agg(*[F.sum(f"b{j}").alias(f"v{j}") for j in range(bits)])
     packed = F.lit(0).cast("long")
-    for i in range(bits):
-        # shiftleft handles i=63 (1<<63 overflows a signed literal)
+    for j in range(bits):
+        # shiftleft handles j=63 (1<<63 overflows a signed literal)
         packed = packed.bitwiseOR(
-            F.when(F.col(f"v{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
+            F.when(F.col(f"v{j}") > 0, F.shiftleft(F.lit(1).cast("long"), j)).otherwise(
                 F.lit(0).cast("long")
             )
         )
     return sums.select(F.col(id_col), packed.alias("simhash"))
+
+
+def simhash(df: DataFrame, id_col: str, text_col: str = "text", bits: int = 64) -> DataFrame:
+    """64-bit SimHash per document, all JVM bitwise expressions: token →
+    xxhash64 → per-bit +1/-1 vote → sign vector → packed long."""
+    # shiftright+mask extracts any bit incl. the sign bit (i=63)
+    return _simhash(
+        df, id_col, text_col, F.xxhash64("tok"),
+        lambda i: F.shiftright("h", i).bitwiseAND(F.lit(1)), bits,
+    )
 
 
 def banded_hamming_pairs(
@@ -509,28 +564,15 @@ def banded_hamming_pairs(
                         F.lit(b).alias("band_id"),
                         F.shiftright(F.col(hash_col), b * width)
                         .bitwiseAND(F.lit(mask))
-                        .alias("band_val"),
+                        .alias("bv"),
                     )
                     for b in range(bands)
                 ]
             )
         ).alias("band"),
-    ).select("doc", "h", "band.band_id", "band.band_val")
-    a, b = band_rows.alias("a"), band_rows.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.expr("bit_count(a.h ^ b.h)").alias("hamming"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-        .filter(F.col("hamming") <= max_hamming)
+    ).select("doc", "h", "band.band_id", "band.bv")
+    return _band_self_join(band_rows, F.expr("bit_count(a.h ^ b.h)").alias("hamming")).filter(
+        F.col("hamming") <= max_hamming
     )
 
 
@@ -557,7 +599,7 @@ def connected_components(
     id_b: str = "doc_b",
     max_iter: int = 25,
     on_nonconverge: str = "raise",
-    materialize: str | bool | None = "localCheckpoint",
+    materialize: str | None = "localCheckpoint",
 ) -> DataFrame:
     """Connected components over a near-dup pair list by iterative
     min-label propagation: every node starts labeled with itself; each
@@ -652,6 +694,18 @@ def connected_components(
     return labels.select(F.col("id"), F.col("label").alias("cluster_root"))
 
 
+def _attach_roots(
+    docs: DataFrame, id_col: str, edges: DataFrame, id_a: str, id_b: str
+) -> DataFrame:
+    """docs + cluster_root: each document's connected_components root over
+    `edges`; a document in no edge is its own singleton cluster (left
+    join; root = own id)."""
+    clusters = connected_components(edges, id_a=id_a, id_b=id_b)
+    return docs.join(
+        clusters.withColumnRenamed("id", id_col), [id_col], "left"
+    ).withColumn("cluster_root", F.coalesce(F.col("cluster_root"), F.col(id_col)))
+
+
 def leakage_safe_split(
     docs: DataFrame,
     id_col: str,
@@ -685,10 +739,7 @@ def leakage_safe_split(
     for the assignment. No extra shuffle of the corpus beyond the join."""
     from .sampling import _md5_threshold
 
-    clusters = connected_components(edges, id_a=id_a, id_b=id_b)
-    joined = docs.join(
-        clusters.withColumnRenamed("id", id_col), [id_col], "left"
-    ).withColumn("cluster_root", F.coalesce(F.col("cluster_root"), F.col(id_col)))
+    joined = _attach_roots(docs, id_col, edges, id_a, id_b)
     if hash_family == "md5":
         digest = F.md5(
             F.concat(F.col("cluster_root").cast("string"), F.lit(f":split{seed}"))
@@ -744,6 +795,15 @@ def shingle_doc_freq(shingle_tbl: DataFrame) -> DataFrame:
     )
 
 
+def _flag_dups(new_df: DataFrame, id_col: str, dups: DataFrame) -> DataFrame:
+    """(id, is_dup) for every row of new_df: True iff its id is a doc_a of
+    the verified pairs `dups`."""
+    dup_ids = dups.select(F.col("doc_a").alias(id_col)).distinct()
+    return new_df.select(id_col).join(
+        dup_ids.withColumn("is_dup", F.lit(True)), [id_col], "left"
+    ).select(F.col(id_col), F.coalesce(F.col("is_dup"), F.lit(False)).alias("is_dup"))
+
+
 def cross_corpus_near_dup_flags(
     new_df: DataFrame,
     ref_df: DataFrame | None,
@@ -752,7 +812,7 @@ def cross_corpus_near_dup_flags(
     n: int = 3,
     threshold: float = 0.5,
     broadcast_new: bool = True,
-    materialize: str | bool | None = "localCheckpoint",
+    materialize: str | None = "localCheckpoint",
     ref_shingles: DataFrame | None = None,
     ref_dfreq: DataFrame | None = None,
     new_shingles: DataFrame | None = None,
@@ -765,10 +825,11 @@ def cross_corpus_near_dup_flags(
 
     Same prefix-filter machinery as ngram_jaccard_pairs_prefix, but the
     candidate join is new-prefix x ref-prefix instead of a self-join —
-    asymmetric by design. The global rarity order comes from the UNION's
-    doc-frequencies (prefix filtering is correct under ANY shared total
-    order; rarity is the pruning heuristic, and ref-side dfreq dominates
-    the union so stop-shingles still sort last). At scale the new batch
+    asymmetric by design. The global rarity order comes from the
+    REFERENCE side's doc-frequencies: the corpus dfreq table is
+    precomputed once (shingle_doc_freq) and reused for every snapshot,
+    and shingles unseen in the corpus rank as df 0 (rarest), so the new
+    batch never contributes to a union-wide count. At scale the new batch
     is orders of magnitude smaller than the corpus, so its prefix index
     broadcasts (`broadcast_new`) — the ref corpus never shuffles for
     candidate generation, it is scanned once to build prefixes and once
@@ -783,8 +844,6 @@ def cross_corpus_near_dup_flags(
     derived in-query (the self-computing path; flag-identical output —
     pinned by tests/test_llm_ops.py).
     """
-    from pyspark.sql import Window
-
     if ref_shingles is None and ref_df is None:
         raise ValueError("need ref_df or a precomputed ref_shingles table")
 
@@ -802,74 +861,14 @@ def cross_corpus_near_dup_flags(
         if ref_shingles is not None
         else materialize_df(shingle_table(ref_df, id_col, text_col, n), materialize)
     )
-
-    def _exploded(sh: DataFrame) -> DataFrame:
-        return sh.select("doc", F.size("sh").alias("n_sh"), F.explode("sh").alias("s"))
-
-    ex_new, ex_ref = _exploded(sh_new), _exploded(sh_ref)
-    # rarity order from REF-side doc frequencies only: prefix filtering is
-    # correct under ANY total order both sides share, and (ref-df, s) is
-    # shared — shingles unseen in the corpus coalesce to df 0 (rarest,
-    # sort first: keeps them in prefixes, so recall is untouched). This
-    # matches how incremental ingest actually runs — the corpus dfreq
-    # table is precomputed once (shingle_doc_freq) and reused for every
-    # snapshot; the new batch never contributes to a union-wide count.
     dfreq = ref_dfreq if ref_dfreq is not None else shingle_doc_freq(sh_ref)
-
-    def _prefix(ex: DataFrame) -> DataFrame:
-        rarity = Window.partitionBy("doc").orderBy("dfreq", "s")
-        return (
-            ex.join(dfreq, ["s"], "left")
-            .withColumn("dfreq", F.coalesce(F.col("dfreq"), F.lit(0)))
-            .withColumn("rn", F.row_number().over(rarity))
-            .filter(
-                F.col("rn")
-                <= F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-            )
-            .select("doc", "n_sh", "s", "rn")
-        )
-
-    p_new = _prefix(ex_new).alias("a")
-    p_ref = _prefix(ex_ref).alias("b")
-    if broadcast_new:
-        p_new = F.broadcast(p_new)
-    overlap_needed = F.ceil(
-        F.lit(threshold / (1.0 + threshold)) * (F.col("a.n_sh") + F.col("b.n_sh"))
+    p_new = _rarity_prefix(sh_new, dfreq, threshold)
+    cand = _prefix_candidates(
+        F.broadcast(p_new) if broadcast_new else p_new,
+        _rarity_prefix(sh_ref, dfreq, threshold),
+        threshold,
     )
-    overlap_ubound = F.lit(1) + F.least(
-        F.col("a.n_sh") - F.col("a.rn"), F.col("b.n_sh") - F.col("b.rn")
-    )
-    cand = (
-        p_new.join(
-            p_ref,
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("b.n_sh") >= F.lit(threshold) * F.col("a.n_sh"))
-            & (F.col("a.n_sh") >= F.lit(threshold) * F.col("b.n_sh"))
-            & (overlap_ubound >= overlap_needed),
-        )
-        .select(F.col("a.doc").alias("doc_new"), F.col("b.doc").alias("doc_ref"))
-        .dropDuplicates(["doc_new", "doc_ref"])
-    )
-    jaccard = F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared"))
-    dup_ids = (
-        cand.join(
-            sh_new.select(F.col("doc").alias("doc_new"), F.col("sh").alias("sh_a"),
-                          F.size("sh").alias("n_a")),
-            ["doc_new"],
-        )
-        .join(
-            sh_ref.select(F.col("doc").alias("doc_ref"), F.col("sh").alias("sh_b"),
-                          F.size("sh").alias("n_b")),
-            ["doc_ref"],
-        )
-        .withColumn("shared", F.size(F.array_intersect("sh_a", "sh_b")))
-        .filter(jaccard >= threshold)
-        .select(F.col("doc_new").alias(id_col))
-        .distinct()
-    )
-    return new_df.select(id_col).join(
-        dup_ids.withColumn("is_dup", F.lit(True)), [id_col], "left"
-    ).select(F.col(id_col), F.coalesce(F.col("is_dup"), F.lit(False)).alias("is_dup"))
+    return _flag_dups(new_df, id_col, _verify_jaccard(cand, sh_new, sh_ref, threshold))
 
 
 def keep_best_per_cluster(
@@ -890,8 +889,6 @@ def keep_best_per_cluster(
     root — both shuffle on cluster keys, cluster count << corpus size.
     Returns (id, cluster_root, score) for the kept rows only.
     """
-    from pyspark.sql import Window
-
     rooted = (
         df.select(F.col(id_col), F.col(score_col))
         .join(clusters, df[id_col] == clusters["id"], "left")
@@ -925,28 +922,17 @@ def minhash_lsh_pairs_md5(
     identical signature, so the full banding pipeline replays in SQL —
     this is the oracle-certified sibling of minhash_lsh_pairs, whose
     xxhash64 double-hash family is Spark-private (rows-only checkable)
-    but ~2x cheaper per shingle. Same LSH geometry: a pair with Jaccard
-    j collides w.p. 1-(1-j^r)^bands, r = num_hashes/bands.
+    but ~2x cheaper per shingle. Both share the band table and band
+    self-join code. Same LSH geometry: a pair with Jaccard j collides
+    w.p. 1-(1-j^r)^bands, r = num_hashes/bands.
 
     Scale shape is unchanged: explode shingles -> num_hashes map-side
     min aggs (shuffle carries |docs| x num_hashes hex strings — 32 bytes
     each vs 8-byte longs, the price of portability) -> band explode ->
     self-join on (band_id, band_value).
     """
-    r = num_hashes // bands
-    if r * bands != num_hashes:
-        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
-    banded = minhash_bands_md5(df, id_col, text_col, num_hashes, bands, shingle_n)
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
+    return _band_self_join(
+        minhash_bands_md5(df, id_col, text_col, num_hashes, bands, shingle_n)
     )
 
 
@@ -963,7 +949,6 @@ def minhash_bands_md5(
     every incoming batch joins its own (tiny) band table against it for
     candidates (cross_corpus_minhash_flags), exactly how an incremental
     LSH index runs in production."""
-    r = num_hashes // bands
     exploded = _parallelize(df).select(
         F.col(id_col).alias("doc"),
         F.explode(shingles(F.col(text_col), shingle_n)).alias("s"),
@@ -976,16 +961,7 @@ def minhash_bands_md5(
             for i in range(num_hashes)
         ]
     )
-    band_structs = [
-        F.struct(
-            F.lit(j).alias("band_id"),
-            F.concat_ws("|", *[F.col(f"m{j * r + i}") for i in range(r)]).alias("bv"),
-        )
-        for j in range(bands)
-    ]
-    return mins.select(
-        "doc", F.explode(F.array(*band_structs)).alias("b")
-    ).select("doc", F.col("b.band_id").alias("band_id"), F.col("b.bv").alias("bv"))
+    return _band_table(mins, [f"m{i}" for i in range(num_hashes)], bands)
 
 
 def cross_corpus_minhash_flags(
@@ -1036,29 +1012,10 @@ def cross_corpus_minhash_flags(
             (F.col("a.band_id") == F.col("b.band_id"))
             & (F.col("a.bv") == F.col("b.bv")),
         )
-        .select(F.col("a.doc").alias("doc_new"), F.col("b.doc").alias("doc_ref"))
-        .dropDuplicates(["doc_new", "doc_ref"])
+        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+        .dropDuplicates(["doc_a", "doc_b"])
     )
-    jaccard = F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared"))
-    dup_ids = (
-        cand.join(
-            sh_new.select(F.col("doc").alias("doc_new"), F.col("sh").alias("sh_a"),
-                          F.size("sh").alias("n_a")),
-            ["doc_new"],
-        )
-        .join(
-            sh_ref.select(F.col("doc").alias("doc_ref"), F.col("sh").alias("sh_b"),
-                          F.size("sh").alias("n_b")),
-            ["doc_ref"],
-        )
-        .withColumn("shared", F.size(F.array_intersect("sh_a", "sh_b")))
-        .filter(jaccard >= threshold)
-        .select(F.col("doc_new").alias(id_col))
-        .distinct()
-    )
-    return new_df.select(id_col).join(
-        dup_ids.withColumn("is_dup", F.lit(True)), [id_col], "left"
-    ).select(F.col(id_col), F.coalesce(F.col("is_dup"), F.lit(False)).alias("is_dup"))
+    return _flag_dups(new_df, id_col, _verify_jaccard(cand, sh_new, sh_ref, threshold))
 
 
 def simhash_md5(
@@ -1071,39 +1028,15 @@ def simhash_md5(
     positive. Every step is INTEGER arithmetic on identical inputs, so
     the packed signature replays exactly in SQL — the oracle-certified
     sibling of the 64-bit xxhash64 `simhash` (rows-only, 4x wider, the
-    production path). 16 bits keeps the per-token expression count sane;
-    the banding geometry is the same, just coarser.
+    production path), sharing its vote/sum/pack code. 16 bits keeps the
+    per-token expression count sane; the banding geometry is the same,
+    just coarser.
     """
-    hexchars = "0123456789abcdef"
-    exploded = (
-        _parallelize(df)
-        .select(
-            F.col(id_col),
-            F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
-        )
-        .withColumn("h", F.md5(F.col("tok").cast("binary")))
-    )
-
-    def bit(j: int):
-        digit = f"position(substring(h, {1 + j // 4}, 1), '{hexchars}') - 1"
+    def bit(j: int) -> Column:
+        digit = f"position(substring(h, {1 + j // 4}, 1), '0123456789abcdef') - 1"
         return F.expr(f"shiftright({digit}, {j % 4}) & 1")
 
-    votes = exploded.select(
-        id_col,
-        *[
-            F.when(bit(j) == 1, F.lit(1)).otherwise(F.lit(-1)).alias(f"b{j}")
-            for j in range(bits)
-        ],
-    )
-    sums = votes.groupBy(id_col).agg(
-        *[F.sum(f"b{j}").alias(f"v{j}") for j in range(bits)]
-    )
-    packed = F.lit(0).cast("long")
-    for j in range(bits):
-        packed = packed + F.when(F.col(f"v{j}") > 0, F.lit(1 << j)).otherwise(0).cast(
-            "long"
-        )
-    return sums.select(F.col(id_col), packed.alias("simhash"))
+    return _simhash(df, id_col, text_col, F.md5(F.col("tok").cast("binary")), bit, bits)
 
 
 def minhash_oph_signature_cols(
@@ -1172,37 +1105,14 @@ def minhash_lsh_pairs_oph(
     bands: int = 4,
     shingle_n: int = 3,
 ) -> DataFrame:
-    """MinHash-LSH candidate pairs over OPH signatures: the banding and
+    """MinHash-LSH candidate pairs over OPH signatures: the band table and
     candidate self-join of minhash_lsh_pairs_md5, but the signature costs
     ONE hash per shingle instead of num_hashes (see
     minhash_oph_signature_cols). Same LSH geometry per band count;
     per-bin minima are slightly noisier than independent hashes (a bin
     sees only ~1/16 of the shingles), which planted/recall tests bound."""
-    r = num_bins // bands
-    if r * bands != num_bins:
-        raise ValueError(f"bands={bands} must divide num_bins={num_bins}")
     sig = minhash_oph_signature_cols(df, id_col, text_col, num_bins, shingle_n)
-    band_structs = [
-        F.struct(
-            F.lit(j).alias("band_id"),
-            F.concat_ws("|", *[F.col(f"sig_{j * r + i}") for i in range(r)]).alias("bv"),
-        )
-        for j in range(bands)
-    ]
-    banded = sig.select("doc", F.explode(F.array(*band_structs)).alias("b")).select(
-        "doc", F.col("b.band_id").alias("band_id"), F.col("b.bv").alias("bv")
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
-    )
+    return _band_self_join(_band_table(sig, [f"sig_{j}" for j in range(num_bins)], bands))
 
 
 def kfold_leakage_safe(
@@ -1225,10 +1135,7 @@ def kfold_leakage_safe(
 
     if k < 2:
         raise ValueError(f"kfold needs k >= 2, got {k}")
-    clusters = connected_components(edges, id_a=id_a, id_b=id_b)
-    joined = docs.join(
-        clusters.withColumnRenamed("id", id_col), [id_col], "left"
-    ).withColumn("cluster_root", F.coalesce(F.col("cluster_root"), F.col(id_col)))
+    joined = _attach_roots(docs, id_col, edges, id_a, id_b)
     digest = F.substring(
         F.md5(F.concat(F.col("cluster_root").cast("string"), F.lit(f":fold{seed}"))),
         1,

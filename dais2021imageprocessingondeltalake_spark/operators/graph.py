@@ -107,7 +107,7 @@ def bfs_distances(
     src: str = "src",
     dst: str = "dst",
     node_col: str = "node",
-    materialize: str | bool | None = "localCheckpoint",
+    materialize: str | None = "localCheckpoint",
 ) -> DataFrame:
     """Multi-source BFS: minimum hop distance (<= max_hops) from any
     seed node, over a DIRECTED edge list (pass both directions for
@@ -156,7 +156,7 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     round_dp: int = 9,
-    materialize: str | bool | None = "localCheckpoint",
+    materialize: str | None = "localCheckpoint",
 ) -> DataFrame:
     """HITS (Kleinberg hubs & authorities) with a fixed iteration count
     over a DIRECTED edge list: authority(d) = sum of hub scores linking
@@ -221,7 +221,7 @@ def label_propagation(
     iters: int = 4,
     src: str = "src",
     dst: str = "dst",
-    materialize: str | bool | None = "localCheckpoint",
+    materialize: str | None = "localCheckpoint",
 ) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) for
     community detection, fully deterministic: every node starts with its

@@ -33,7 +33,7 @@ def logreg_fit_distributed(
     iters: int = 3,
     lr: float = 1.0,
     round_dp: int = 6,
-    materialize: str | bool | None = "localCheckpoint",
+    materialize: str | None = "localCheckpoint",
 ) -> list[tuple[str, float]]:
     """Full-batch gradient-descent logistic regression with an
     intercept, fully distributed: per iteration, ONE scan computes the
@@ -61,8 +61,8 @@ def logreg_fit_distributed(
     )
     # one materialization feeds every iteration's scan: the feature
     # projection (often derived from text) would otherwise re-run per
-    # iteration. materialize_df validates the mode and handles the
-    # True/persist/checkpoint aliases like every sibling operator.
+    # iteration. materialize_df validates the mode like every sibling
+    # operator.
     feats = materialize_df(feats, materialize)
     names = ["intercept", *feature_cols]
     xs: list[Column | None] = [None, *[F.col(f"__x{j}") for j in range(len(feature_cols))]]

@@ -815,7 +815,7 @@ def semantic_dedup_flags(
     vec_col: str = "embedding",
     round_dp: int = 6,
     assignment: DataFrame | None = None,
-    materialize: str | bool | None = "localCheckpoint",
+    materialize: str | None = "localCheckpoint",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
     embedding space, then mark as semantic duplicates the items whose
@@ -1575,7 +1575,7 @@ def ivf_candidate_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_dp: int = 6,
-    materialize: str | bool | None = "localCheckpoint",
+    materialize: str | None = "localCheckpoint",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate generator for margin_mine_ivf, factored out (the
@@ -1644,7 +1644,7 @@ def margin_mine_ivf(
     nprobe: int = 2,
     min_margin_x10k: int = 10200,
     round_dp: int = 6,
-    materialize: str | bool | None = "localCheckpoint",
+    materialize: str | None = "localCheckpoint",
 ) -> DataFrame:
     """IVF margin mining — the BUDGET-holding dual of margin_mine_lsh
     for the Artetxe-Schwenk ratio criterion. The L-table LSH path holds

@@ -292,7 +292,6 @@ class TestMaterializeModes:
         base = self._pairs(spark, "localCheckpoint")
         assert self._pairs(spark, "persist") == base
         assert self._pairs(spark, None) == base
-        assert self._pairs(spark, True) == base  # bool back-compat
 
     def test_connected_components_persist_mode(self, spark):
         from dais2021imageprocessingondeltalake_spark.operators import dedup as D
@@ -1189,6 +1188,28 @@ class TestEmptyInputsRound3:
         assert TX.ngram_novelty(docs, docs).count() == 0
         assert D.ngram_containment_pairs(docs, "doc_id").count() == 0
         assert D.minhash_lsh_pairs_oph(docs, "doc_id").count() == 0
+        assert D.minhash_lsh_pairs(docs, "doc_id").count() == 0
+        assert D.minhash_lsh_pairs_md5(docs, "doc_id").count() == 0
+        assert D.simhash_near_pairs(docs, "doc_id").count() == 0
+        assert D.simhash_md5(docs, "doc_id").count() == 0
+        assert D.ngram_jaccard_pairs(docs, "doc_id").count() == 0
+        assert D.ngram_jaccard_pairs_prefix(docs, "doc_id").count() == 0
+        assert D.cross_corpus_minhash_flags(docs, docs, "doc_id").count() == 0
+        # every document shorter than one 3-gram: no shingles, so no pair
+        # and no duplicate flag — even for the identical texts 1 and 2
+        short = spark.createDataFrame(
+            [(1, "en", "alpha beta"), (2, "en", "alpha beta"), (3, "en", "gamma"),
+             (4, "en", "")],
+            docs.schema,
+        )
+        for pairs in (
+            D.ngram_jaccard_pairs, D.ngram_containment_pairs, D.ngram_jaccard_pairs_prefix,
+            D.minhash_lsh_pairs, D.minhash_lsh_pairs_md5, D.minhash_lsh_pairs_oph,
+        ):
+            assert pairs(short, "doc_id").count() == 0, pairs.__name__
+        for flags in (D.cross_corpus_near_dup_flags, D.cross_corpus_minhash_flags):
+            got = {(r.doc_id, r.is_dup) for r in flags(short, short, "doc_id").collect()}
+            assert got == {(i, False) for i in (1, 2, 3, 4)}, flags.__name__
         edges = spark.createDataFrame(
             [], StructType([StructField("src", StringType()), StructField("dst", StringType())])
         )

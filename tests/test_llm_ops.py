@@ -32,6 +32,30 @@ def test_minhash_lsh_recall_vs_exact(spark):
         assert recall >= 0.5, f"LSH recall {recall} over {len(truth)} true pairs"
 
 
+# The xxhash64 and pixel-hash dedup queries have no SQL oracle; these
+# digests (row count, sha256 of the sorted row reprs at sf0.001) pin their
+# exact output rows.
+ROWS_ONLY_DIGESTS = {
+    "q_minhash_lsh": (28, "edd78ae3391968a6cbb56a45262084cd2a1e9b037f567098d860aa02124b52ad"),
+    "q_simhash": (1176, "2f6e05501e48b3799f9655ab5cda9240a3d36e8188fc4146b39cfce8909a45f9"),
+    "q_leakage_safe_split": (
+        500, "e586267184681b58e871e580dadb324f68faf4fbb601f35033bd7c0fed91fa23"
+    ),
+    "q_image_near_dup": (4, "0861325d5889ba4a5688ee4074928d79d5047d9ac571755c820f548771a3f794"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(ROWS_ONLY_DIGESTS))
+def test_rows_only_dedup_query_digest(spark, name):
+    import hashlib
+
+    from dais2021imageprocessingondeltalake_spark import queries_all as q
+
+    rows = q.REGISTRY[name].fn(spark, SF_DIR).collect()
+    digest = hashlib.sha256("\n".join(sorted(repr(tuple(r)) for r in rows)).encode()).hexdigest()
+    assert (len(rows), digest) == ROWS_ONLY_DIGESTS[name]
+
+
 def test_minhash_identical_docs_always_collide(spark):
     """Planted exact duplicates must be LSH candidates with est_jaccard=1."""
     rows = [(1, "alpha beta gamma delta epsilon zeta eta theta"),
@@ -684,11 +708,17 @@ class TestMinhashMd5:
             assert recall >= 0.5, f"md5-LSH recall {recall} over {len(truth)} pairs"
 
     def test_bands_must_divide_hashes(self, spark):
+        """Every MinHash-LSH entry point refuses a band count that would
+        leave trailing signature values out of every band."""
         import pytest
 
         docs = load_table(spark, "documents", SF_DIR).limit(5)
         with pytest.raises(ValueError, match="must divide"):
             D.minhash_lsh_pairs_md5(docs, "doc_id", num_hashes=8, bands=3)
+        with pytest.raises(ValueError, match="must divide"):
+            D.minhash_lsh_pairs(docs, "doc_id", num_hashes=32, bands=5)
+        with pytest.raises(ValueError, match="must divide"):
+            D.minhash_lsh_pairs_oph(docs, "doc_id", bands=3)
 
     def test_query_side_broadcasts(self, spark):
         """The candidate join must build on the QUERY side — the base

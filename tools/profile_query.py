@@ -17,7 +17,6 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 import time
@@ -72,20 +71,16 @@ def main() -> int:
 
     # ---- parse the event log ------------------------------------------------
     # Spark 4 writes a rolling-log DIRECTORY (eventlog_v2_<appId>/events_*);
-    # older versions write a single file named <appId>.
-    log_path = Path(args.events_dir) / app_id
+    # older versions write a single file named <appId>. read_event_log skips
+    # blank lines and a partial last line.
+    from perfbench.trace import read_event_log
+
     v2_dir = Path(args.events_dir) / f"eventlog_v2_{app_id}"
-    if v2_dir.is_dir():
-        lines: list[str] = []
-        for f in sorted(v2_dir.glob("events_*")):
-            lines.extend(f.read_text().splitlines())
-    else:
-        lines = log_path.read_text().splitlines()
+    logs = sorted(v2_dir.glob("events_*")) if v2_dir.is_dir() else [Path(args.events_dir) / app_id]
     jobs: dict[int, dict] = {}
     stages: dict[int, dict] = {}
     stage_to_job: dict[int, int] = {}
-    for line in lines:
-        ev = json.loads(line)
+    for ev in (ev for log in logs for ev in read_event_log(log)):
         et = ev.get("Event")
         if et == "SparkListenerJobStart":
             jid = ev["Job ID"]
@@ -123,8 +118,6 @@ def main() -> int:
             agg["sh_write"] = agg.get("sh_write", 0) + swm.get("Shuffle Bytes Written", 0)
             im = m.get("Input Metrics") or {}
             agg["input"] = agg.get("input", 0) + im.get("Bytes Read", 0)
-            pym = m.get("Python")  # not present; python time is inside run time
-            _ = pym
 
     by_desc: dict[str, list[tuple[int, dict]]] = defaultdict(list)
     for sid, jid in stage_to_job.items():
