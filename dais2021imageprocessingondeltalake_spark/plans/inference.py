@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions.udf import model_udf
 from ..sources.tables import write_table
+from ..streaming.stream import _drain
 
 
 def score_transform(
@@ -72,12 +73,9 @@ def streaming_inference(
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     stream = transform(reader.parquet(source_dir))
-    q = (
+    _drain(
         stream.writeStream.format("parquet")
         .outputMode("append")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()

@@ -66,12 +66,9 @@ def _stream_fold_partials(
         .parquet(f"{base}/src")
     )
     out = f"{base}/partials"
-    (
+    _drain(
         stream.writeStream.foreachBatch(lambda b, bid: fold(b, out, bid))
         .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
     )
     return out
 
@@ -108,7 +105,7 @@ def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
-from .streaming.stream import events_batch, events_stream, run_stream_to_memory
+from .streaming.stream import _drain, events_batch, events_stream, run_stream_to_memory
 from .streaming.windows import tumbling_window_agg
 
 
@@ -521,12 +518,9 @@ def q_stream_cross_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _write_partial(flags, out_dir, batch_id)
 
-    (
+    _drain(
         stream.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
     )
     return spark.read.parquet(out_dir).select("doc_id", "is_dup")
 

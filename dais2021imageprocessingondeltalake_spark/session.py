@@ -10,10 +10,13 @@ contract) gets identical behavior.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+INITIAL_PARTITIONS = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 
 
 def get_spark(
@@ -30,18 +33,19 @@ def get_spark(
       moves columnar batches, not pickled rows.
     - UTC session timezone: parquet timestamps compare bit-identically with
       the DuckDB oracle.
-    - shuffle partitions sized to cores locally; a cluster deployment would
-      raise this to ~2-3x total cores (AQE coalesces the excess).
+    - shuffle partitions: partition_conf(master, 32) — batch shuffles
+      start at 32 and AQE coalesces them, streams use min(32, task slots
+      of a local master). An explicit `shuffle_partitions` is used as
+      given for both.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
-    nparts = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-    )
+    explicit = shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+    nparts = int(explicit or DEFAULT_SHUFFLE_PARTITIONS)
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(nparts))
+        .config(map=partition_conf(None if explicit else master, nparts))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE's parallelism-first coalescing bottoms out at
@@ -68,3 +72,28 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def partition_conf(master: str | None, batch_partitions: int) -> dict[str, str]:
+    """The two settings that size shuffles. Batch shuffles start AQE at
+    `batch_partitions` and AQE coalesces them. Streams use
+    spark.sql.shuffle.partitions as is, since AQE does not run inside
+    micro-batches, so that is bounded by the task slots of a local
+    `master`: more partitions only queue. The bound is the configured
+    slots, not executors live at that moment, because a checkpoint keeps
+    the count of its first run. A cluster master, or None, sets no bound.
+    """
+    slots = _local_slots(master or "")
+    stream = batch_partitions if slots is None else min(batch_partitions, slots)
+    return {SHUFFLE_PARTITIONS: str(stream), INITIAL_PARTITIONS: str(batch_partitions)}
+
+
+def _local_slots(master: str) -> int | None:
+    """Task slots of a `local`, `local[N]`, `local[*]` or `local[N,F]`
+    master; None for a cluster master."""
+    m = re.fullmatch(r"local(?:\[(\*|\d+)(?:,\d+)?\])?", master)
+    if m is None:
+        return None
+    if m.group(1) is None:
+        return 1
+    return (os.cpu_count() or 1) if m.group(1) == "*" else int(m.group(1))

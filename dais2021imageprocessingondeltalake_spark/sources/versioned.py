@@ -48,6 +48,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..streaming.stream import _drain
+
 _LOG_DIR = "_txn_log"
 _LAST_CKPT = "_last_checkpoint"
 
@@ -476,10 +478,7 @@ def versioned_stream_sink(
         with os.fdopen(fd, "w") as f:
             json.dump(entry, f)
 
-    (
+    _drain(
         streaming_df.writeStream.foreachBatch(commit_batch)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
     )

@@ -24,8 +24,40 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
+
+from ..session import SHUFFLE_PARTITIONS, partition_conf
 
 Transform = Callable[[DataFrame], DataFrame]
+
+
+def _drain(writer: DataStreamWriter) -> None:
+    """Run a configured streaming sink to completion with `availableNow`
+    ('process everything currently in the source, then stop') — the one
+    drain every engine sink goes through.
+
+    A fresh checkpoint records the session's spark.sql.shuffle.partitions
+    as its shuffle/state partition count; a resumed one keeps its own. A
+    value the session set (get_spark sizes it) is used as is. A session
+    that never set it (Spark's built-in default) runs the query under
+    session.partition_conf(master, that default), as get_spark would size
+    it, and has the settings it had not set unset again after.
+    """
+    spark = writer._spark
+    conf = spark.conf.getAll
+    pinned = {}
+    if SHUFFLE_PARTITIONS not in conf:
+        default = int(spark.conf.get(SHUFFLE_PARTITIONS))
+        sizing = partition_conf(spark.sparkContext.master, default)
+        pinned = {k: v for k, v in sizing.items() if k not in conf}
+    for k, v in pinned.items():
+        spark.conf.set(k, v)
+    try:
+        writer.trigger(availableNow=True).start().awaitTermination()
+    finally:
+        for k in pinned:
+            spark.conf.unset(k)
+
 
 # Raw schema of events.parquet. The file has shipped in two physical
 # generations: TIMESTAMP(NANOS) — read as long under nanosAsLong (see
@@ -84,27 +116,12 @@ def run_stream_to_memory(
     assert)."""
     spark = streaming_df.sparkSession
     name = f"stream_out_{uuid.uuid4().hex[:12]}"
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="dais_ckpt_")
-    # Streaming state partitioning is fixed at first run from
-    # spark.sql.shuffle.partitions; a vanilla session's 200 is absurd for
-    # a bounded availableNow drain — bound it for the query, restore after
-    # (safe: the checkpoint is fresh, so no state-repartition conflict).
-    key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(key)
-    if checkpoint_dir is None and int(prior) > 32:
-        spark.conf.set(key, "32")
-    try:
-        q = (
-            streaming_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(key, prior)
+    _drain(
+        streaming_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir or tempfile.mkdtemp(prefix="dais_ckpt_"))
+    )
     return spark.table(name)
 
 
@@ -118,15 +135,12 @@ def run_stream_to_files(
     Delta). Unlike the memory sink this supports checkpoint *recovery*:
     rerunning with the same checkpoint resumes from committed offsets —
     the exactly-once property tests assert."""
-    q = (
+    _drain(
         streaming_df.writeStream.format("parquet")
         .outputMode("append")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
 
 def batch_and_stream(
@@ -202,12 +216,9 @@ def run_stream_upsert_foreachbatch(
         # materialize before overwriting the directory being read
         merged.localCheckpoint().write.mode("overwrite").parquet(table_path)
 
-    (
+    _drain(
         streaming_df.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
     )
 
 
@@ -246,12 +257,9 @@ def run_stream_scd2_foreachbatch(
         folded = scd2_apply_history(dim, events, key=key, ts=ts_col, attr=attr_col)
         folded.localCheckpoint().write.mode("overwrite").parquet(table_path)
 
-    (
+    _drain(
         streaming_df.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
     )
 
 

@@ -4,11 +4,30 @@ checkpoint recovery does not duplicate a completed run's output."""
 
 from __future__ import annotations
 
+import ast
+import contextlib
+import inspect
+import json
+import os
+import re
 import tempfile
+from pathlib import Path
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
+import dais2021imageprocessingondeltalake_spark as pkg
+from dais2021imageprocessingondeltalake_spark.session import (
+    INITIAL_PARTITIONS as INITIAL,
+    SHUFFLE_PARTITIONS as SHUFFLE,
+    _local_slots,
+    get_spark,
+    partition_conf,
+)
+from dais2021imageprocessingondeltalake_spark.streaming.joins import stream_dedup_keys
 from dais2021imageprocessingondeltalake_spark.streaming.stream import (
+    _drain,
     batch_and_stream,
     events_batch,
     events_stream,
@@ -508,3 +527,181 @@ class TestFoldIdempotency:
         for f in glob.glob(f"{totals}/batch_id=1/*.parquet"):
             with open(f, "rb") as fh:
                 assert fh.read()[-4:] == b"PAR1"  # no torn file survives
+
+
+@contextlib.contextmanager
+def _shuffle_partitions(spark, n):
+    prior = spark.conf.get(SHUFFLE)
+    spark.conf.set(SHUFFLE, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(SHUFFLE, prior)
+
+
+@pytest.fixture
+def restore_partitions(spark):
+    """Restore the two partition settings get_spark writes into the shared
+    session (get_spark on a live session reapplies its SQL confs)."""
+    prior = {k: spark.conf.get(k) for k in (SHUFFLE, INITIAL)}
+    yield
+    for k, v in prior.items():
+        spark.conf.set(k, v)
+
+
+def _ckpt_partitions(ckpt, batch_id=0):
+    """(shuffle partitions recorded in the offset log for `batch_id`,
+    partition directories of stateful operator 0's state store)."""
+    meta = json.loads(Path(ckpt, "offsets", str(batch_id)).read_text().splitlines()[1])
+    state = [d for d in Path(ckpt, "state", "0").iterdir() if d.name.isdigit()]
+    return int(meta["conf"][SHUFFLE]), len(state)
+
+
+@pytest.mark.parametrize(
+    "master,slots",
+    [
+        ("local", 1),
+        ("local[3]", 3),
+        ("local[4,2]", 4),
+        ("local[*]", os.cpu_count()),
+        ("spark://host:7077", None),
+        ("yarn", None),
+        ("local-cluster[2,1,1024]", None),
+    ],
+)
+def test_local_slots_read_from_master(master, slots):
+    assert _local_slots(master) == slots
+
+
+@pytest.mark.parametrize(
+    "master,explicit,want",
+    [
+        ("local[3]", None, (3, 32)),  # default: streams at the slots
+        ("local[64]", None, (32, 32)),  # never above the batch start
+        ("local[3]", 7, (7, 7)),  # an explicit value above the slots wins
+    ],
+)
+def test_get_spark_sizes_stream_partitions(
+    spark, restore_partitions, monkeypatch, tmp_path, master, explicit, want
+):
+    """get_spark sets spark.sql.shuffle.partitions (what a fresh stream
+    checkpoint records, one state-store directory per partition) to
+    min(32, slots of a local master) unless a value is given, while batch
+    shuffles still start at 32 (or the given value) for AQE to coalesce."""
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
+    assert get_spark(master=master, shuffle_partitions=explicit) is spark
+    assert (int(spark.conf.get(SHUFFLE)), int(spark.conf.get(INITIAL))) == want
+    batch = events_batch(spark, SF_DIR).groupBy("event_type").count()
+    plan = batch._jdf.queryExecution().executedPlan().toString()
+    assert set(re.findall(r"hashpartitioning\(.*?, (\d+)\)", plan)) == {str(want[1])}
+    ckpt = str(tmp_path / "ckpt")
+    out = run_stream_to_memory(
+        _agg(events_stream(spark, SF_DIR)), output_mode="complete", checkpoint_dir=ckpt
+    )
+    assert out.count() == events_batch(spark, SF_DIR).select("event_type").distinct().count()
+    assert _ckpt_partitions(ckpt) == (want[0],) * 2
+
+
+def test_resumed_checkpoint_keeps_its_partition_count(spark, tmp_path):
+    """A checkpoint first written at 5 shuffle partitions (raw
+    writeStream, outside the drain) and resumed through
+    run_stream_to_files keeps 5 state partitions, whatever the session
+    value is at the resume, and the deduped output equals batch DISTINCT
+    across both source files."""
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+
+    def add_file(keys):
+        rows = [(k, i) for i, k in enumerate(keys)]
+        spark.createDataFrame(rows, "k long, v long").coalesce(1).write.mode("append").parquet(src)
+
+    def dedup_stream():
+        return stream_dedup_keys(spark.readStream.schema("k long, v long").parquet(src), ["k"])
+
+    add_file(list(range(20)) * 2)
+    with _shuffle_partitions(spark, 5):
+        (
+            dedup_stream().writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    assert _ckpt_partitions(ckpt) == (5, 5)
+    add_file(list(range(10, 30)))
+    assert spark.conf.get(SHUFFLE) != "5"
+    run_stream_to_files(dedup_stream(), out, ckpt)
+    assert _ckpt_partitions(ckpt, batch_id=1) == (5, 5)
+    got = sorted(r.k for r in spark.read.parquet(out).collect())
+    want = sorted(r.k for r in spark.read.parquet(src).select("k").distinct().collect())
+    assert got == want == list(range(30))
+
+
+def _unset_partitions(spark):
+    """Make the shared session look like one get_spark never built: both
+    partition settings back at Spark's built-in defaults."""
+    for k in (SHUFFLE, INITIAL):
+        spark.conf.unset(k)
+    default = int(spark.conf.get(SHUFFLE))
+    n = int(partition_conf(spark.sparkContext.master, default)[SHUFFLE])
+    assert n < default  # the test must exercise the lowering
+    return default, n
+
+
+def test_unset_session_value_streams_at_slots(spark, restore_partitions, tmp_path):
+    """A session that never set spark.sql.shuffle.partitions runs a fresh
+    stream at partition_conf(master, Spark's default); batch jobs
+    inside foreachBatch still start AQE at the default; both settings are
+    unset again afterwards."""
+    default, n = _unset_partitions(spark)
+    ckpt = str(tmp_path / "ckpt")
+    run_stream_to_memory(_agg(events_stream(spark, SF_DIR)), "complete", ckpt)
+    assert _ckpt_partitions(ckpt) == (n, n)
+    seen = []
+
+    def record(batch_df, batch_id):
+        seen.append(tuple(batch_df.sparkSession.conf.get(k) for k in (SHUFFLE, INITIAL)))
+
+    _drain(
+        events_stream(spark, SF_DIR).writeStream.foreachBatch(record)
+        .option("checkpointLocation", str(tmp_path / "ckpt2"))
+    )
+    assert seen == [(str(n), str(default))]
+    assert not {SHUFFLE, INITIAL} & spark.conf.getAll.keys()
+
+
+def test_failed_drain_restores_session_conf(spark, restore_partitions, tmp_path):
+    """A sink that raises surfaces as StreamingQueryException, and the
+    session's partition settings are as they were before the call."""
+    default, n = _unset_partitions(spark)
+    seen = []
+
+    def boom(batch_df, batch_id):
+        seen.append(batch_df.sparkSession.conf.get(SHUFFLE))
+        raise RuntimeError("sink failure")
+
+    with pytest.raises(StreamingQueryException, match="sink failure"):
+        _drain(
+            events_stream(spark, SF_DIR).writeStream.foreachBatch(boom)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+        )
+    assert seen == [str(n)]
+    assert spark.conf.get(SHUFFLE) == str(default)
+    assert not {SHUFFLE, INITIAL} & spark.conf.getAll.keys()
+
+
+def test_available_now_only_in_drain():
+    """Every engine sink drains through streaming.stream._drain:
+    `availableNow=` appears in exactly one place in the package (code
+    only; comments and docstrings are not keywords in the syntax tree)."""
+    root = Path(pkg.__file__).parent
+    hits = [
+        (path.relative_to(root).as_posix(), node.lineno)
+        for path in sorted(root.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.keyword) and node.arg == "availableNow"
+    ]
+    lines, first = inspect.getsourcelines(_drain)
+    assert [(f, first <= n < first + len(lines)) for f, n in hits] == [
+        ("streaming/stream.py", True)
+    ]
