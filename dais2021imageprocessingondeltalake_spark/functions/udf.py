@@ -26,7 +26,8 @@ JVM→Arrow→pandas. Batch size is governed by
 `spark.sql.execution.arrow.maxRecordsPerBatch`; grouped_apply requires a
 full shuffle on the group key and materializes each group in one pandas
 frame, so groups must fit in executor memory — prefer map_batches when
-per-group semantics aren't required.
+per-group semantics aren't required. Each Python task also pays a fixed
+floor before fn runs (functions/pydaemon.py cuts it on local sessions).
 """
 
 from __future__ import annotations

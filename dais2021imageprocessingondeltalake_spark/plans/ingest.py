@@ -37,6 +37,11 @@ LABEL_REGEX = r"flower_photos/([^/]+)"  # `01. Ingest.py:50-52`
 def load_labeled(spark: SparkSession, image_dir: str, limit: int | None = None) -> DataFrame:
     """Scan + project + label + size + dense label index
     (`01. Ingest.py:33-88` minus the driver dict)."""
+    return _with_label_index(_scan_labeled(spark, image_dir, limit))
+
+
+def _scan_labeled(spark: SparkSession, image_dir: str, limit: int | None) -> DataFrame:
+    """(path, label, size, content) of every image under `image_dir`."""
     size_udf = scalar_pandas_udf(_image_size_batch, "width: int, height: int")
     # mixed-format glob: the reference ingests `*.jpg` (`01. Ingest.py:35`);
     # the engine decodes PNG and baseline JPEG through one dispatch
@@ -46,10 +51,14 @@ def load_labeled(spark: SparkSession, image_dir: str, limit: int | None = None) 
         F.col("content"),
     )
     df = df.select("path", "label", size_udf(F.col("content")).alias("size"), "content")
-    if limit:
-        df = df.limit(limit)
-    dim = dense_index_dim(df, "label", "label_index")
-    return broadcast_join(df, dim, ["label"], "inner")
+    return df.limit(limit) if limit else df
+
+
+def _with_label_index(df: DataFrame) -> DataFrame:
+    """Attach `label_index`. The dim holds every label of `df`, and a
+    label (regexp_extract of a non-null path) is never null, so the inner
+    join drops no row."""
+    return broadcast_join(df, dense_index_dim(df, "label", "label_index"), ["label"], "inner")
 
 
 def augment_grayscale(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -78,9 +87,12 @@ def ingest_pipeline(
 ) -> DataFrame:
     """The full `01. Ingest.py` flow. Returns the augmented table
     (and writes it when out_path is given, with §4.2 binary policies)."""
-    labeled = load_labeled(spark, image_dir, limit=limit)
+    scanned = _scan_labeled(spark, image_dir, limit)
+    labeled = _with_label_index(scanned)
+    # augment the scan itself: the index join drops no row, and reading
+    # `labeled` here would plan that join (a scan and a broadcast) twice
     augmented = grouped_apply(
-        labeled.select("content", "label", "path"),  # :118,123 column pruning
+        scanned.select("content", "label", "path"),  # :118,123 column pruning
         ["label"],
         augment_grayscale,
         "label string, grayscale_image binary, grayscale_format string",

@@ -17,6 +17,8 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 INITIAL_PARTITIONS = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+DAEMON_MODULE = "spark.python.daemon.module"
+WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
 
 
 def get_spark(
@@ -37,6 +39,10 @@ def get_spark(
       start at 32 and AQE coalesces them, streams use min(32, task slots
       of a local master). An explicit `shuffle_partitions` is used as
       given for both.
+    - Python workers: daemon_conf(master) — a local master forks them
+      from functions.pydaemon.
+
+    An `extra_conf` value wins over each of these.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -46,6 +52,7 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config(map=partition_conf(None if explicit else master, nparts))
+        .config(map=daemon_conf(master))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE's parallelism-first coalescing bottoms out at
@@ -86,6 +93,21 @@ def partition_conf(master: str | None, batch_partitions: int) -> dict[str, str]:
     slots = _local_slots(master or "")
     stream = batch_partitions if slots is None else min(batch_partitions, slots)
     return {SHUFFLE_PARTITIONS: str(stream), INITIAL_PARTITIONS: str(batch_partitions)}
+
+
+def daemon_conf(master: str) -> dict[str, str]:
+    """Fork the Python workers of a local `master` from functions.pydaemon,
+    which keeps each task from re-reading pyspark.zip (see its docstring), and
+    put this package's parent directory on the workers' PYTHONPATH so
+    `python -m` finds it from any cwd. A cluster master's workers may not
+    see this filesystem, so it keeps `pyspark.daemon`."""
+    if _local_slots(master) is None:
+        return {}
+    return {
+        # a name, not an import: `python -m` would warn of a second copy
+        DAEMON_MODULE: f"{__package__}.functions.pydaemon",
+        WORKER_PYTHONPATH: os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    }
 
 
 def _local_slots(master: str) -> int | None:

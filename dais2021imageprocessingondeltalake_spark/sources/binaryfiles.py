@@ -92,10 +92,6 @@ def _image_size_batch(contents):
     return pd.DataFrame({"width": [s[0] for s in sizes], "height": [s[1] for s in sizes]})
 
 
-# back-compat alias (PNG-only call sites predating the JPEG codec)
-_png_size_batch = _image_size_batch
-
-
 def assemble_png_gray(width: int, height: int, row_bytes: list[bytes]) -> bytes:
     """Assemble an 8-bit grayscale PNG (filter 0) from raw scanline bytes
     — the single codec shared by the fixture generator and the multimodal

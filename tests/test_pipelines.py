@@ -86,6 +86,19 @@ def test_ingest_fanout_and_grayscale(spark):
         assert (decode_png_gray(augmented) == 255 - decode_image(original)).all()
 
 
+def test_ingest_plan_reads_the_scan_for_augmentation(spark):
+    """The augmentation branch reads the labelled scan, not its join with
+    the label dim: 3 binaryFile scans (facts, dim, augmentation) and 2
+    BroadcastExchanges (dim, augmented groups) in the executed plan."""
+    result = ingest_pipeline(spark, image_fixture_dir())
+    result.collect()
+    plan = result._jdf.queryExecution().executedPlan()
+    assert plan.toString().startswith("AdaptiveSparkPlan isFinalPlan=true")
+    final = plan.executedPlan().toString()
+    assert final.count("FileScan binaryFile") == 3
+    assert final.count("BroadcastExchange") == 2
+
+
 def test_trainprep_flow(spark):
     df = load_labeled(spark, image_fixture_dir())
     train, val, n_classes = prepare_training_data(
