@@ -43,7 +43,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .sampling import ensure_min_partitions
-from .text import fingerprint_md5, tokens
+from .text import fingerprint_md5, tokens, with_tokens
 
 
 def _parallelize(df: DataFrame) -> DataFrame:
@@ -130,11 +130,13 @@ def shingles(text_col, n: int = 3):
     max(0, len-n+1) shingling — also what the SQL oracles' range-based
     comprehensions produce; a whole-short-text fallback shingle would
     diverge from them and make any two short docs a Jaccard-1 pair)."""
-    toks = tokens(text_col)
-    idx = F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1))
-    return F.when(F.size(toks) >= n, F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-    )).otherwise(F.array().cast("array<string>"))
+    def grams(toks: Column) -> Column:
+        idx = F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1))
+        return F.when(F.size(toks) >= n, F.array_distinct(
+            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
+        )).otherwise(F.array().cast("array<string>"))
+
+    return with_tokens(text_col, grams)
 
 
 def _exploded(sh: DataFrame) -> DataFrame:
@@ -953,11 +955,10 @@ def minhash_bands_md5(
         F.col(id_col).alias("doc"),
         F.explode(shingles(F.col(text_col), shingle_n)).alias("s"),
     )
+    # one SQL string per hash, as in minhash_signatures (py4j note there)
     mins = exploded.groupBy("doc").agg(
         *[
-            F.min(
-                F.md5(F.concat(F.lit(f"{i}:"), F.col("s")).cast("binary"))
-            ).alias(f"m{i}")
+            F.expr(f"min(md5(CAST(concat('{i}:', s) AS BINARY))) AS m{i}")
             for i in range(num_hashes)
         ]
     )

@@ -7,6 +7,8 @@ nothing but a projection (no shuffle at all except where noted).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -25,6 +27,17 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 def tokens(text: Column) -> Column:
     """Whitespace tokenization as an array column (JVM split)."""
     return F.split(text, " ")
+
+
+def with_tokens(text: Column, fn: Callable[[Column], Column]) -> Column:
+    """`fn(toks)` with `toks = tokens(text)` split once per row.
+
+    Catalyst evaluates a lambda body afresh for every element, so an
+    n-gram transform that names `tokens(text)` inside its lambda re-splits
+    the document once per n-gram: O(L^2) for L tokens. Binding the split
+    array as the single element of a one-element array turns it into a
+    lambda variable that `fn` and every lambda nested in it read."""
+    return F.element_at(F.transform(F.array(tokens(text)), fn), 1)
 
 
 def token_count(text: Column) -> Column:
@@ -118,12 +131,12 @@ def rolling_hash_fingerprint(df: DataFrame, text_col: str = "text", window: int 
     token windows, keep the minimum hash (rows-only op — the rolling hash
     isn't SQL-portable). JVM-side via transform+hash: shingle windows →
     xxhash64 → array_min."""
-    toks = tokens(F.col(text_col))
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - F.lit(window - 1), F.lit(1)))
-    windows = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, window)))
-    hashes = F.transform(windows, lambda w: F.xxhash64(w))
-    return df.withColumn("fingerprint", F.array_min(hashes))
+    def min_hash(toks: Column) -> Column:
+        idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(window - 1), F.lit(1)))
+        windows = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, window)))
+        return F.array_min(F.transform(windows, lambda w: F.xxhash64(w)))
+
+    return df.withColumn("fingerprint", with_tokens(F.col(text_col), min_hash))
 
 
 def repetition_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -204,20 +217,21 @@ def bigram_pmi(
     rounds to 6dp per the libm convention. Emits (w1, w2, n_pair, pmi)
     unranked — callers order/limit; the full set avoids rank-boundary
     nondeterminism in oracle comparison."""
-    toks = tokens(F.col(text_col))
-    idx = F.sequence(F.lit(1), F.size(toks) - F.lit(1))
-    bg_arr = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            idx,
-            lambda i: F.struct(
-                F.element_at(toks, i).alias("w1"),
-                F.element_at(toks, i + F.lit(1)).alias("w2"),
+    def bigrams(toks: Column) -> Column:
+        return F.when(
+            F.size(toks) >= 2,
+            F.transform(
+                F.sequence(F.lit(1), F.size(toks) - F.lit(1)),
+                lambda i: F.struct(
+                    F.element_at(toks, i).alias("w1"),
+                    F.element_at(toks, i + F.lit(1)).alias("w2"),
+                ),
             ),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+        ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+
+    bg_arr = with_tokens(F.col(text_col), bigrams)
     bg = df.select(F.explode(bg_arr).alias("bg")).select("bg.w1", "bg.w2")
-    uni = df.select(F.explode(toks).alias("w"))
+    uni = df.select(F.explode(tokens(F.col(text_col))).alias("w"))
     bcnt = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair"))
     ucnt = uni.groupBy("w").agg(F.count(F.lit(1)).alias("n_w"))
     totals = bcnt.agg(F.sum("n_pair").cast("double").alias("nb")).crossJoin(
@@ -723,6 +737,26 @@ def bm25_scores(
     )
 
 
+def _positional_spans(text: Column, n: int) -> Column:
+    """array<struct<i, s>>: every token n-gram `s` of `text` with its
+    1-based start `i`, duplicates kept; empty below n tokens. The span
+    producer of remove_duplicate_spans and remove_contaminated_spans."""
+
+    def spans(toks: Column) -> Column:
+        L = F.size(toks)
+        return F.when(
+            L >= n,
+            F.transform(
+                F.sequence(F.lit(1), L - F.lit(n - 1)),
+                lambda i: F.struct(
+                    i.alias("i"), F.concat_ws(" ", F.slice(toks, i, n)).alias("s")
+                ),
+            ),
+        ).otherwise(F.array().cast("array<struct<i:int,s:string>>"))
+
+    return with_tokens(text, spans)
+
+
 def remove_duplicate_spans(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -748,16 +782,7 @@ def remove_duplicate_spans(
     higher-order functions — no Python, no window). The rewrite never
     compares document pairs."""
     toks = tokens(F.col(text_col))
-    L = F.size(toks)
-    spans = F.when(
-        L >= n,
-        F.transform(
-            F.sequence(F.lit(1), L - F.lit(n - 1)),
-            lambda i: F.struct(
-                i.alias("i"), F.concat_ws(" ", F.slice(toks, i, n)).alias("s")
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<i:int,s:string>>"))
+    spans = _positional_spans(F.col(text_col), n)
     from .sampling import ensure_min_partitions
 
     # parallelism floor before the span-building explode (single small
@@ -865,13 +890,17 @@ def winnowing_fingerprints_md5(
     """
     from pyspark.sql import Window
 
-    toks = tokens(F.col(text_col))
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), n - F.lit(k - 1))
-    grams = F.when(
-        n >= k,
-        F.transform(idx, lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, k)).cast("binary"))),
-    ).otherwise(F.array().cast("array<string>"))
+    def kgram_md5s(toks: Column) -> Column:
+        n = F.size(toks)
+        idx = F.sequence(F.lit(1), n - F.lit(k - 1))
+        return F.when(
+            n >= k,
+            F.transform(
+                idx, lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, k)).cast("binary"))
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+
+    grams = with_tokens(F.col(text_col), kgram_md5s)
     pos_h = df.select(F.col(id_col), F.posexplode(grams).alias("pos", "h"))
     w_frame = (
         Window.partitionBy(id_col).orderBy("pos").rowsBetween(0, window - 1)
@@ -912,16 +941,7 @@ def remove_contaminated_spans(
     per-row JVM array filter. No corpus shuffle at all beyond the
     per-doc covered-set aggregation."""
     toks = tokens(F.col(text_col))
-    L = F.size(toks)
-    spans = F.when(
-        L >= n,
-        F.transform(
-            F.sequence(F.lit(1), L - F.lit(n - 1)),
-            lambda i: F.struct(
-                i.alias("i"), F.concat_ws(" ", F.slice(toks, i, n)).alias("s")
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<i:int,s:string>>"))
+    spans = _positional_spans(F.col(text_col), n)
     from .dedup import shingles as _shingles
     from .sampling import ensure_min_partitions
 

@@ -154,13 +154,18 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 def _query_vector(spark: SparkSession, sf_dir: str) -> list[float]:
     """Deterministic query: embedding of vec_id 0 (driver-side constant —
-    a real service would take user input here)."""
+    a real service would take user input here). Raises ValueError when
+    the embeddings table has no vec_id 0."""
     row = (
         load_table(spark, "embeddings", sf_dir)
         .filter(F.col("vec_id") == 0)
         .select("embedding")
         .first()
     )
+    if row is None:
+        raise ValueError(
+            f"embeddings under {sf_dir} has no vec_id 0 to use as the query vector"
+        )
     return [float(x) for x in row[0]]
 
 

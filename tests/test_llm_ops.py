@@ -2791,3 +2791,24 @@ def test_logreg_calibration_partitions_corpus(spark):
     for r in rows:
         assert 0 <= r["n_pos"] <= r["n"], r
         assert -5 <= r["z_bin"] <= 4, r
+
+
+def test_query_vector_needs_vec_id_zero(spark, tmp_path):
+    """The similarity queries take vec_id 0 as their query; an embeddings
+    table without it raises a named ValueError, not a TypeError on a
+    missing row."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from dais2021imageprocessingondeltalake_spark.queries_llm import (
+        _query_vector,
+        q_embedding_topk,
+    )
+
+    emb = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    pq.write_table(emb.filter(pc.field("vec_id") != 0), tmp_path / "embeddings.parquet")
+    with pytest.raises(ValueError, match="no vec_id 0"):
+        _query_vector(spark, str(tmp_path))
+    with pytest.raises(ValueError, match="no vec_id 0"):
+        q_embedding_topk(spark, str(tmp_path))
+    assert len(_query_vector(spark, SF_DIR)) > 0

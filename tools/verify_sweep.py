@@ -50,7 +50,8 @@ def main() -> int:
 
     try:
         git = subprocess.run(
-            ["git", "-C", str(REPO), "rev-parse", "--short", "HEAD"],
+            # "-dirty" marks a sweep of uncommitted changes on top of HEAD
+            ["git", "-C", str(REPO), "describe", "--always", "--dirty"],
             capture_output=True, text=True, check=True,
         ).stdout.strip()
     except Exception:
