@@ -7,6 +7,10 @@ are rows-only with invariant tests in tests/test_llm_ops.py.
 
 from __future__ import annotations
 
+import glob
+import math
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -2352,6 +2356,153 @@ def q_label_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# Margin-mining SQL shared by every margin oracle. A "ranked" CTE is
+# (probe_id, nbr_id, s, rn) with rn the per-probe rank by (s DESC, nbr_id);
+# the margin pairs over it replay SIM._margin_top2.
+# ---------------------------------------------------------------------------
+
+#: Recall target for sizing decisions across the margin-mining family,
+#: and the certified floor of q_margin_pq_recall (fraction x10k).
+_MARGIN_PQ_FLOOR_X10K = 8500
+
+_V_CTE = """
+    WITH v AS MATERIALIZED (
+      SELECT vec_id, label AS grp, CAST(embedding AS DOUBLE[]) AS ve
+      FROM embeddings
+    ), """
+
+
+def _margin_top2_sql(
+    ranked: str,
+    min_margin_x10k: int = 11000,
+    cols: str = "b.probe_id, b.nbr_id AS best_id",
+) -> str:
+    """SELECT `cols` of each probe's best neighbour in `ranked` whose
+    best/second cosine ratio clears the margin."""
+    return f"""SELECT {cols}
+      FROM (SELECT probe_id, nbr_id, s FROM {ranked} WHERE rn = 1) b
+      JOIN (SELECT probe_id, s AS sim2 FROM {ranked} WHERE rn = 2) s2
+        USING (probe_id)
+      WHERE s2.sim2 > 0
+        AND floor(10000.0 * b.s / s2.sim2) >= {min_margin_x10k}"""
+
+
+def _margin_pairs_cte(name: str, ranked: str, min_margin_x10k: int = 11000) -> str:
+    """The margin pairs of `ranked` as the CTE `name(probe_id, best_id)`."""
+    return f"""{name} AS MATERIALIZED (
+      {_margin_top2_sql(ranked, min_margin_x10k)}
+    )"""
+
+
+def _margin_select_sql(ranked: str, min_margin_x10k: int = 11000) -> str:
+    """A miner's output over `ranked`: best/second CTEs, then the
+    (probe_id, best_id, sim1, sim2, margin_x10k) rows."""
+    return f"""best AS (
+      SELECT probe_id, nbr_id AS best_id, s AS sim1 FROM {ranked} WHERE rn = 1
+    ), second AS (
+      SELECT probe_id, s AS sim2 FROM {ranked} WHERE rn = 2
+    )
+    SELECT b.probe_id, b.best_id, b.sim1, s.sim2,
+           CAST(floor(10000.0 * b.sim1 / s.sim2) AS BIGINT) AS margin_x10k
+    FROM best b JOIN second s USING (probe_id)
+    WHERE s.sim2 > 0 AND floor(10000.0 * b.sim1 / s.sim2) >= {min_margin_x10k}
+    """
+
+
+def _margin_brute_sql(
+    min_margin_x10k: int = 11000, where: str = "", grp: str = "grp"
+) -> str:
+    """Brute-force cross-group margin reference as CTEs (brute_ranked +
+    brute_pairs) — the quadratic audit every margin recall/curve oracle
+    joins against; `where` restricts the probe (a) / neighbour (c)
+    sides. Expects ``v(vec_id, <grp>, ve)`` upstream."""
+    return f"""brute_ranked AS MATERIALIZED (
+      SELECT probe_id, nbr_id, s,
+             row_number() OVER (PARTITION BY probe_id ORDER BY s DESC, nbr_id) AS rn
+      FROM (
+        SELECT a.vec_id AS probe_id, c.vec_id AS nbr_id,
+               round(list_cosine_similarity(a.ve, c.ve), 6) AS s
+        FROM v a JOIN v c ON a.{grp} <> c.{grp}
+        {where}
+      )
+    ), {_margin_pairs_cte("brute_pairs", "brute_ranked", min_margin_x10k)}"""
+
+
+def _recall_report_sql(pairs: str, n_col: str, floor_x10k: int) -> str:
+    """The one-row recall report of the `pairs` CTE against brute_pairs
+    (pair counts, floor-scaled recall, the certified floor column)."""
+    recall = (
+        "CASE WHEN n_brute = 0 THEN 10000"
+        " ELSE floor(10000.0 * n_hit / n_brute) END"
+    )
+    return f"""counts AS (
+      SELECT
+        (SELECT count(*) FROM brute_pairs) AS n_brute,
+        (SELECT count(*) FROM {pairs}) AS {n_col},
+        (SELECT count(*) FROM brute_pairs JOIN {pairs} USING (probe_id, best_id))
+          AS n_hit
+    )
+    SELECT CAST(n_brute AS BIGINT) AS n_brute,
+           CAST({n_col} AS BIGINT) AS {n_col},
+           CAST(n_hit AS BIGINT) AS n_hit,
+           CAST({recall} AS BIGINT) AS recall_x10k,
+           CAST({floor_x10k} AS BIGINT) AS floor_x10k,
+           ({recall}) >= {floor_x10k} AS meets_floor
+    FROM counts
+    """
+
+
+def _recall_select_sql(head: str, mined: str) -> str:
+    """One measured-ladder row: the rung's `head` columns, then the
+    `mined` pairs, their hits in brute_pairs and recall_x10k (10000 when
+    the brute reference is empty) — the oracle side of _measured_ladder."""
+    hits = f"FROM {mined} JOIN brute_pairs USING (probe_id, best_id)"
+    return f"""SELECT {head},
+           (SELECT CAST(count(*) AS BIGINT) FROM {mined}) AS n_mined,
+           (SELECT CAST(count(*) AS BIGINT)
+            {hits}) AS n_hit,
+           (SELECT CAST(CASE WHEN (SELECT count(*) FROM brute_pairs) = 0
+                             THEN 10000
+                             ELSE floor(10000.0 * count(*) /
+                                  (SELECT count(*) FROM brute_pairs)) END
+                  AS BIGINT)
+            {hits})
+             AS recall_x10k"""
+
+
+def _ladder_ctes(selects: list, order: str = "", S: str = "", prod: str = "") -> str:
+    """The ladder{S} CTE (the rung SELECTs in one UNION ALL); with
+    `order`, sized{S} = the first rung in that order clearing the
+    sizing target; with `prod`, the production rung's row."""
+    union = "\n      UNION ALL ".join(selects)
+    sql = f"""ladder{S} AS MATERIALIZED (
+      {union}
+    )"""
+    if order:
+        sql += f""", sized{S} AS MATERIALIZED (
+      SELECT * FROM ladder{S} WHERE recall_x10k >= {_MARGIN_PQ_FLOOR_X10K}
+      ORDER BY {order} LIMIT 1
+    )"""
+    if prod:
+        sql += f""", prod{S} AS MATERIALIZED (
+      SELECT * FROM ladder{S} WHERE {prod}
+    )"""
+    return sql
+
+
+def _ladder_oracle(
+    parts: list, selects: list, tail: str | None = None, order: str = "",
+    prod: str = "",
+) -> str:
+    """A measured-ladder oracle: `v`, the family's CTE `parts`, then the
+    curve rows (no `tail`) or the ladder/sized CTEs followed by `tail`."""
+    sql = _V_CTE + ",\n    ".join(parts)
+    if tail is None:
+        return sql + "\n    " + "\n      UNION ALL ".join(selects)
+    return sql + ",\n    " + _ladder_ctes(selects, order, prod=prod) + tail
+
+
 @query(
     "q_margin_mine",
     oracle="""
@@ -2366,16 +2517,7 @@ def q_label_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
                round(list_cosine_similarity(a.ve, b.ve), 6) AS s
         FROM v a JOIN v b ON a.label <> b.label
       )
-    ), best AS (
-      SELECT probe_id, nbr_id AS best_id, s AS sim1 FROM ranked WHERE rn = 1
-    ), second AS (
-      SELECT probe_id, s AS sim2 FROM ranked WHERE rn = 2
-    )
-    SELECT b.probe_id, b.best_id, b.sim1, s.sim2,
-           CAST(floor(10000.0 * b.sim1 / s.sim2) AS BIGINT) AS margin_x10k
-    FROM best b JOIN second s USING (probe_id)
-    WHERE s.sim2 > 0 AND floor(10000.0 * b.sim1 / s.sim2) >= 11000
-    """,
+    ), """ + _margin_select_sql("ranked"),
 )
 def q_margin_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Margin-based cross-group pair mining (CCMatrix/LASER bitext
@@ -2513,16 +2655,7 @@ def _margin_mine_lsh_oracle(min_margin_x10k: int = 11000) -> str:
     return f"""
     WITH v AS MATERIALIZED (
       SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings
-    ), {_margin_lsh_pairs_sql()}, best AS (
-      SELECT probe_id, nbr_id AS best_id, s AS sim1 FROM lsh_ranked WHERE rn = 1
-    ), second AS (
-      SELECT probe_id, s AS sim2 FROM lsh_ranked WHERE rn = 2
-    )
-    SELECT b.probe_id, b.best_id, b.sim1, s.sim2,
-           CAST(floor(10000.0 * b.sim1 / s.sim2) AS BIGINT) AS margin_x10k
-    FROM best b JOIN second s USING (probe_id)
-    WHERE s.sim2 > 0 AND floor(10000.0 * b.sim1 / s.sim2) >= {min_margin_x10k}
-    """
+    ), {_margin_lsh_pairs_sql()}, {_margin_select_sql("lsh_ranked", min_margin_x10k)}"""
 
 
 def _sized_margin_lsh(
@@ -2590,50 +2723,15 @@ def _margin_lsh_recall_oracle(min_margin_x10k: int = 11000) -> str:
     recall of the bucketed pairs against the exact pairs — floor-scaled
     rational so the one division is bit-deterministic, with the 0.85
     recall floor emitted as a certified column."""
-    return f"""
+    return """
     WITH v AS MATERIALIZED (
       SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings
-    ), {_margin_lsh_pairs_sql()}, lsh_pairs AS MATERIALIZED (
-      SELECT b.probe_id, b.nbr_id AS best_id
-      FROM (SELECT probe_id, nbr_id, s FROM lsh_ranked WHERE rn = 1) b
-      JOIN (SELECT probe_id, s AS sim2 FROM lsh_ranked WHERE rn = 2) s2
-        USING (probe_id)
-      WHERE s2.sim2 > 0
-        AND floor(10000.0 * b.s / s2.sim2) >= {min_margin_x10k}
-    ), brute_ranked AS MATERIALIZED (
-      SELECT probe_id, nbr_id, s,
-             row_number() OVER (PARTITION BY probe_id ORDER BY s DESC, nbr_id) AS rn
-      FROM (
-        SELECT a.vec_id AS probe_id, c.vec_id AS nbr_id,
-               round(list_cosine_similarity(a.ve, c.ve), 6) AS s
-        FROM v a JOIN v c ON a.label <> c.label
-      )
-    ), brute_pairs AS MATERIALIZED (
-      SELECT b.probe_id, b.nbr_id AS best_id
-      FROM (SELECT probe_id, nbr_id, s FROM brute_ranked WHERE rn = 1) b
-      JOIN (SELECT probe_id, s AS sim2 FROM brute_ranked WHERE rn = 2) s2
-        USING (probe_id)
-      WHERE s2.sim2 > 0
-        AND floor(10000.0 * b.s / s2.sim2) >= {min_margin_x10k}
-    ), counts AS (
-      SELECT
-        (SELECT count(*) FROM brute_pairs) AS n_brute,
-        (SELECT count(*) FROM lsh_pairs) AS n_lsh,
-        (SELECT count(*) FROM brute_pairs JOIN lsh_pairs USING (probe_id, best_id))
-          AS n_hit
-    )
-    SELECT CAST(n_brute AS BIGINT) AS n_brute,
-           CAST(n_lsh AS BIGINT) AS n_lsh,
-           CAST(n_hit AS BIGINT) AS n_hit,
-           CAST(CASE WHEN n_brute = 0 THEN 10000
-                     ELSE floor(10000.0 * n_hit / n_brute) END AS BIGINT)
-             AS recall_x10k,
-           CAST({_MARGIN_RECALL_FLOOR_X10K} AS BIGINT) AS floor_x10k,
-           (CASE WHEN n_brute = 0 THEN 10000
-                 ELSE floor(10000.0 * n_hit / n_brute) END)
-             >= {_MARGIN_RECALL_FLOOR_X10K} AS meets_floor
-    FROM counts
-    """
+    ), """ + ", ".join([
+        _margin_lsh_pairs_sql(),
+        _margin_pairs_cte("lsh_pairs", "lsh_ranked", min_margin_x10k),
+        _margin_brute_sql(min_margin_x10k, grp="label"),
+        _recall_report_sql("lsh_pairs", "n_lsh", _MARGIN_RECALL_FLOOR_X10K),
+    ])
 
 
 @query("q_margin_lsh_recall", oracle=_margin_lsh_recall_oracle())
@@ -2759,20 +2857,10 @@ def _margin_mine_ivf_oracle(min_margin_x10k: int = 11000) -> str:
     """Replay sqrt(N)-cell IVF margin mining in SQL: certified k-means
     fit (one Lloyd iteration), top-2 cell multi-assignment, home-cell
     candidate join, per-probe best/second-best ratio filter."""
-    return f"""
-    WITH v AS MATERIALIZED (
-      SELECT vec_id, label AS grp, CAST(embedding AS DOUBLE[]) AS ve
-      FROM embeddings
-    ), {_margin_ivf_pairs_sql()}, best AS (
-      SELECT probe_id, nbr_id AS best_id, s AS sim1 FROM ivf_ranked WHERE rn = 1
-    ), second AS (
-      SELECT probe_id, s AS sim2 FROM ivf_ranked WHERE rn = 2
+    return (
+        f"{_V_CTE}{_margin_ivf_pairs_sql()}, "
+        + _margin_select_sql("ivf_ranked", min_margin_x10k)
     )
-    SELECT b.probe_id, b.best_id, b.sim1, s.sim2,
-           CAST(floor(10000.0 * b.sim1 / s.sim2) AS BIGINT) AS margin_x10k
-    FROM best b JOIN second s USING (probe_id)
-    WHERE s.sim2 > 0 AND floor(10000.0 * b.sim1 / s.sim2) >= {min_margin_x10k}
-    """
 
 
 def _sized_margin_ivf(
@@ -2831,51 +2919,15 @@ def _margin_ivf_recall_oracle(min_margin_x10k: int = 11000) -> str:
     """One SQL string replaying brute-force margin mining and the IVF
     cell-probed miner, reporting recall of the IVF (probe, best) pairs
     with the certified floor column — the q_margin_lsh_recall idiom."""
-    return f"""
-    WITH v AS MATERIALIZED (
-      SELECT vec_id, label AS grp, CAST(embedding AS DOUBLE[]) AS ve
-      FROM embeddings
-    ), {_margin_ivf_pairs_sql()}, ivf_pairs AS MATERIALIZED (
-      SELECT b.probe_id, b.nbr_id AS best_id
-      FROM (SELECT probe_id, nbr_id, s FROM ivf_ranked WHERE rn = 1) b
-      JOIN (SELECT probe_id, s AS sim2 FROM ivf_ranked WHERE rn = 2) s2
-        USING (probe_id)
-      WHERE s2.sim2 > 0
-        AND floor(10000.0 * b.s / s2.sim2) >= {min_margin_x10k}
-    ), brute_ranked AS MATERIALIZED (
-      SELECT probe_id, nbr_id, s,
-             row_number() OVER (PARTITION BY probe_id ORDER BY s DESC, nbr_id) AS rn
-      FROM (
-        SELECT a.vec_id AS probe_id, c.vec_id AS nbr_id,
-               round(list_cosine_similarity(a.ve, c.ve), 6) AS s
-        FROM v a JOIN v c ON a.grp <> c.grp
-      )
-    ), brute_pairs AS MATERIALIZED (
-      SELECT b.probe_id, b.nbr_id AS best_id
-      FROM (SELECT probe_id, nbr_id, s FROM brute_ranked WHERE rn = 1) b
-      JOIN (SELECT probe_id, s AS sim2 FROM brute_ranked WHERE rn = 2) s2
-        USING (probe_id)
-      WHERE s2.sim2 > 0
-        AND floor(10000.0 * b.s / s2.sim2) >= {min_margin_x10k}
-    ), counts AS (
-      SELECT
-        (SELECT count(*) FROM brute_pairs) AS n_brute,
-        (SELECT count(*) FROM ivf_pairs) AS n_ivf,
-        (SELECT count(*) FROM brute_pairs JOIN ivf_pairs USING (probe_id, best_id))
-          AS n_hit
+    return (
+        _V_CTE
+        + ", ".join([
+            _margin_ivf_pairs_sql(),
+            _margin_pairs_cte("ivf_pairs", "ivf_ranked", min_margin_x10k),
+            _margin_brute_sql(min_margin_x10k),
+            _recall_report_sql("ivf_pairs", "n_ivf", _MARGIN_IVF_FLOOR_X10K),
+        ])
     )
-    SELECT CAST(n_brute AS BIGINT) AS n_brute,
-           CAST(n_ivf AS BIGINT) AS n_ivf,
-           CAST(n_hit AS BIGINT) AS n_hit,
-           CAST(CASE WHEN n_brute = 0 THEN 10000
-                     ELSE floor(10000.0 * n_hit / n_brute) END AS BIGINT)
-             AS recall_x10k,
-           CAST({_MARGIN_IVF_FLOOR_X10K} AS BIGINT) AS floor_x10k,
-           (CASE WHEN n_brute = 0 THEN 10000
-                 ELSE floor(10000.0 * n_hit / n_brute) END)
-             >= {_MARGIN_IVF_FLOOR_X10K} AS meets_floor
-    FROM counts
-    """
 
 
 @query("q_margin_ivf_recall", oracle=_margin_ivf_recall_oracle())
@@ -2919,139 +2971,131 @@ def q_margin_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MARGIN_IVF_NPROBES = (1, 2, 4, 8, 16)
 
 
-def _margin_ivf_curve_oracle(min_margin_x10k: int = 11000) -> str:
-    """One SQL string replaying the nprobe SENSITIVITY CURVE: the
-    shared one-iteration fit, one probe chain per nprobe in the
-    ladder, the brute-force reference, and per-nprobe
-    (candidates, mined pairs, hits, recall) rows — the measured
-    recall-vs-budget trade as a certified table instead of a prose
-    claim."""
-    parts, selects = _margin_ivf_curve_pieces(min_margin_x10k)
-    return (
-        """
-    WITH v AS MATERIALIZED (
-      SELECT vec_id, label AS grp, CAST(embedding AS DOUBLE[]) AS ve
-      FROM embeddings
-    ), """
-        + ",\n    ".join(parts)
-        + "\n    "
-        + "\n    UNION ALL ".join(selects)
+# ---------------------------------------------------------------------------
+# Measured recall ladders (the nprobe, shortlist-C, code-budget m and
+# IVFADC flat/residual families): ONE runner measures every family's rungs
+# against one brute-force reference, and ONE store keeps the rows (and
+# the IVFADC assets the sized miners reuse). A new sizing axis is its
+# rungs plus a per-rung mine passed to _measured_ladder, never a new
+# module cache.
+# ---------------------------------------------------------------------------
+
+#: The one ladder store. Keys are (family, fingerprint) — see _store_key —
+#: so a corpus rewritten in place misses instead of serving its old
+#: ladder. Ladder rows are plain tuples and survive a session restart;
+#: fitted assets (checkpointed DataFrames) are keyed on the
+#: applicationId too and written through _store_assets.
+_LADDER_STORE: dict[tuple, object] = {}
+
+
+def _store_key(
+    sf_dir: str, family: str, spark: SparkSession | None = None
+) -> tuple:
+    """(family, fingerprint[, applicationId]). The fingerprint is the
+    table path, then the path, size and st_mtime_ns of every parquet
+    file of ``{sf_dir}/embeddings.parquet`` (a single file or a
+    directory; none for a path the local file system cannot list)."""
+    root = f"{sf_dir}/embeddings.parquet"
+    files = [root] if os.path.isfile(root) else sorted(
+        glob.glob(f"{root}/**/*.parquet", recursive=True)
     )
+    key = (family, (root, *(
+        (p, st.st_size, st.st_mtime_ns) for p in files for st in [os.stat(p)]
+    )))
+    return key if spark is None else key + (spark.sparkContext.applicationId,)
 
 
-def _margin_ivf_curve_pieces(min_margin_x10k: int = 11000):
-    """Shared CTE parts + per-nprobe SELECTs for the curve oracle and
-    the sized-nprobe decision oracle (which wraps the same ladder in a
-    CTE and picks the smallest point clearing the target)."""
-    parts = [_MARGIN_IVF_FIT_SQL]
-    selects = []
-    for np_ in _MARGIN_IVF_NPROBES:
-        tag = f"_p{np_}"
-        parts.append(_margin_ivf_probe_ctes(np_, tag))
-        parts.append(f"""pairs{tag} AS MATERIALIZED (
-      SELECT b.probe_id, b.nbr_id AS best_id
-      FROM (SELECT probe_id, nbr_id, s FROM ivf_ranked{tag} WHERE rn = 1) b
-      JOIN (SELECT probe_id, s AS sim2 FROM ivf_ranked{tag} WHERE rn = 2) s2
-        USING (probe_id)
-      WHERE s2.sim2 > 0
-        AND floor(10000.0 * b.s / s2.sim2) >= {min_margin_x10k}
-    )""")
-        selects.append(f"""SELECT CAST({np_} AS BIGINT) AS nprobe,
-           (SELECT CAST(count(*) AS BIGINT) FROM cand{tag}) AS n_cand,
-           (SELECT CAST(count(*) AS BIGINT) FROM pairs{tag}) AS n_mined,
-           (SELECT CAST(count(*) AS BIGINT)
-            FROM pairs{tag} JOIN brute_pairs USING (probe_id, best_id)) AS n_hit,
-           (SELECT CAST(CASE WHEN (SELECT count(*) FROM brute_pairs) = 0
-                             THEN 10000
-                             ELSE floor(10000.0 * count(*) /
-                                  (SELECT count(*) FROM brute_pairs)) END
-                  AS BIGINT)
-            FROM pairs{tag} JOIN brute_pairs USING (probe_id, best_id))
-             AS recall_x10k""")
-    parts.append(_margin_brute_sql(min_margin_x10k))
-    return parts, selects
+def _store_assets(key: tuple, assets: dict) -> None:
+    """Write session-bound assets, first dropping every entry of another
+    applicationId: a process that cycles SparkSessions would otherwise
+    pin dead sessions' checkpointed DataFrames in the store forever."""
+    for k in [k for k in _LADDER_STORE if len(k) == 3 and k[2] != key[2]]:
+        del _LADDER_STORE[k]
+    _LADDER_STORE[key] = assets
 
 
-def _margin_brute_sql(min_margin_x10k: int = 11000) -> str:
-    """Brute-force cross-group margin reference as CTEs (brute_ranked +
-    brute_pairs) — the quadratic audit every margin recall/curve oracle
-    joins against. Expects ``v(vec_id, grp, ve)`` upstream."""
-    return f"""brute_ranked AS MATERIALIZED (
-      SELECT probe_id, nbr_id, s,
-             row_number() OVER (PARTITION BY probe_id ORDER BY s DESC, nbr_id) AS rn
-      FROM (
-        SELECT a.vec_id AS probe_id, c.vec_id AS nbr_id,
-               round(list_cosine_similarity(a.ve, c.ve), 6) AS s
-        FROM v a JOIN v c ON a.grp <> c.grp
-      )
-    ), brute_pairs AS MATERIALIZED (
-      SELECT b.probe_id, b.nbr_id AS best_id
-      FROM (SELECT probe_id, nbr_id, s FROM brute_ranked WHERE rn = 1) b
-      JOIN (SELECT probe_id, s AS sim2 FROM brute_ranked WHERE rn = 2) s2
-        USING (probe_id)
-      WHERE s2.sim2 > 0
-        AND floor(10000.0 * b.s / s2.sim2) >= {min_margin_x10k}
-    )"""
-
-
-#: Collected (nprobe, n_cand, n_mined, n_hit, recall_x10k) ladder rows per
-#: sf_dir — q_margin_ivf_curve and q_margin_nprobe_sized share ONE ladder
-#: execution per corpus (ADVICE r7: the sized decision used to re-run the
-#: whole fit + 5 probe chains + quadratic brute reference just to read 5
-#: rows). Keyed by sf_dir only: the testdata corpora are immutable, and the
-#: cached value is plain Python tuples, so it survives session restarts.
-_IVF_CURVE_CACHE: dict[str, list[tuple[int, int, int, int, int]]] = {}
-
-
-def _ivf_curve_rows(
-    spark: SparkSession, sf_dir: str
-) -> list[tuple[int, int, int, int, int]]:
-    """Compute (or reuse) the measured IVF-margin nprobe ladder for one
-    corpus: per nprobe in _MARGIN_IVF_NPROBES over ONE shared certified
-    fit, the candidate budget, mined pairs, brute-force hits, and
-    recall_x10k."""
-    import math
-
-    cached = _IVF_CURVE_CACHE.get(sf_dir)
-    if cached is not None:
-        return cached
+def _measured_ladder(spark: SparkSession, sf_dir: str, family: str, fit) -> list:
+    """The stored (or measured now) recall ladder of one family.
+    `fit(emb, n)` fits the family's assets once and returns (rungs,
+    mine): rungs is [(head, arg)] and mine(arg) is (extra, mined pairs).
+    Each distinct arg is mined once; every rung's row is head + extra +
+    (n_mined, n_hit, recall_x10k) against ONE brute-force margin
+    reference. Rows are stored per corpus fingerprint, so the curve and
+    sized queries of a family share one execution (ADVICE r7)."""
+    key = _store_key(sf_dir, family)
+    if key in _LADDER_STORE:
+        return _LADDER_STORE[key]
     emb = load_table(spark, "embeddings", sf_dir)
-    k = int(math.ceil(math.sqrt(emb.count())))
-    brute = SIM.margin_mine(emb, min_margin_x10k=11000).select(
-        "probe_id", "best_id"
-    ).localCheckpoint()
+    rungs, mine = fit(emb, emb.count())
+    brute = (
+        SIM.margin_mine(emb, min_margin_x10k=11000)
+        .select("probe_id", "best_id")
+        .localCheckpoint()
+    )
     n_brute = brute.count()
-    # ONE fit shared by every nprobe setting (the oracle computes the
-    # fit CTE once too) — refitting per setting would run the identical
-    # seed/E-step/M-step chain |ladder| times for bit-identical centroids
-    _, cents = SIM.kmeans_fit_distributed(emb, k=k, iters=1, round_dp=6)
-    cos = SIM._cosine_pairs_arrow(6)
-    vecs = emb.select(F.col("vec_id").alias("_vid"), F.col("embedding").alias("_v"))
-    rows = []
-    for np_ in _MARGIN_IVF_NPROBES:
-        cand = SIM.ivf_candidate_pairs(emb, k=k, nprobe=np_, centroids=cents)
-        n_cand = cand.count()
-        scored = (
-            cand.join(
-                vecs.select(F.col("_vid").alias("probe_id"), F.col("_v").alias("_pv")),
-                "probe_id",
-            )
-            .join(
-                vecs.select(F.col("_vid").alias("nbr_id"), F.col("_v").alias("_nv")),
-                "nbr_id",
-            )
-            .select("probe_id", "nbr_id", cos(F.col("_pv"), F.col("_nv")).alias("s"))
-        )
-        mined = SIM._margin_top2(scored, 11000).select("probe_id", "best_id")
-        n_mined = mined.count()
-        n_hit = mined.join(brute, ["probe_id", "best_id"]).count()
-        recall = 10000 if n_brute == 0 else (10000 * n_hit) // n_brute
-        rows.append((np_, n_cand, n_mined, n_hit, recall))
-    _IVF_CURVE_CACHE[sf_dir] = rows
+    measured, rows = {}, []
+    for head, arg in rungs:
+        if arg not in measured:
+            extra, mined = mine(arg)
+            mined = mined.select("probe_id", "best_id")
+            n_hit = mined.join(brute, ["probe_id", "best_id"]).count()
+            recall = 10000 if n_brute == 0 else (10000 * n_hit) // n_brute
+            measured[arg] = (*extra, mined.count(), n_hit, recall)
+        rows.append((*head, *measured[arg]))
+    _LADDER_STORE[key] = rows
     return rows
 
 
-@query("q_margin_ivf_curve", oracle=_margin_ivf_curve_oracle())
+def _sized_row(rows: list, key_field: str):
+    """The row of the smallest rung whose recall clears the sizing
+    target (SIM._size_from_curve over (rung, recall_x10k)), or None."""
+    key = SIM._size_from_curve(
+        [(r[0], r[-1]) for r in rows], key_field, _MARGIN_PQ_FLOOR_X10K
+    )
+    return next((r for r in rows if r[0] == key), None)
+
+
+def _ivf_ladder_parts():
+    """CTE parts + per-nprobe SELECTs of the nprobe ladder oracles: the
+    shared one-iteration fit, per nprobe a probe chain and its margin
+    pairs, then the brute-force reference."""
+    parts, selects = [_MARGIN_IVF_FIT_SQL], []
+    for np_ in _MARGIN_IVF_NPROBES:
+        tag = f"_p{np_}"
+        parts += [
+            _margin_ivf_probe_ctes(np_, tag),
+            _margin_pairs_cte(f"pairs{tag}", f"ivf_ranked{tag}"),
+        ]
+        selects.append(_recall_select_sql(
+            f"CAST({np_} AS BIGINT) AS nprobe, (SELECT CAST(count(*) AS BIGINT)"
+            f" FROM cand{tag}) AS n_cand",
+            f"pairs{tag}",
+        ))
+    return parts + [_margin_brute_sql()], selects
+
+
+def _ivf_curve_rows(spark: SparkSession, sf_dir: str) -> list:
+    """The measured IVF-margin nprobe ladder: per nprobe in
+    _MARGIN_IVF_NPROBES over ONE shared certified fit, (nprobe, n_cand,
+    n_mined, n_hit, recall_x10k)."""
+
+    def fit(emb, n):
+        k = int(math.ceil(math.sqrt(n)))
+        # ONE fit shared by every nprobe setting (the oracle computes the
+        # fit CTE once too)
+        _, cents = SIM.kmeans_fit_distributed(emb, k=k, iters=1, round_dp=6)
+
+        def mine(np_):
+            cand = SIM.ivf_candidate_pairs(emb, k=k, nprobe=np_, centroids=cents)
+            scored = SIM._exact_rerank_pairs(cand, emb, emb)
+            return (cand.count(),), SIM._margin_top2(scored, 11000)
+
+        return [((np_,), np_) for np_ in _MARGIN_IVF_NPROBES], mine
+
+    return _measured_ladder(spark, sf_dir, "ivf", fit)
+
+
+@query("q_margin_ivf_curve", oracle=_ladder_oracle(*_ivf_ladder_parts()))
 def q_margin_ivf_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-margin nprobe SENSITIVITY CURVE — the budget-vs-recall trade
     as a driver-certified table: for each nprobe in _MARGIN_IVF_NPROBES
@@ -3064,7 +3108,7 @@ def q_margin_ivf_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     point; the probe artifact shows the same curve at 60x scale. One
     fit, |ladder| candidate joins, one quadratic audit reference (at
     100 TB the brute side runs on a sample; here the corpus is the
-    sample); the measured rows are cached per corpus so the sized
+    sample); the measured rows are stored per corpus so the sized
     decision query reuses this execution instead of repeating it
     (ADVICE r7)."""
     return local_rows_df(spark, 
@@ -3074,36 +3118,17 @@ def q_margin_ivf_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _margin_nprobe_sized_oracle(
-    target_x10k: int = 8500, min_margin_x10k: int = 11000
-) -> str:
-    """Replay the full measured ladder, then the size_nprobe decision in
-    SQL: the smallest ladder point whose recall clears the target, NULL
-    when none does — certifying the decision itself, not just the curve
-    it reads."""
-    parts, selects = _margin_ivf_curve_pieces(min_margin_x10k)
-    ladder = "\n      UNION ALL ".join(selects)
-    return (
-        """
-    WITH v AS MATERIALIZED (
-      SELECT vec_id, label AS grp, CAST(embedding AS DOUBLE[]) AS ve
-      FROM embeddings
-    ), """
-        + ",\n    ".join(parts)
-        + f""", ladder AS MATERIALIZED (
-      {ladder}
-    )
-    SELECT CAST({target_x10k} AS BIGINT) AS target_x10k,
+@query(
+    "q_margin_nprobe_sized",
+    oracle=_ladder_oracle(*_ivf_ladder_parts(), tail=f"""
+    SELECT CAST({_MARGIN_PQ_FLOOR_X10K} AS BIGINT) AS target_x10k,
            (SELECT CAST(min(nprobe) AS BIGINT) FROM ladder
-            WHERE recall_x10k >= {target_x10k}) AS sized_nprobe,
+            WHERE recall_x10k >= {_MARGIN_PQ_FLOOR_X10K}) AS sized_nprobe,
            (SELECT CAST(max(nprobe) AS BIGINT) FROM ladder) AS ladder_max,
            (SELECT min(nprobe) FROM ladder
-            WHERE recall_x10k >= {target_x10k}) IS NOT NULL AS reached
-    """
-    )
-
-
-@query("q_margin_nprobe_sized", oracle=_margin_nprobe_sized_oracle())
+            WHERE recall_x10k >= {_MARGIN_PQ_FLOOR_X10K}) IS NOT NULL AS reached
+    """),
+)
 def q_margin_nprobe_sized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SIZED-nprobe decision, certified (VERDICT r6 item 2): read
     the measured q_margin_ivf_curve ladder and emit the smallest nprobe
@@ -3116,25 +3141,19 @@ def q_margin_nprobe_sized(spark: SparkSession, sf_dir: str) -> DataFrame:
     point reaches 0.85 (nprobe=16 measures 0.83; reached = false).
     Fixed-nprobe IVF cannot hold 0.85 sub-quadratically here — the
     miner that can is q_margin_mine_pq (same certified fit family,
-    recall 0.96 at ~2·N^1.5 budget). Engine side reads the per-corpus
-    cached ladder rows (_ivf_curve_rows — ONE fit + probe-chain
-    execution shared with q_margin_ivf_curve, ADVICE r7); the oracle
-    replays ladder AND decision in one string."""
-    rows = _ivf_curve_rows(spark, sf_dir)  # |ladder| rows, cached
-    # pass explicit (nprobe, recall_x10k) pairs: the cached rows are
-    # 5-tuples, and size_nprobe's positional form is the strict 2-field one
-    sized = SIM.size_nprobe([(r[0], r[4]) for r in rows], recall_target_x10k=8500)
-    ladder_max = max(r[0] for r in rows)
+    recall 0.96 at ~2·N^1.5 budget). Engine side reads the stored
+    ladder rows (_ivf_curve_rows — ONE fit + probe-chain execution
+    shared with q_margin_ivf_curve, ADVICE r7); the oracle replays
+    ladder AND decision in one string."""
+    rows = _ivf_curve_rows(spark, sf_dir)
+    sized = _sized_row(rows, "nprobe")
     return local_rows_df(spark, 
-        [(8500, sized, ladder_max, sized is not None)],
+        [(_MARGIN_PQ_FLOOR_X10K, sized[0] if sized else None,
+          max(r[0] for r in rows), sized is not None)],
         "target_x10k bigint, sized_nprobe bigint, ladder_max bigint, "
         "reached boolean",
     )
 
-
-#: Recall target for sizing decisions across the margin-mining family,
-#: and the certified floor of q_margin_pq_recall (fraction x10k).
-_MARGIN_PQ_FLOOR_X10K = 8500
 
 #: PQ geometry for the ADC-shortlisted miner: 16 subspaces of 4 dims,
 #: 16 codes each, one certified Lloyd round. m=16 beats m=8 decisively
@@ -3462,20 +3481,10 @@ def _margin_pq_pairs_sql(
 def _margin_mine_pq_oracle(min_margin_x10k: int = 11000) -> str:
     """Full replay of the ADC-shortlisted miner: the _margin_pq_pairs_sql
     chain + the best/second-best ratio filter tail."""
-    return f"""
-    WITH v AS MATERIALIZED (
-      SELECT vec_id, label AS grp, CAST(embedding AS DOUBLE[]) AS ve
-      FROM embeddings
-    ), {_margin_pq_pairs_sql()}, best AS (
-      SELECT probe_id, nbr_id AS best_id, s AS sim1 FROM pq_ranked WHERE rn = 1
-    ), second AS (
-      SELECT probe_id, s AS sim2 FROM pq_ranked WHERE rn = 2
+    return (
+        f"{_V_CTE}{_margin_pq_pairs_sql()}, "
+        + _margin_select_sql("pq_ranked", min_margin_x10k)
     )
-    SELECT b.probe_id, b.best_id, b.sim1, s.sim2,
-           CAST(floor(10000.0 * b.sim1 / s.sim2) AS BIGINT) AS margin_x10k
-    FROM best b JOIN second s USING (probe_id)
-    WHERE s.sim2 > 0 AND floor(10000.0 * b.sim1 / s.sim2) >= {min_margin_x10k}
-    """
 
 
 @query("q_margin_mine_pq", headline=True, oracle=_margin_mine_pq_oracle())
@@ -3557,21 +3566,10 @@ def _margin_pq_xcorpus_oracle(min_margin_x10k: int = 11000) -> str:
     (vec_id % 3 <> 0) and the LUT/probe side to the new batch
     (vec_id % 3 = 0) — one parameterization of _margin_pq_pairs_sql, so
     the symmetric and incremental paths share every certified idiom."""
-    return f"""
-    WITH v AS MATERIALIZED (
-      SELECT vec_id, label AS grp, CAST(embedding AS DOUBLE[]) AS ve
-      FROM embeddings
-    ), {_margin_pq_pairs_sql(probe_pred="vec_id % 3 = 0",
-                             ref_pred="vec_id % 3 <> 0")}, best AS (
-      SELECT probe_id, nbr_id AS best_id, s AS sim1 FROM pq_ranked WHERE rn = 1
-    ), second AS (
-      SELECT probe_id, s AS sim2 FROM pq_ranked WHERE rn = 2
+    pairs = _margin_pq_pairs_sql(
+        probe_pred="vec_id % 3 = 0", ref_pred="vec_id % 3 <> 0"
     )
-    SELECT b.probe_id, b.best_id, b.sim1, s.sim2,
-           CAST(floor(10000.0 * b.sim1 / s.sim2) AS BIGINT) AS margin_x10k
-    FROM best b JOIN second s USING (probe_id)
-    WHERE s.sim2 > 0 AND floor(10000.0 * b.sim1 / s.sim2) >= {min_margin_x10k}
-    """
+    return f"{_V_CTE}{pairs}, " + _margin_select_sql("pq_ranked", min_margin_x10k)
 
 
 @query("q_margin_pq_xcorpus", oracle=_margin_pq_xcorpus_oracle())
@@ -3722,16 +3720,9 @@ def _ivfadc_xcorpus_oracle(
     cells, margin filter tail."""
     return f"""
     WITH {_ivfadc_asym_ctes("vec_id % 3 = 0", "vec_id % 3 <> 0",
-                            True, "ranked_xj", residual)}, best AS (
-      SELECT probe_id, nbr_id AS best_id, s AS sim1 FROM ranked_xj WHERE rn = 1
-    ), second AS (
-      SELECT probe_id, s AS sim2 FROM ranked_xj WHERE rn = 2
+                            True, "ranked_xj", residual)}, """ + _margin_select_sql(
+        "ranked_xj", min_margin_x10k
     )
-    SELECT b.probe_id, b.best_id, b.sim1, s.sim2,
-           CAST(floor(10000.0 * b.sim1 / s.sim2) AS BIGINT) AS margin_x10k
-    FROM best b JOIN second s USING (probe_id)
-    WHERE s.sim2 > 0 AND floor(10000.0 * b.sim1 / s.sim2) >= {min_margin_x10k}
-    """
 
 
 @query("q_margin_ivfadc_xcorpus", oracle=_ivfadc_xcorpus_oracle())
@@ -3894,14 +3885,8 @@ def _bitext_pack_oracle(capacity: int = 512, min_margin_x10k: int = 11000) -> st
     WITH v AS MATERIALIZED (
       SELECT vec_id, label AS grp, CAST(embedding AS DOUBLE[]) AS ve
       FROM embeddings
-    ), {_margin_pq_pairs_sql()}, mined AS MATERIALIZED (
-      SELECT b.probe_id, b.nbr_id AS best_id
-      FROM (SELECT probe_id, nbr_id, s FROM pq_ranked WHERE rn = 1) b
-      JOIN (SELECT probe_id, s AS sim2 FROM pq_ranked WHERE rn = 2) s2
-        USING (probe_id)
-      WHERE s2.sim2 > 0
-        AND floor(10000.0 * b.s / s2.sim2) >= {min_margin_x10k}
-    ), t AS (
+    ), {_margin_pq_pairs_sql()}, {
+        _margin_pairs_cte("mined", "pq_ranked", min_margin_x10k)}, t AS (
       SELECT CAST(sum(len(string_split(da.text, ' '))
                     + len(string_split(db.text, ' '))) AS BIGINT) AS total
       FROM mined m
@@ -4172,53 +4157,14 @@ def _margin_xcorpus_recall_oracle(min_margin_x10k: int = 11000) -> str:
     """Recall report for the ASYMMETRIC miner: the parameterized PQ
     chain and a brute reference restricted to the same probe/ref split
     (new probes x reference base), with the certified 0.85 floor."""
-    return f"""
-    WITH v AS MATERIALIZED (
-      SELECT vec_id, label AS grp, CAST(embedding AS DOUBLE[]) AS ve
-      FROM embeddings
-    ), {_margin_pq_pairs_sql(probe_pred="vec_id % 3 = 0",
-                             ref_pred="vec_id % 3 <> 0")}, pq_pairs AS MATERIALIZED (
-      SELECT b.probe_id, b.nbr_id AS best_id
-      FROM (SELECT probe_id, nbr_id, s FROM pq_ranked WHERE rn = 1) b
-      JOIN (SELECT probe_id, s AS sim2 FROM pq_ranked WHERE rn = 2) s2
-        USING (probe_id)
-      WHERE s2.sim2 > 0
-        AND floor(10000.0 * b.s / s2.sim2) >= {min_margin_x10k}
-    ), brute_ranked AS MATERIALIZED (
-      SELECT probe_id, nbr_id, s,
-             row_number() OVER (PARTITION BY probe_id ORDER BY s DESC, nbr_id) AS rn
-      FROM (
-        SELECT a.vec_id AS probe_id, c.vec_id AS nbr_id,
-               round(list_cosine_similarity(a.ve, c.ve), 6) AS s
-        FROM v a JOIN v c ON a.grp <> c.grp
-        WHERE a.vec_id % 3 = 0 AND c.vec_id % 3 <> 0
-      )
-    ), brute_pairs AS MATERIALIZED (
-      SELECT b.probe_id, b.nbr_id AS best_id
-      FROM (SELECT probe_id, nbr_id, s FROM brute_ranked WHERE rn = 1) b
-      JOIN (SELECT probe_id, s AS sim2 FROM brute_ranked WHERE rn = 2) s2
-        USING (probe_id)
-      WHERE s2.sim2 > 0
-        AND floor(10000.0 * b.s / s2.sim2) >= {min_margin_x10k}
-    ), counts AS (
-      SELECT
-        (SELECT count(*) FROM brute_pairs) AS n_brute,
-        (SELECT count(*) FROM pq_pairs) AS n_pq,
-        (SELECT count(*) FROM brute_pairs JOIN pq_pairs USING (probe_id, best_id))
-          AS n_hit
-    )
-    SELECT CAST(n_brute AS BIGINT) AS n_brute,
-           CAST(n_pq AS BIGINT) AS n_pq,
-           CAST(n_hit AS BIGINT) AS n_hit,
-           CAST(CASE WHEN n_brute = 0 THEN 10000
-                     ELSE floor(10000.0 * n_hit / n_brute) END AS BIGINT)
-             AS recall_x10k,
-           CAST({_MARGIN_PQ_FLOOR_X10K} AS BIGINT) AS floor_x10k,
-           (CASE WHEN n_brute = 0 THEN 10000
-                 ELSE floor(10000.0 * n_hit / n_brute) END)
-             >= {_MARGIN_PQ_FLOOR_X10K} AS meets_floor
-    FROM counts
-    """
+    return _V_CTE + ", ".join([
+        _margin_pq_pairs_sql(probe_pred="vec_id % 3 = 0", ref_pred="vec_id % 3 <> 0"),
+        _margin_pairs_cte("pq_pairs", "pq_ranked", min_margin_x10k),
+        _margin_brute_sql(
+            min_margin_x10k, "WHERE a.vec_id % 3 = 0 AND c.vec_id % 3 <> 0"
+        ),
+        _recall_report_sql("pq_pairs", "n_pq", _MARGIN_PQ_FLOOR_X10K),
+    ])
 
 
 @query("q_margin_xcorpus_recall", oracle=_margin_xcorpus_recall_oracle())
@@ -4266,51 +4212,12 @@ def _margin_pq_recall_oracle(min_margin_x10k: int = 11000) -> str:
     ADC-shortlisted miner, reporting pair recall with the certified
     floor column — the q_margin_lsh_recall idiom applied to the PQ
     path."""
-    return f"""
-    WITH v AS MATERIALIZED (
-      SELECT vec_id, label AS grp, CAST(embedding AS DOUBLE[]) AS ve
-      FROM embeddings
-    ), {_margin_pq_pairs_sql()}, pq_pairs AS MATERIALIZED (
-      SELECT b.probe_id, b.nbr_id AS best_id
-      FROM (SELECT probe_id, nbr_id, s FROM pq_ranked WHERE rn = 1) b
-      JOIN (SELECT probe_id, s AS sim2 FROM pq_ranked WHERE rn = 2) s2
-        USING (probe_id)
-      WHERE s2.sim2 > 0
-        AND floor(10000.0 * b.s / s2.sim2) >= {min_margin_x10k}
-    ), brute_ranked AS MATERIALIZED (
-      SELECT probe_id, nbr_id, s,
-             row_number() OVER (PARTITION BY probe_id ORDER BY s DESC, nbr_id) AS rn
-      FROM (
-        SELECT a.vec_id AS probe_id, c.vec_id AS nbr_id,
-               round(list_cosine_similarity(a.ve, c.ve), 6) AS s
-        FROM v a JOIN v c ON a.grp <> c.grp
-      )
-    ), brute_pairs AS MATERIALIZED (
-      SELECT b.probe_id, b.nbr_id AS best_id
-      FROM (SELECT probe_id, nbr_id, s FROM brute_ranked WHERE rn = 1) b
-      JOIN (SELECT probe_id, s AS sim2 FROM brute_ranked WHERE rn = 2) s2
-        USING (probe_id)
-      WHERE s2.sim2 > 0
-        AND floor(10000.0 * b.s / s2.sim2) >= {min_margin_x10k}
-    ), counts AS (
-      SELECT
-        (SELECT count(*) FROM brute_pairs) AS n_brute,
-        (SELECT count(*) FROM pq_pairs) AS n_pq,
-        (SELECT count(*) FROM brute_pairs JOIN pq_pairs USING (probe_id, best_id))
-          AS n_hit
-    )
-    SELECT CAST(n_brute AS BIGINT) AS n_brute,
-           CAST(n_pq AS BIGINT) AS n_pq,
-           CAST(n_hit AS BIGINT) AS n_hit,
-           CAST(CASE WHEN n_brute = 0 THEN 10000
-                     ELSE floor(10000.0 * n_hit / n_brute) END AS BIGINT)
-             AS recall_x10k,
-           CAST({_MARGIN_PQ_FLOOR_X10K} AS BIGINT) AS floor_x10k,
-           (CASE WHEN n_brute = 0 THEN 10000
-                 ELSE floor(10000.0 * n_hit / n_brute) END)
-             >= {_MARGIN_PQ_FLOOR_X10K} AS meets_floor
-    FROM counts
-    """
+    return _V_CTE + ", ".join([
+        _margin_pq_pairs_sql(),
+        _margin_pairs_cte("pq_pairs", "pq_ranked", min_margin_x10k),
+        _margin_brute_sql(min_margin_x10k),
+        _recall_report_sql("pq_pairs", "n_pq", _MARGIN_PQ_FLOOR_X10K),
+    ])
 
 
 @query("q_margin_pq_recall", oracle=_margin_pq_recall_oracle())
@@ -4387,30 +4294,11 @@ def _margin_recall_sampled_oracle(min_margin_x10k: int = 11000) -> str:
     WITH v AS MATERIALIZED (
       SELECT vec_id, label AS grp, CAST(embedding AS DOUBLE[]) AS ve
       FROM embeddings
-    ), {_margin_pq_pairs_sql(probe_pred=_QSAMPLE_PRED_SQL)}, pq_pairs AS MATERIALIZED (
-      SELECT b.probe_id, b.nbr_id AS best_id
-      FROM (SELECT probe_id, nbr_id, s FROM pq_ranked WHERE rn = 1) b
-      JOIN (SELECT probe_id, s AS sim2 FROM pq_ranked WHERE rn = 2) s2
-        USING (probe_id)
-      WHERE s2.sim2 > 0
-        AND floor(10000.0 * b.s / s2.sim2) >= {min_margin_x10k}
-    ), brute_ranked AS MATERIALIZED (
-      SELECT probe_id, nbr_id, s,
-             row_number() OVER (PARTITION BY probe_id ORDER BY s DESC, nbr_id) AS rn
-      FROM (
-        SELECT a.vec_id AS probe_id, c.vec_id AS nbr_id,
-               round(list_cosine_similarity(a.ve, c.ve), 6) AS s
-        FROM v a JOIN v c ON a.grp <> c.grp
-        WHERE a.vec_id IN (SELECT vec_id FROM pq_pids)
-      )
-    ), brute_pairs AS MATERIALIZED (
-      SELECT b.probe_id, b.nbr_id AS best_id
-      FROM (SELECT probe_id, nbr_id, s FROM brute_ranked WHERE rn = 1) b
-      JOIN (SELECT probe_id, s AS sim2 FROM brute_ranked WHERE rn = 2) s2
-        USING (probe_id)
-      WHERE s2.sim2 > 0
-        AND floor(10000.0 * b.s / s2.sim2) >= {min_margin_x10k}
-    ), counts AS (
+    ), {_margin_pq_pairs_sql(probe_pred=_QSAMPLE_PRED_SQL)}, {
+        _margin_pairs_cte("pq_pairs", "pq_ranked", min_margin_x10k)}, {
+        _margin_brute_sql(
+            min_margin_x10k, "WHERE a.vec_id IN (SELECT vec_id FROM pq_pids)"
+        )}, counts AS (
       SELECT
         (SELECT count(*) FROM pq_pids) AS n_sampled,
         (SELECT count(*) FROM brute_pairs) AS n_brute,
@@ -4539,9 +4427,6 @@ def q_margin_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 # floor, whichever kind provides it.
 # ---------------------------------------------------------------------------
 
-_IVFADC_RUNGS = SIM.IVFADC_RUNGS
-
-
 def _ivfadc_np_expr(kind: str, rung: int) -> str:
     """Realized rung nprobe in integer SQL — replays
     SIM.ivfadc_rung_nprobe exactly (frac: (k*s + 11) // 12; abs:
@@ -4580,136 +4465,80 @@ def _ivfadc_shared_parts() -> list:
     ]
 
 
-def _ivfadc_ladder_parts(
-    min_margin_x10k: int = 11000,
-    residual: bool = False,
-    family_suffix: str | None = None,
-):
-    """Shared CTE parts + per-rung SELECTs for the IVFADC oracles: the
+def _ivfadc_restrict(np_expr: str) -> str:
+    """Shortlist-window JOIN text pruning each probe's candidates to the
+    neighbours homed in its top-`np_expr` ranked cells."""
+    return f"""JOIN home h ON h.vec_id = a.nbr_id
+        JOIN t2a pc ON pc.vec_id = a.probe_id AND pc.cl = h.cl
+          AND pc.rn <= {np_expr}"""
+
+
+def _ivfadc_ladder_parts(residual: bool = False, S: str | None = None):
+    """CTE parts + per-rung SELECTs for the IVFADC oracles: the
     certified coarse fit (_MARGIN_IVF_FIT_SQL), the full cell ranking
     t2a / home / cell sizes, the PQ ADC core (fit, encode, padc scores —
     computed ONCE, shared by every rung), the brute reference, and per
     rung (kind, value) a cell-restricted top-C window + exact rerank +
-    margin filter + a curve SELECT reporting the scanned-code budget
-    and measured recall. `residual=True` swaps in the residual-encoding
-    core (_pq_adc_res_core_sql — true IVFADC); the core must follow
-    home, which the shared ordering already guarantees.
+    margin pairs + a curve SELECT reporting the scanned-code budget and
+    measured recall. `residual=True` swaps in the residual-encoding core
+    (_pq_adc_res_core_sql — true IVFADC); the core must follow home,
+    which the shared ordering already guarantees.
 
-    `family_suffix` (r11, default None = classic single-family text,
-    byte-identical to pre-r11) switches to FAMILY-ONLY mode for the
-    routed-cascade oracle: the shared coarse parts, the vn/params
-    prefix, and the brute reference are OMITTED (the caller lays them
-    down once), only the family's encode chain + suffixed rung tails
-    are emitted, so flat and residual ladders coexist in one query."""
-    if family_suffix is None:
-        S = ""
-        parts = [
+    A family suffix `S` (r11; None = the single-family text) switches to
+    FAMILY-ONLY mode for the routed-cascade oracle: the shared coarse
+    parts, the vn/params prefix and the brute reference are OMITTED (the
+    caller lays them down once), only the family's encode chain +
+    suffixed rung tails are emitted, so flat and residual ladders
+    coexist in one query."""
+    if S is None:
+        S, parts = "", [
             *_ivfadc_shared_parts(),
             _pq_adc_res_core_sql() if residual else _pq_adc_core_sql(),
-            _margin_brute_sql(min_margin_x10k),
+            _margin_brute_sql(),
         ]
     else:
-        S = family_suffix
-        parts = [
-            _pq_adc_res_chain_sql(suffix=S)
-            if residual
-            else _pq_adc_chain_sql(suffix=S)
-        ]
+        parts = [(_pq_adc_res_chain_sql if residual else _pq_adc_chain_sql)(suffix=S)]
     selects = []
-    for kind, rung in _IVFADC_RUNGS:
-        tag = f"{kind}{rung}{S}"
-        np_expr = _ivfadc_np_expr(kind, rung)
-        restrict = f"""JOIN home h ON h.vec_id = a.nbr_id
-        JOIN t2a pc ON pc.vec_id = a.probe_id AND pc.cl = h.cl
-          AND pc.rn <= {np_expr}"""
-        parts.append(
+    for kind, rung in SIM.IVFADC_RUNGS:
+        tag, np_expr = f"{kind}{rung}{S}", _ivfadc_np_expr(kind, rung)
+        parts += [
             _pq_shortlist_tail_sql(
-                True, restrict, f"short_c{tag}", f"ranked_c{tag}",
-                padc_cte=f"padc{S}",
-            )
-        )
-        parts.append(f"""mined_c{tag} AS MATERIALIZED (
-      SELECT b.probe_id, b.nbr_id AS best_id
-      FROM (SELECT probe_id, nbr_id, s FROM ranked_c{tag} WHERE rn = 1) b
-      JOIN (SELECT probe_id, s AS sim2 FROM ranked_c{tag} WHERE rn = 2) s2
-        USING (probe_id)
-      WHERE s2.sim2 > 0
-        AND floor(10000.0 * b.s / s2.sim2) >= {min_margin_x10k}
-    )""")
-        selects.append(f"""SELECT CAST('{kind}' AS VARCHAR) AS kind,
+                True, _ivfadc_restrict(np_expr), f"short_c{tag}",
+                f"ranked_c{tag}", padc_cte=f"padc{S}",
+            ),
+            _margin_pairs_cte(f"mined_c{tag}", f"ranked_c{tag}"),
+        ]
+        selects.append(_recall_select_sql(f"""CAST('{kind}' AS VARCHAR) AS kind,
            CAST({rung} AS BIGINT) AS rung,
            CAST({np_expr} AS BIGINT) AS nprobe,
            (SELECT CAST(sum(cz.sz) AS BIGINT) FROM t2a pc
             JOIN cellsz cz ON pc.cl = cz.cl
-            WHERE pc.rn <= {np_expr}) AS n_scanned,
-           (SELECT CAST(count(*) AS BIGINT) FROM mined_c{tag}) AS n_mined,
-           (SELECT CAST(count(*) AS BIGINT)
-            FROM mined_c{tag} JOIN brute_pairs USING (probe_id, best_id)) AS n_hit,
-           (SELECT CAST(CASE WHEN (SELECT count(*) FROM brute_pairs) = 0
-                             THEN 10000
-                             ELSE floor(10000.0 * count(*) /
-                                  (SELECT count(*) FROM brute_pairs)) END
-                  AS BIGINT)
-            FROM mined_c{tag} JOIN brute_pairs USING (probe_id, best_id))
-             AS recall_x10k""")
+            WHERE pc.rn <= {np_expr}) AS n_scanned""", f"mined_c{tag}"))
     return parts, selects
 
 
-_IVFADC_V_CTE = """
-    WITH v AS MATERIALIZED (
-      SELECT vec_id, label AS grp, CAST(embedding AS DOUBLE[]) AS ve
-      FROM embeddings
-    ), """
-
-
-def _margin_ivfadc_curve_oracle(
-    min_margin_x10k: int = 11000, residual: bool = False
-) -> str:
-    parts, selects = _ivfadc_ladder_parts(min_margin_x10k, residual)
-    return (
-        _IVFADC_V_CTE
-        + ",\n    ".join(parts)
-        + "\n    "
-        + "\n      UNION ALL ".join(selects)
+def _ivfadc_sized_tail(S: str = "") -> str:
+    """The top-C window + exact rerank at family `S`'s sized nprobe
+    (short_sz{S} / ranked_sz{S}). The coalesce to the ladder max is a
+    dead branch by contract: on a saturated ladder the ENGINE raises
+    LadderSaturatedError (refusal + routing, VERDICT r9 item 5) before
+    any mine runs, and on the registered corpora the decision always
+    reaches (the top rung is the flat scan) — the coalesce only keeps
+    the SQL total so the oracle never emits a NULL-nprobe mine."""
+    np_sized = (
+        f"(SELECT coalesce((SELECT nprobe FROM sized{S}),"
+        f" (SELECT max(nprobe) FROM ladder{S})))"
+    )
+    return _pq_shortlist_tail_sql(
+        True, _ivfadc_restrict(np_sized), f"short_sz{S}", f"ranked_sz{S}",
+        padc_cte=f"padc{S}",
     )
 
 
-def _ivfadc_sized_ctes(
-    target_x10k: int,
-    min_margin_x10k: int,
-    residual: bool = False,
-    family_suffix: str | None = None,
-):
-    """ladder + sized CTE text shared by the sized-decision and miner
-    oracles. `family_suffix` propagates the routed-cascade oracle's
-    family-only mode (suffixed ladder/sized names, shared parts
-    omitted — see _ivfadc_ladder_parts)."""
-    parts, selects = _ivfadc_ladder_parts(
-        min_margin_x10k, residual, family_suffix
-    )
-    S = family_suffix or ""
-    ladder = "\n      UNION ALL ".join(selects)
-    return parts, f"""ladder{S} AS MATERIALIZED (
-      {ladder}
-    ), sized{S} AS MATERIALIZED (
-      SELECT * FROM ladder{S} WHERE recall_x10k >= {target_x10k}
-      ORDER BY nprobe, kind, rung LIMIT 1
-    )"""
-
-
-def _margin_ivfadc_sized_oracle(
-    target_x10k: int = 8500,
-    min_margin_x10k: int = 11000,
-    residual: bool = False,
-) -> str:
-    parts, sized = _ivfadc_sized_ctes(target_x10k, min_margin_x10k, residual)
-    return (
-        _IVFADC_V_CTE
-        + ",\n    ".join(parts)
-        + ",\n    "
-        + sized
-        + f"""
-    SELECT CAST({target_x10k} AS BIGINT) AS target_x10k,
+def _margin_ivfadc_sized_oracle(residual: bool = False) -> str:
+    return _ladder_oracle(
+        *_ivfadc_ladder_parts(residual), order="nprobe, kind, rung", tail=f"""
+    SELECT CAST({_MARGIN_PQ_FLOOR_X10K} AS BIGINT) AS target_x10k,
            (SELECT CAST(kind AS VARCHAR) FROM sized) AS sized_kind,
            (SELECT CAST(rung AS BIGINT) FROM sized) AS sized_rung,
            (SELECT CAST(nprobe AS BIGINT) FROM sized) AS sized_nprobe,
@@ -4720,171 +4549,116 @@ def _margin_ivfadc_sized_oracle(
            CASE WHEN EXISTS (SELECT 1 FROM sized) THEN NULL
                 ELSE '{_ivfadc_route_on_saturation(residual)}'
            END AS route
-    """
+    """,
     )
 
 
-def _margin_mine_ivfadc_oracle(
-    target_x10k: int = 8500,
-    min_margin_x10k: int = 11000,
-    residual: bool = False,
-) -> str:
+def _margin_mine_ivfadc_oracle(residual: bool = False) -> str:
     """Replay ladder, sizing decision, AND the final mine at the sized
-    nprobe in one string. The coalesce-to-ladder-max branch is a dead
-    branch by contract: on a saturated ladder the ENGINE side raises
-    LadderSaturatedError (refusal + routing, VERDICT r9 item 5) before
-    any mine runs, and on the registered corpora the decision always
-    reaches (the top rung is the flat scan) — the coalesce only keeps
-    the SQL total so the oracle never emits a NULL-nprobe mine."""
-    parts, sized = _ivfadc_sized_ctes(target_x10k, min_margin_x10k, residual)
-    np_sized = (
-        "(SELECT coalesce((SELECT nprobe FROM sized),"
-        " (SELECT max(nprobe) FROM ladder)))"
-    )
-    restrict = f"""JOIN home h ON h.vec_id = a.nbr_id
-        JOIN t2a pc ON pc.vec_id = a.probe_id AND pc.cl = h.cl
-          AND pc.rn <= {np_sized}"""
-    tail = _pq_shortlist_tail_sql(True, restrict, "short_sz", "ranked_sz")
-    return (
-        _IVFADC_V_CTE
-        + ",\n    ".join(parts)
-        + ",\n    "
-        + sized
-        + ",\n    "
-        + tail
-        + f""", best AS (
-      SELECT probe_id, nbr_id AS best_id, s AS sim1 FROM ranked_sz WHERE rn = 1
-    ), second AS (
-      SELECT probe_id, s AS sim2 FROM ranked_sz WHERE rn = 2
-    )
-    SELECT b.probe_id, b.best_id, b.sim1, s.sim2,
-           CAST(floor(10000.0 * b.sim1 / s.sim2) AS BIGINT) AS margin_x10k
-    FROM best b JOIN second s USING (probe_id)
-    WHERE s.sim2 > 0 AND floor(10000.0 * b.sim1 / s.sim2) >= {min_margin_x10k}
-    """
+    nprobe in one string."""
+    return _ladder_oracle(
+        *_ivfadc_ladder_parts(residual), order="nprobe, kind, rung",
+        tail=f",\n    {_ivfadc_sized_tail()}, {_margin_select_sql('ranked_sz')}",
     )
 
 
-def _evict_dead_sessions(cache: dict, spark: SparkSession) -> None:
-    """Drop asset-cache entries keyed to OTHER applicationIds before
-    inserting for the live one: a process that cycles SparkSessions
-    would otherwise pin checkpointed DataFrames (and their dead-JVM
-    references) in these module dicts forever."""
-    live = spark.sparkContext.applicationId
-    for key in [k for k in cache if k[0] != live]:
-        del cache[key]
+def _pq_codes(src: DataFrame, m: int, vec_col: str = "__nv"):
+    """(codebook, codes) of one certified PQ round at m one-byte codes."""
+    book = SIM.pq_fit(
+        src, dim=64, m=m, k_codes=_MARGIN_PQ_KCODES, iters=1, vec_col=vec_col
+    )
+    return book, SIM.pq_encode(src, book, dim=64, m=m, vec_col=vec_col)
 
 
-#: Measured IVFADC ladder rows per corpus, cached like _IVF_CURVE_CACHE:
-#: the curve, the sized decision, and the miner share ONE ladder execution.
-_IVFADC_CURVE_CACHE: dict[str, list[tuple]] = {}
+def _pq_flat_mine(
+    emb: DataFrame, norm: DataFrame, m: int, shortlist: int, fitted=None
+) -> DataFrame:
+    """The flat ADC margin miner over `norm` (normalize_rounded "__nv"):
+    a PQ round at m codes unless `fitted` = (codebook, codes) is given,
+    the top-`shortlist` ADC scan, exact rerank against `emb`, margin
+    filter."""
+    book, codes = fitted or _pq_codes(norm, m)
+    pairs = SIM.adc_shortlist_pairs(
+        norm, book, codes, shortlist=shortlist, dim=64, m=m, vec_col="__nv"
+    )
+    return SIM._margin_top2(SIM._exact_rerank_pairs(pairs, emb, emb), 11000)
 
-#: Session-bound pipeline assets (centroids, ranked cells, normalized
-#: corpus, PQ codebook/codes) from the ladder execution, keyed by
-#: (applicationId, sf_dir) so a DIFFERENT SparkSession never sees another
-#: session's checkpointed frames. Lets q_margin_mine_ivfadc mine at the
-#: sized nprobe without refitting what the curve already fit.
-_IVFADC_ASSET_CACHE: dict[tuple[str, str], dict] = {}
+
+def _ivfadc_mine(emb: DataFrame, nprobe: int, residual: bool, assets: dict):
+    """margin_mine_ivfadc at `nprobe` over the ladder's fitted `assets`
+    (any it lacks, margin_mine_ivfadc fits itself)."""
+    return SIM.margin_mine_ivfadc(
+        emb, dim=64, nprobe=nprobe, m=_MARGIN_PQ_M, k_codes=_MARGIN_PQ_KCODES,
+        iters=1, min_margin_x10k=11000, residual=residual, **assets,
+    )
 
 
 def _ivfadc_ladder_exec(
     spark: SparkSession, sf_dir: str, residual: bool
 ) -> list[tuple]:
-    """Compute (or reuse) the measured IVFADC ladder for one corpus:
-    per rung of the mixed abs/frac family, (kind, rung, nprobe,
-    n_scanned, n_mined, n_hit, recall_x10k). ONE coarse fit + cell ranking + encode + brute
-    reference shared across the rungs via margin_mine_ivfadc's asset
-    params; the flat and residual generations run through this SAME
-    body (only the encoding setup differs), so their ladder bookkeeping
-    can never drift apart. The two generations also share the coarse
-    assets (centroids / ranked cells / norm / shortlist) through the
-    session-bound asset caches when the other ladder already ran."""
-    import math
+    """The measured IVFADC ladder, flat or residual (true IVFADC: PQ on
+    r = nv − anchor(home cell), scores ⟨q, anchor⟩ + ⟨q, r̂⟩): per rung
+    of the mixed abs/frac family, (kind, rung, nprobe, n_scanned,
+    n_mined, n_hit, recall_x10k). ONE coarse fit + cell ranking + encode
+    shared across the rungs via margin_mine_ivfadc's asset params; the
+    two generations run through this SAME body (only the encoding setup
+    differs) and share the coarse assets (norm, centroids, ranked cells)
+    through the store when the other ladder already ran in this session.
+    Rungs of different kinds can realize the SAME nprobe at small k
+    (abs-4 == frac-1 when k = 45): their stats are identical by
+    construction, so they are mined once and reported twice (the oracle
+    replays each rung's own CTE chain — duplicate chains, identical
+    answers). The fitted assets are stored for _ivfadc_sized_mine."""
+    family = "ivfadc_res" if residual else "ivfadc"
+    peer_family = "ivfadc" if residual else "ivfadc_res"
 
-    cache = _IVFADC_RES_CURVE_CACHE if residual else _IVFADC_CURVE_CACHE
-    asset_cache = _IVFADC_RES_ASSET_CACHE if residual else _IVFADC_ASSET_CACHE
-    peer_cache = _IVFADC_ASSET_CACHE if residual else _IVFADC_RES_ASSET_CACHE
-    cached = cache.get(sf_dir)
-    if cached is not None:
-        return cached
-    emb = load_table(spark, "embeddings", sf_dir)
-    n = emb.count()
-    k = math.isqrt(n - 1) + 1 if n > 1 else 1
-    peer = peer_cache.get((spark.sparkContext.applicationId, sf_dir), {})
-    norm = peer.get("norm")
-    if norm is None:
-        norm = SIM.normalize_rounded(emb, out_col="__nv").localCheckpoint()
-    shortlist = peer.get("shortlist") or SIM.size_adc_shortlist(n)
-    cents = peer.get("centroids")
-    if cents is None:
-        _, cents = SIM.kmeans_fit_distributed(emb, k=k, iters=1, round_dp=6)
-    ranked = peer.get("ranked_cells")
-    if ranked is None:
-        ranked = SIM.assign_cells_ranked(emb, cents, n=k).localCheckpoint()
-    home = ranked.select("vec_id", F.element_at("cells", 1).alias("cell"))
-    if residual:
-        anchors = SIM.cell_anchors(norm, home, vec_col="__nv").localCheckpoint()
-        enc_src = SIM.residualize(
-            norm.select("vec_id", "__nv"), home, anchors,
-            vec_col="__nv", out_col="__rv",
-        ).localCheckpoint()
-        enc_col = "__rv"
-    else:
+    def fit(emb, n):
+        k = math.isqrt(n - 1) + 1 if n > 1 else 1
+        peer = _LADDER_STORE.get(_store_key(sf_dir, peer_family, spark), {})
+        norm = peer.get("norm")
+        if norm is None:
+            norm = SIM.normalize_rounded(emb, out_col="__nv").localCheckpoint()
+        cents = peer.get("centroids")
+        if cents is None:
+            _, cents = SIM.kmeans_fit_distributed(emb, k=k, iters=1, round_dp=6)
+        ranked = peer.get("ranked_cells")
+        if ranked is None:
+            ranked = SIM.assign_cells_ranked(emb, cents, n=k).localCheckpoint()
+        home = ranked.select("vec_id", F.element_at("cells", 1).alias("cell"))
         anchors, enc_src, enc_col = None, norm, "__nv"
-    book = SIM.pq_fit(
-        enc_src, dim=64, m=_MARGIN_PQ_M, k_codes=_MARGIN_PQ_KCODES, iters=1,
-        vec_col=enc_col,
-    )
-    codes = SIM.pq_encode(
-        enc_src, book, dim=64, m=_MARGIN_PQ_M, vec_col=enc_col
-    ).localCheckpoint()
-    brute = (
-        SIM.margin_mine(emb, min_margin_x10k=11000)
-        .select("probe_id", "best_id")
-        .localCheckpoint()
-    )
-    n_brute = brute.count()
-    cellsz = home.groupBy("cell").agg(F.count(F.lit(1)).alias("sz")).localCheckpoint()
-    rows = []
-    by_np: dict[int, tuple[int, int, int, int]] = {}
-    for kind, rung in _IVFADC_RUNGS:
-        np_ = SIM.ivfadc_rung_nprobe(kind, rung, k)
-        # rungs of different kinds can realize the SAME nprobe at small
-        # k (e.g. abs-4 == frac-1 when k = 45): the measured stats are
-        # identical by construction, so compute once per distinct nprobe
-        # and report both rows (the oracle replays each rung's own CTE
-        # chain — duplicate chains, identical answers).
-        if np_ not in by_np:
-            mined = SIM.margin_mine_ivfadc(
-                emb, dim=64, nprobe=np_, k_cells=k, m=_MARGIN_PQ_M,
-                k_codes=_MARGIN_PQ_KCODES, iters=1, shortlist=shortlist,
-                min_margin_x10k=11000, centroids=cents, ranked_cells=ranked,
-                norm=norm, codebook=book, codes=codes,
-                residual=residual, anchors=anchors,
-            ).select("probe_id", "best_id")
-            n_mined = mined.count()
-            n_hit = mined.join(brute, ["probe_id", "best_id"]).count()
+        if residual:
+            anchors = SIM.cell_anchors(norm, home, vec_col="__nv").localCheckpoint()
+            enc_src, enc_col = SIM.residualize(
+                norm.select("vec_id", "__nv"), home, anchors,
+                vec_col="__nv", out_col="__rv",
+            ).localCheckpoint(), "__rv"
+        book, codes = _pq_codes(enc_src, _MARGIN_PQ_M, enc_col)
+        assets = {
+            "k_cells": k, "centroids": cents, "ranked_cells": ranked,
+            "norm": norm, "codebook": book, "codes": codes.localCheckpoint(),
+            "shortlist": SIM.size_adc_shortlist(n), "anchors": anchors,
+        }
+        _store_assets(_store_key(sf_dir, family, spark), assets)
+        cellsz = (
+            home.groupBy("cell").agg(F.count(F.lit(1)).alias("sz")).localCheckpoint()
+        )
+
+        def mine(np_):
             n_scanned = (
                 ranked.select(F.explode(F.slice("cells", 1, np_)).alias("cell"))
                 .join(cellsz, "cell")
                 .agg(F.sum("sz"))
                 .collect()[0][0]
             )
-            recall = 10000 if n_brute == 0 else (10000 * n_hit) // n_brute
-            by_np[np_] = (int(n_scanned), int(n_mined), int(n_hit), int(recall))
-        n_scanned, n_mined, n_hit, recall = by_np[np_]
-        rows.append((kind, rung, np_, n_scanned, n_mined, n_hit, recall))
-    cache[sf_dir] = rows
-    _evict_dead_sessions(asset_cache, spark)
-    assets = {
-        "k_cells": k, "centroids": cents, "ranked_cells": ranked,
-        "norm": norm, "codebook": book, "codes": codes,
-        "shortlist": shortlist,
-    }
-    if residual:
-        assets["anchors"] = anchors
-    asset_cache[(spark.sparkContext.applicationId, sf_dir)] = assets
-    return rows
+            return (int(n_scanned),), _ivfadc_mine(emb, np_, residual, assets)
+
+        return [
+            ((kind, rung, np_), np_)
+            for kind, rung in SIM.IVFADC_RUNGS
+            for np_ in [SIM.ivfadc_rung_nprobe(kind, rung, k)]
+        ], mine
+
+    return _measured_ladder(spark, sf_dir, family, fit)
 
 
 def _ivfadc_route_on_saturation(residual: bool) -> str:
@@ -4913,23 +4687,11 @@ def _ivfadc_sized_result(
     VERDICT r9 item 5)."""
     n = load_table(spark, "embeddings", sf_dir).count()
     pick = SIM.size_ivfadc_rung(rows, recall_target_x10k=_MARGIN_PQ_FLOOR_X10K)
-    hit = None
-    if pick is not None:
-        kind, rung, np_ = pick
-        hit = next(r for r in rows if (r[0], r[1]) == (kind, rung))
-    out = (
-        (
-            _MARGIN_PQ_FLOOR_X10K,
-            hit[0] if hit else None,
-            hit[1] if hit else None,
-            hit[2] if hit else None,
-            (10000 * hit[3]) // (n * n) if hit else None,
-            hit is not None,
-            None if hit else _ivfadc_route_on_saturation(residual),
-        ),
-    )
+    hit = next(r for r in rows if (r[0], r[1]) == pick[:2]) if pick else None
+    point = (*hit[:3], (10000 * hit[3]) // (n * n)) if hit else (None,) * 4
     return local_rows_df(spark, 
-        out,
+        [(_MARGIN_PQ_FLOOR_X10K, *point, hit is not None,
+          None if hit else _ivfadc_route_on_saturation(residual))],
         "target_x10k bigint, sized_kind string, sized_rung bigint, "
         "sized_nprobe bigint, scan_frac_x10k bigint, reached boolean, "
         "route string",
@@ -4940,10 +4702,8 @@ def _ivfadc_sized_mine(
     spark: SparkSession, sf_dir: str, residual: bool
 ) -> DataFrame:
     """The sized mine shared by the flat and residual miners: size
-    nprobe from the (cached) measured ladder, then mine once reusing
+    nprobe from the (stored) measured ladder, then mine once reusing
     the ladder's session-bound assets."""
-    import math
-
     rows = _ivfadc_ladder_exec(spark, sf_dir, residual)
     pick = SIM.size_ivfadc_rung(rows, recall_target_x10k=_MARGIN_PQ_FLOOR_X10K)
     if pick is None:
@@ -4961,32 +4721,21 @@ def _ivfadc_sized_mine(
             f"(residual_ivfadc = margin_mine_ivfadc(residual=True), "
             f"m32 = double the code budget, see q_margin_m_sized)"
         )
-    np_ = pick[2]
     emb = load_table(spark, "embeddings", sf_dir)
-    k = math.isqrt(emb.count() - 1) + 1
-    asset_cache = _IVFADC_RES_ASSET_CACHE if residual else _IVFADC_ASSET_CACHE
-    assets = asset_cache.get((spark.sparkContext.applicationId, sf_dir), {})
-    return SIM.margin_mine_ivfadc(
-        emb, dim=64, nprobe=np_, k_cells=k, m=_MARGIN_PQ_M,
-        k_codes=_MARGIN_PQ_KCODES, iters=1, min_margin_x10k=11000,
-        centroids=assets.get("centroids"),
-        ranked_cells=assets.get("ranked_cells"),
-        norm=assets.get("norm"),
-        codebook=assets.get("codebook"),
-        codes=assets.get("codes"),
-        shortlist=assets.get("shortlist"),
-        residual=residual,
-        anchors=assets.get("anchors"),
-    )
+    family = "ivfadc_res" if residual else "ivfadc"
+    assets = _LADDER_STORE.get(_store_key(sf_dir, family, spark)) or {
+        "k_cells": math.isqrt(emb.count() - 1) + 1
+    }
+    return _ivfadc_mine(emb, pick[2], residual, assets)
 
 
-def _ivfadc_curve_rows(
-    spark: SparkSession, sf_dir: str
-) -> list[tuple]:
-    return _ivfadc_ladder_exec(spark, sf_dir, residual=False)
+_IVFADC_CURVE_SCHEMA = (
+    "kind string, rung bigint, nprobe bigint, n_scanned bigint, "
+    "n_mined bigint, n_hit bigint, recall_x10k bigint"
+)
 
 
-@query("q_margin_ivfadc_curve", oracle=_margin_ivfadc_curve_oracle())
+@query("q_margin_ivfadc_curve", oracle=_ladder_oracle(*_ivfadc_ladder_parts()))
 def q_margin_ivfadc_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC nprobe SENSITIVITY CURVE (VERDICT r7 item 2; rung family
     EXTENDED r9 per VERDICT r8 item 2, and again r10 with ("abs", 32)
@@ -5006,11 +4755,10 @@ def q_margin_ivfadc_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared by every rung, duplicate-nprobe rungs computed once (both
     engine and oracle agree row-for-row); the decision consumers
     (q_margin_ivfadc_sized, q_margin_mine_ivfadc) read this measured
-    ladder through the same per-corpus cache."""
-    return local_rows_df(spark, 
-        _ivfadc_curve_rows(spark, sf_dir),
-        "kind string, rung bigint, nprobe bigint, n_scanned bigint, "
-        "n_mined bigint, n_hit bigint, recall_x10k bigint",
+    ladder through the store."""
+    return local_rows_df(
+        spark, _ivfadc_ladder_exec(spark, sf_dir, residual=False),
+        _IVFADC_CURVE_SCHEMA,
     )
 
 
@@ -5059,7 +4807,7 @@ def q_margin_mine_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     miner composes the certified √N-cell coarse quantizer in front —
     each probe scans only its nprobe nearest cells' inverted lists,
     ~nprobe/k of the codes — with nprobe sized per corpus from the
-    measured recall curve (q_margin_ivfadc_curve via the shared cache,
+    measured recall curve (q_margin_ivfadc_curve via the store,
     target 0.85), never frozen. FAISS's production index composition
     (Jégou-Douze-Schmid TPAMI 2011 §V) on the same certified fit
     family as margin_mine_ivf, so ONE oracle fit CTE serves both.
@@ -5083,25 +4831,10 @@ def q_margin_mine_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # same mixed rung family so the two curves are directly comparable.
 # ---------------------------------------------------------------------------
 
-_IVFADC_RES_CURVE_CACHE: dict[str, list[tuple]] = {}
-_IVFADC_RES_ASSET_CACHE: dict[tuple[str, str], dict] = {}
-
-
-def _ivfadc_res_curve_rows(
-    spark: SparkSession, sf_dir: str
-) -> list[tuple]:
-    """Measured RESIDUAL-IVFADC ladder per corpus — _ivfadc_ladder_exec
-    with residual encoding: anchors = per-cell nv means, PQ fit/encode
-    on r = nv − anchor(home), scan scores ⟨q, anchor⟩ + ⟨q, r̂⟩. Shares
-    the flat ladder's session-bound coarse assets when that ladder
-    already ran, so the two curves differ only in the encoding they
-    certify."""
-    return _ivfadc_ladder_exec(spark, sf_dir, residual=True)
-
 
 @query(
     "q_margin_ivfadc_res_curve",
-    oracle=_margin_ivfadc_curve_oracle(residual=True),
+    oracle=_ladder_oracle(*_ivfadc_ladder_parts(residual=True)),
 )
 def q_margin_ivfadc_res_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RESIDUAL-IVFADC nprobe sensitivity curve — the
@@ -5113,10 +4846,9 @@ def q_margin_ivfadc_res_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     derivation, residual fit/encode, the ⟨q, anchor⟩-offset ADC
     scores, every rung's cell-restricted shortlist, and the recall
     bookkeeping."""
-    return local_rows_df(spark, 
-        _ivfadc_res_curve_rows(spark, sf_dir),
-        "kind string, rung bigint, nprobe bigint, n_scanned bigint, "
-        "n_mined bigint, n_hit bigint, recall_x10k bigint",
+    return local_rows_df(
+        spark, _ivfadc_ladder_exec(spark, sf_dir, residual=True),
+        _IVFADC_CURVE_SCHEMA,
     )
 
 
@@ -5148,15 +4880,13 @@ def q_margin_mine_ivfadc_res(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Residual-IVFADC margin mining at ITS sized operating point — the
     production form of the cell-pruned miner: same coarse quantizer and
     inverted-file scan as q_margin_mine_ivfadc, finer ADC ranking from
-    residual codes, nprobe sized from the residual curve (shared cache,
+    residual codes, nprobe sized from the residual curve (the store,
     0.85 target). The oracle replays the whole decision chain including
     the residual encoding."""
     return _ivfadc_sized_mine(spark, sf_dir, residual=True)
 
 
-def _margin_mine_routed_oracle(
-    target_x10k: int = 8500, min_margin_x10k: int = 11000
-) -> str:
+def _margin_mine_routed_oracle() -> str:
     """Replay the ENTIRE routed cascade in one query (VERDICT r10
     item 2): the flat m=16 ladder + sized decision, the residual m=16
     ladder + sized decision, AND the m=32 flat-ADC escape chain — then
@@ -5171,76 +4901,34 @@ def _margin_mine_routed_oracle(
     LadderSaturatedError cascade, and the saturating-ladder test
     re-runs the same decision SQL over injected ladders to certify the
     fallback arms fire when the decisions say so."""
-    shared = [
-        *_ivfadc_shared_parts(),
-        _pq_adc_prefix_sql(),
-        _margin_brute_sql(min_margin_x10k),
-    ]
-    f_parts, f_sized = _ivfadc_sized_ctes(
-        target_x10k, min_margin_x10k, residual=False, family_suffix=""
-    )
-    r_parts, r_sized = _ivfadc_sized_ctes(
-        target_x10k, min_margin_x10k, residual=True, family_suffix="_r"
-    )
-    m32_parts = [
+    ladders = []
+    for residual, S in ((False, ""), (True, "_r")):
+        parts, selects = _ivfadc_ladder_parts(residual, S)
+        ladders += [*parts, _ladder_ctes(selects, "nprobe, kind, rung", S)]
+
+    def arm(ranked: str, route: str, cond: str) -> str:
+        cols = (
+            "b.probe_id, b.nbr_id AS best_id, b.s AS sim1, s2.sim2, "
+            "CAST(floor(10000.0 * b.s / s2.sim2) AS BIGINT) AS margin_x10k, "
+            f"CAST('{route}' AS VARCHAR) AS route"
+        )
+        return f"{_margin_top2_sql(ranked, 11000, cols)}\n      AND {cond}"
+
+    flat_ok = "EXISTS (SELECT 1 FROM sized)"
+    res_ok = "EXISTS (SELECT 1 FROM sized_r)"
+    return _V_CTE + ",\n    ".join([
+        *_ivfadc_shared_parts(), _pq_adc_prefix_sql(), _margin_brute_sql(),
+        *ladders,
         _pq_adc_chain_sql(m=32, suffix="_m32"),
         _pq_shortlist_tail_sql(
             True, "", "short_m32", "ranked_m32", padc_cte="padc_m32"
         ),
-    ]
-
-    def mine_tail(S: str) -> str:
-        np_sized = (
-            f"(SELECT coalesce((SELECT nprobe FROM sized{S}),"
-            f" (SELECT max(nprobe) FROM ladder{S})))"
-        )
-        restrict = f"""JOIN home h ON h.vec_id = a.nbr_id
-        JOIN t2a pc ON pc.vec_id = a.probe_id AND pc.cl = h.cl
-          AND pc.rn <= {np_sized}"""
-        return _pq_shortlist_tail_sql(
-            True, restrict, f"short_sz{S}", f"ranked_sz{S}",
-            padc_cte=f"padc{S}",
-        )
-
-    def arm(ranked: str, route: str, cond: str) -> str:
-        return f"""SELECT b.probe_id, b.nbr_id AS best_id, b.s AS sim1, s2.sim2,
-           CAST(floor(10000.0 * b.s / s2.sim2) AS BIGINT) AS margin_x10k,
-           CAST('{route}' AS VARCHAR) AS route
-    FROM (SELECT probe_id, nbr_id, s FROM {ranked} WHERE rn = 1) b
-    JOIN (SELECT probe_id, s AS sim2 FROM {ranked} WHERE rn = 2) s2
-      USING (probe_id)
-    WHERE s2.sim2 > 0
-      AND floor(10000.0 * b.s / s2.sim2) >= {min_margin_x10k}
-      AND {cond}"""
-
-    flat_ok = "EXISTS (SELECT 1 FROM sized)"
-    res_ok = "EXISTS (SELECT 1 FROM sized_r)"
-    return (
-        _IVFADC_V_CTE
-        + ",\n    ".join(shared + f_parts)
-        + ",\n    "
-        + f_sized
-        + ",\n    "
-        + ",\n    ".join(r_parts)
-        + ",\n    "
-        + r_sized
-        + ",\n    "
-        + ",\n    ".join(m32_parts)
-        + ",\n    "
-        + mine_tail("")
-        + ",\n    "
-        + mine_tail("_r")
-        + "\n    "
-        + arm("ranked_sz", "flat", flat_ok)
-        + "\n    UNION ALL "
-        + arm(
-            "ranked_sz_r",
-            "residual_ivfadc",
-            f"NOT {flat_ok} AND {res_ok}",
-        )
-        + "\n    UNION ALL "
-        + arm("ranked_m32", "m32", f"NOT {flat_ok} AND NOT {res_ok}")
-    )
+        _ivfadc_sized_tail(), _ivfadc_sized_tail("_r"),
+    ]) + "\n    " + "\n    UNION ALL ".join([
+        arm("ranked_sz", "flat", flat_ok),
+        arm("ranked_sz_r", "residual_ivfadc", f"NOT {flat_ok} AND {res_ok}"),
+        arm("ranked_m32", "m32", f"NOT {flat_ok} AND NOT {res_ok}"),
+    ])
 
 
 def _m32_flat_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5255,17 +4943,7 @@ def _m32_flat_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     void and the flat scan is the honest operating point."""
     emb = load_table(spark, "embeddings", sf_dir).localCheckpoint()
     norm = SIM.normalize_rounded(emb, out_col="__nv").localCheckpoint()
-    n = norm.count()
-    c = SIM.size_adc_shortlist(n)
-    book = SIM.pq_fit(
-        norm, dim=64, m=32, k_codes=_MARGIN_PQ_KCODES, iters=1,
-        vec_col="__nv",
-    )
-    codes = SIM.pq_encode(norm, book, dim=64, m=32, vec_col="__nv")
-    pairs = SIM.adc_shortlist_pairs(
-        norm, book, codes, shortlist=c, dim=64, m=32, vec_col="__nv"
-    )
-    return SIM._margin_top2(SIM._exact_rerank_pairs(pairs, emb, emb), 11000)
+    return _pq_flat_mine(emb, norm, 32, SIM.size_adc_shortlist(norm.count()))
 
 
 @query("q_margin_mine_routed", oracle=_margin_mine_routed_oracle())
@@ -5286,7 +4964,7 @@ def q_margin_mine_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full cascade (both family ladders + decisions + the m=32
     chain) in one SQL query; the saturating-ladder pytest proves the
     fallback legs execute by injecting saturated ladders into the
-    curve caches."""
+    ladder store."""
     try:
         mined, route = _ivfadc_sized_mine(spark, sf_dir, residual=False), "flat"
     except SIM.LadderSaturatedError:
@@ -5312,90 +4990,109 @@ def q_margin_mine_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PQ_C_MULTS = (1, 2, 3)
 
-
-def _pq_c_expr(mult: int) -> str:
-    """C = max(32, mult·ceil(√|index|)) in SQL — size_adc_shortlist's
-    integer rule at an explicit multiplier."""
-    return (
-        f"greatest(32, {mult} * (SELECT CAST(ceil(sqrt(count(*))) AS INT)"
-        " FROM pq_rids))"
-    )
+#: size_adc_shortlist's multiplier — what every registered PQ composite
+#: runs; q_margin_c_sized audits it against the measured curve.
+_PQ_PROD_MULT = 2
 
 
-def _pq_c_ladder_parts(min_margin_x10k: int = 11000):
-    """Shared CTEs + per-rung SELECTs for the C-sizing oracles: the PQ
-    ADC core (padc computed once, shared by every rung), the brute
-    reference, and per multiplier a top-C window at THAT C + exact
-    rerank + margin filter + a curve SELECT."""
-    parts = [_pq_adc_core_sql(), _margin_brute_sql(min_margin_x10k)]
-    selects = []
+def _pq_c_ladder_parts():
+    """CTE parts + per-rung SELECTs for the C-sizing oracles: the PQ ADC
+    core (padc computed once, shared by every rung), the brute
+    reference, and per multiplier a top-C window at C = max(32,
+    mult·ceil(√|index|)) (size_adc_shortlist's integer rule at an
+    explicit multiplier) + exact rerank + margin pairs + a curve
+    SELECT."""
+    parts, selects = [_pq_adc_core_sql(), _margin_brute_sql()], []
     for mult in _PQ_C_MULTS:
-        c_expr = _pq_c_expr(mult)
-        parts.append(
+        c_expr = (
+            f"greatest(32, {mult} * (SELECT CAST(ceil(sqrt(count(*))) AS INT)"
+            " FROM pq_rids))"
+        )
+        parts += [
             _pq_shortlist_tail_sql(
                 True, "", f"short_m{mult}", f"ranked_m{mult}", c_expr
-            )
-        )
-        parts.append(f"""mined_m{mult} AS MATERIALIZED (
-      SELECT b.probe_id, b.nbr_id AS best_id
-      FROM (SELECT probe_id, nbr_id, s FROM ranked_m{mult} WHERE rn = 1) b
-      JOIN (SELECT probe_id, s AS sim2 FROM ranked_m{mult} WHERE rn = 2) s2
-        USING (probe_id)
-      WHERE s2.sim2 > 0
-        AND floor(10000.0 * b.s / s2.sim2) >= {min_margin_x10k}
-    )""")
-        selects.append(f"""SELECT CAST({mult} AS BIGINT) AS mult,
-           CAST({c_expr} AS BIGINT) AS c_short,
-           (SELECT CAST(count(*) AS BIGINT) FROM mined_m{mult}) AS n_mined,
-           (SELECT CAST(count(*) AS BIGINT)
-            FROM mined_m{mult} JOIN brute_pairs USING (probe_id, best_id)) AS n_hit,
-           (SELECT CAST(CASE WHEN (SELECT count(*) FROM brute_pairs) = 0
-                             THEN 10000
-                             ELSE floor(10000.0 * count(*) /
-                                  (SELECT count(*) FROM brute_pairs)) END
-                  AS BIGINT)
-            FROM mined_m{mult} JOIN brute_pairs USING (probe_id, best_id))
-             AS recall_x10k""")
+            ),
+            _margin_pairs_cte(f"mined_m{mult}", f"ranked_m{mult}"),
+        ]
+        selects.append(_recall_select_sql(
+            f"CAST({mult} AS BIGINT) AS mult, CAST({c_expr} AS BIGINT) AS c_short",
+            f"mined_m{mult}",
+        ))
     return parts, selects
 
 
-def _margin_pq_c_curve_oracle(min_margin_x10k: int = 11000) -> str:
-    parts, selects = _pq_c_ladder_parts(min_margin_x10k)
-    return (
-        _IVFADC_V_CTE
-        + ",\n    ".join(parts)
-        + "\n    "
-        + "\n      UNION ALL ".join(selects)
+def _pq_c_curve_rows(spark: SparkSession, sf_dir: str) -> list:
+    """Measured (mult, c_short, n_mined, n_hit, recall_x10k) ladder for
+    one corpus — one normalize + PQ fit/encode, one flat ADC scan per
+    distinct C."""
+
+    def fit(emb, n):
+        norm = SIM.normalize_rounded(emb, out_col="__nv").localCheckpoint()
+        book, codes = _pq_codes(norm, _MARGIN_PQ_M)
+        fitted = (book, codes.localCheckpoint())
+        rt = math.isqrt(n - 1) + 1 if n > 1 else 1
+        return [
+            ((mult, c), c) for mult in _PQ_C_MULTS for c in [max(32, mult * rt)]
+        ], lambda c: ((), _pq_flat_mine(emb, norm, _MARGIN_PQ_M, c, fitted))
+
+    return _measured_ladder(spark, sf_dir, "pq_c", fit)
+
+
+@query("q_margin_pq_c_curve", oracle=_ladder_oracle(*_pq_c_ladder_parts()))
+def q_margin_pq_c_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shortlist-size SENSITIVITY CURVE for the flat PQ miner (VERDICT
+    r7 item 3): measured pair-recall at C = max(32, mult·ceil(√N)) for
+    mult in {1, 2, 3} over ONE shared fit/encode/padc — the curve that
+    makes C sizable from a recall target (size_adc_mult) instead of
+    frozen at the mult-2 rule whose recall decays toward the floor at
+    scale (0.9689/0.9628 driver scales → 0.898 at 60×). The scale probe
+    runs this same ladder at the deep factors and records the SIZED
+    mult holding the floor there."""
+    return local_rows_df(spark,
+        _pq_c_curve_rows(spark, sf_dir),
+        "mult bigint, c_short bigint, n_mined bigint, n_hit bigint, "
+        "recall_x10k bigint",
     )
 
 
-def _margin_c_sized_oracle(
-    target_x10k: int = 8500,
-    min_margin_x10k: int = 11000,
-    prod_mult: int = 2,
-) -> str:
-    parts, selects = _pq_c_ladder_parts(min_margin_x10k)
-    ladder = "\n      UNION ALL ".join(selects)
-    return (
-        _IVFADC_V_CTE
-        + ",\n    ".join(parts)
-        + f""", ladder AS MATERIALIZED (
-      {ladder}
-    ), sized AS MATERIALIZED (
-      SELECT * FROM ladder WHERE recall_x10k >= {target_x10k}
-      ORDER BY mult LIMIT 1
-    ), prod AS MATERIALIZED (
-      SELECT * FROM ladder WHERE mult = {prod_mult}
-    )
-    SELECT CAST({target_x10k} AS BIGINT) AS target_x10k,
+@query(
+    "q_margin_c_sized",
+    oracle=_ladder_oracle(
+        *_pq_c_ladder_parts(), order="mult", prod=f"mult = {_PQ_PROD_MULT}",
+        tail=f"""
+    SELECT CAST({_MARGIN_PQ_FLOOR_X10K} AS BIGINT) AS target_x10k,
            (SELECT CAST(mult AS BIGINT) FROM sized) AS sized_mult,
            (SELECT CAST(c_short AS BIGINT) FROM sized) AS sized_c,
            EXISTS (SELECT 1 FROM sized) AS reached,
-           CAST({prod_mult} AS BIGINT) AS prod_mult,
+           CAST({_PQ_PROD_MULT} AS BIGINT) AS prod_mult,
            (SELECT CAST(c_short AS BIGINT) FROM prod) AS prod_c,
            (SELECT CAST(recall_x10k AS BIGINT) FROM prod) AS prod_recall_x10k,
-           (SELECT recall_x10k >= {target_x10k} FROM prod) AS prod_meets_target
-    """
+           (SELECT recall_x10k >= {_MARGIN_PQ_FLOOR_X10K} FROM prod) AS prod_meets_target
+    """,
+    ),
+)
+def q_margin_c_sized(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The C-sizing decision, certified: the smallest measured
+    multiplier clearing the 0.85 floor, AND where the PRODUCTION rule
+    (size_adc_shortlist's mult 2 — what every registered PQ composite
+    actually runs) sits on the same measured curve. prod_meets_target
+    is the no-drift contract of VERDICT r7 item 4: the composites keep
+    reading size_adc_shortlist (their oracles encode that exact rule),
+    and this row — re-measured every round — certifies that the frozen
+    production point still clears the floor on each driver corpus,
+    while sized_mult documents the cheapest-safe alternative
+    (measured: mult 1 suffices at both driver scales; the 60× probe is
+    where the gap between sized and production narrows)."""
+    rows = _pq_c_curve_rows(spark, sf_dir)
+    hit = _sized_row(rows, "mult")
+    prod = next(r for r in rows if r[0] == _PQ_PROD_MULT)
+    return local_rows_df(spark,
+        [(_MARGIN_PQ_FLOOR_X10K, *(hit[:2] if hit else (None, None)),
+          hit is not None, _PQ_PROD_MULT, prod[1], prod[4],
+          prod[4] >= _MARGIN_PQ_FLOOR_X10K)],
+        "target_x10k bigint, sized_mult bigint, sized_c bigint, "
+        "reached boolean, prod_mult bigint, prod_c bigint, "
+        "prod_recall_x10k bigint, prod_meets_target boolean",
     )
 
 
@@ -5417,134 +5114,47 @@ def _margin_c_sized_oracle(
 _PQ_M_LADDER = (8, 16, 32)
 
 
-def _pq_m_ladder_parts(min_margin_x10k: int = 11000):
+def _pq_m_ladder_parts():
     """Shared prefix + brute reference, then per code budget m a FULL
     per-m PQ chain (suffix-renamed fit/encode/LUT/ADC CTEs over the one
-    shared prefix) + sized-C shortlist + exact rerank + margin filter +
+    shared prefix) + sized-C shortlist + exact rerank + margin pairs +
     a curve SELECT."""
-    parts = [_pq_adc_prefix_sql(), _margin_brute_sql(min_margin_x10k)]
-    selects = []
+    parts, selects = [_pq_adc_prefix_sql(), _margin_brute_sql()], []
     for m in _PQ_M_LADDER:
         s = f"_b{m}"
-        parts.append(_pq_adc_chain_sql(m=m, suffix=s))
-        parts.append(
+        parts += [
+            _pq_adc_chain_sql(m=m, suffix=s),
             _pq_shortlist_tail_sql(
                 True, "", f"short{s}", f"ranked{s}", padc_cte=f"padc{s}"
-            )
-        )
-        parts.append(f"""mined{s} AS MATERIALIZED (
-      SELECT b.probe_id, b.nbr_id AS best_id
-      FROM (SELECT probe_id, nbr_id, s FROM ranked{s} WHERE rn = 1) b
-      JOIN (SELECT probe_id, s AS sim2 FROM ranked{s} WHERE rn = 2) s2
-        USING (probe_id)
-      WHERE s2.sim2 > 0
-        AND floor(10000.0 * b.s / s2.sim2) >= {min_margin_x10k}
-    )""")
-        selects.append(f"""SELECT CAST({m} AS BIGINT) AS code_bytes,
-           (SELECT CAST(c_short AS BIGINT) FROM params) AS c_short,
-           (SELECT CAST(count(*) AS BIGINT) FROM mined{s}) AS n_mined,
-           (SELECT CAST(count(*) AS BIGINT)
-            FROM mined{s} JOIN brute_pairs USING (probe_id, best_id)) AS n_hit,
-           (SELECT CAST(CASE WHEN (SELECT count(*) FROM brute_pairs) = 0
-                             THEN 10000
-                             ELSE floor(10000.0 * count(*) /
-                                  (SELECT count(*) FROM brute_pairs)) END
-                  AS BIGINT)
-            FROM mined{s} JOIN brute_pairs USING (probe_id, best_id))
-             AS recall_x10k""")
+            ),
+            _margin_pairs_cte(f"mined{s}", f"ranked{s}"),
+        ]
+        selects.append(_recall_select_sql(
+            f"CAST({m} AS BIGINT) AS code_bytes,"
+            " (SELECT CAST(c_short AS BIGINT) FROM params) AS c_short",
+            f"mined{s}",
+        ))
     return parts, selects
 
 
-def _margin_pq_m_curve_oracle(min_margin_x10k: int = 11000) -> str:
-    parts, selects = _pq_m_ladder_parts(min_margin_x10k)
-    return (
-        _IVFADC_V_CTE
-        + ",\n    ".join(parts)
-        + "\n    "
-        + "\n      UNION ALL ".join(selects)
-    )
-
-
-def _margin_m_sized_oracle(
-    target_x10k: int = 8500,
-    min_margin_x10k: int = 11000,
-    prod_m: int = _MARGIN_PQ_M,
-) -> str:
-    parts, selects = _pq_m_ladder_parts(min_margin_x10k)
-    ladder = "\n      UNION ALL ".join(selects)
-    return (
-        _IVFADC_V_CTE
-        + ",\n    ".join(parts)
-        + f""", ladder AS MATERIALIZED (
-      {ladder}
-    ), sized AS MATERIALIZED (
-      SELECT * FROM ladder WHERE recall_x10k >= {target_x10k}
-      ORDER BY code_bytes LIMIT 1
-    ), prod AS MATERIALIZED (
-      SELECT * FROM ladder WHERE code_bytes = {prod_m}
-    )
-    SELECT CAST({target_x10k} AS BIGINT) AS target_x10k,
-           (SELECT CAST(code_bytes AS BIGINT) FROM sized) AS sized_m,
-           EXISTS (SELECT 1 FROM sized) AS reached,
-           CAST({prod_m} AS BIGINT) AS prod_m,
-           (SELECT CAST(recall_x10k AS BIGINT) FROM prod) AS prod_recall_x10k,
-           (SELECT recall_x10k >= {target_x10k} FROM prod) AS prod_meets_target
-    """
-    )
-
-
-#: Measured code-budget ladder rows per corpus (the _PQ_C_CURVE_CACHE
-#: convention): curve + sized decision share one execution.
-_PQ_M_CURVE_CACHE: dict[str, list[tuple[int, int, int, int, int]]] = {}
-
-
-def _pq_m_curve_rows(
-    spark: SparkSession, sf_dir: str
-) -> list[tuple[int, int, int, int, int]]:
+def _pq_m_curve_rows(spark: SparkSession, sf_dir: str) -> list:
     """Measured (code_bytes, c_short, n_mined, n_hit, recall_x10k)
-    ladder for one corpus — one normalize + brute reference shared, one
-    full PQ fit/encode/ADC-scan/rerank per code budget m."""
-    import math
+    ladder for one corpus — one normalize shared, one full PQ
+    fit/encode/ADC-scan/rerank per code budget m."""
 
-    cached = _PQ_M_CURVE_CACHE.get(sf_dir)
-    if cached is not None:
-        return cached
-    emb = load_table(spark, "embeddings", sf_dir).localCheckpoint()
-    norm = SIM.normalize_rounded(emb, out_col="__nv").localCheckpoint()
-    n = norm.count()
-    c = SIM.size_adc_shortlist(n)
-    brute = (
-        SIM.margin_mine(emb, min_margin_x10k=11000)
-        .select("probe_id", "best_id")
-        .localCheckpoint()
-    )
-    n_brute = brute.count()
-    rows = []
-    for m in _PQ_M_LADDER:
-        book = SIM.pq_fit(
-            norm, dim=64, m=m, k_codes=_MARGIN_PQ_KCODES, iters=1,
-            vec_col="__nv",
-        )
-        codes = SIM.pq_encode(norm, book, dim=64, m=m, vec_col="__nv")
-        pairs = SIM.adc_shortlist_pairs(
-            norm, book, codes, shortlist=c, dim=64, m=m, vec_col="__nv"
-        )
-        mined = (
-            SIM._margin_top2(
-                SIM._exact_rerank_pairs(pairs, emb, emb), 11000
-            )
+    def fit(emb, n):
+        norm = SIM.normalize_rounded(emb, out_col="__nv").localCheckpoint()
+        c = SIM.size_adc_shortlist(n)
+        return [((m, c), m) for m in _PQ_M_LADDER], lambda m: ((), (
+            _pq_flat_mine(emb, norm, m, c)
             .select("probe_id", "best_id")
             .localCheckpoint()
-        )
-        n_mined = mined.count()
-        n_hit = mined.join(brute, ["probe_id", "best_id"]).count()
-        recall = 10000 if n_brute == 0 else (10000 * n_hit) // n_brute
-        rows.append((m, c, int(n_mined), int(n_hit), int(recall)))
-    _PQ_M_CURVE_CACHE[sf_dir] = rows
-    return rows
+        ))
+
+    return _measured_ladder(spark, sf_dir, "pq_m", fit)
 
 
-@query("q_margin_pq_m_curve", oracle=_margin_pq_m_curve_oracle())
+@query("q_margin_pq_m_curve", oracle=_ladder_oracle(*_pq_m_ladder_parts()))
 def q_margin_pq_m_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CODE-BUDGET recall curve (r9 — the third sizing axis): measured
     margin-mining recall at m ∈ {8, 16, 32} one-byte PQ codes per
@@ -5562,7 +5172,20 @@ def q_margin_pq_m_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("q_margin_m_sized", oracle=_margin_m_sized_oracle())
+@query(
+    "q_margin_m_sized",
+    oracle=_ladder_oracle(
+        *_pq_m_ladder_parts(), order="code_bytes",
+        prod=f"code_bytes = {_MARGIN_PQ_M}", tail=f"""
+    SELECT CAST({_MARGIN_PQ_FLOOR_X10K} AS BIGINT) AS target_x10k,
+           (SELECT CAST(code_bytes AS BIGINT) FROM sized) AS sized_m,
+           EXISTS (SELECT 1 FROM sized) AS reached,
+           CAST({_MARGIN_PQ_M} AS BIGINT) AS prod_m,
+           (SELECT CAST(recall_x10k AS BIGINT) FROM prod) AS prod_recall_x10k,
+           (SELECT recall_x10k >= {_MARGIN_PQ_FLOOR_X10K} FROM prod) AS prod_meets_target
+    """,
+    ),
+)
 def q_margin_m_sized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The code-budget SIZING decision + production-rule audit (the
     q_margin_c_sized idiom on the m axis): smallest measured byte
@@ -5573,129 +5196,14 @@ def q_margin_m_sized(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads its m off a measured curve the way it already reads nprobe
     and C."""
     rows = _pq_m_curve_rows(spark, sf_dir)
-    sized = next((r for r in rows if r[4] >= _MARGIN_PQ_FLOOR_X10K), None)
+    sized = _sized_row(rows, "code_bytes")
     prod = next(r for r in rows if r[0] == _MARGIN_PQ_M)
-    out = (
-        (
-            _MARGIN_PQ_FLOOR_X10K,
-            sized[0] if sized else None,
-            sized is not None,
-            _MARGIN_PQ_M,
-            prod[4],
-            prod[4] >= _MARGIN_PQ_FLOOR_X10K,
-        ),
-    )
     return local_rows_df(spark, 
-        out,
+        [(_MARGIN_PQ_FLOOR_X10K, sized[0] if sized else None,
+          sized is not None, _MARGIN_PQ_M, prod[4],
+          prod[4] >= _MARGIN_PQ_FLOOR_X10K)],
         "target_x10k bigint, sized_m bigint, reached boolean, "
         "prod_m bigint, prod_recall_x10k bigint, prod_meets_target boolean",
-    )
-
-
-#: Measured C-multiplier ladder rows per corpus (the _IVF_CURVE_CACHE
-#: convention): curve + sized decision share one execution.
-_PQ_C_CURVE_CACHE: dict[str, list[tuple[int, int, int, int, int]]] = {}
-
-
-def _pq_c_curve_rows(
-    spark: SparkSession, sf_dir: str
-) -> list[tuple[int, int, int, int, int]]:
-    """Measured (mult, c_short, n_mined, n_hit, recall_x10k) ladder for
-    one corpus — one normalize + PQ fit/encode + brute reference, one
-    flat ADC scan per rung."""
-    import math
-
-    cached = _PQ_C_CURVE_CACHE.get(sf_dir)
-    if cached is not None:
-        return cached
-    emb = load_table(spark, "embeddings", sf_dir).localCheckpoint()
-    norm = SIM.normalize_rounded(emb, out_col="__nv").localCheckpoint()
-    n = norm.count()
-    rt = math.isqrt(n - 1) + 1 if n > 1 else 1
-    book = SIM.pq_fit(
-        norm, dim=64, m=_MARGIN_PQ_M, k_codes=_MARGIN_PQ_KCODES, iters=1,
-        vec_col="__nv",
-    )
-    codes = SIM.pq_encode(
-        norm, book, dim=64, m=_MARGIN_PQ_M, vec_col="__nv"
-    ).localCheckpoint()
-    brute = (
-        SIM.margin_mine(emb, min_margin_x10k=11000)
-        .select("probe_id", "best_id")
-        .localCheckpoint()
-    )
-    n_brute = brute.count()
-    rows = []
-    for mult in _PQ_C_MULTS:
-        c = max(32, mult * rt)
-        pairs = SIM.adc_shortlist_pairs(
-            norm, book, codes, shortlist=c, dim=64, m=_MARGIN_PQ_M,
-            vec_col="__nv",
-        )
-        mined = (
-            SIM._margin_top2(
-                SIM._exact_rerank_pairs(pairs, emb, emb), 11000
-            )
-            .select("probe_id", "best_id")
-        )
-        n_mined = mined.count()
-        n_hit = mined.join(brute, ["probe_id", "best_id"]).count()
-        recall = 10000 if n_brute == 0 else (10000 * n_hit) // n_brute
-        rows.append((mult, c, int(n_mined), int(n_hit), int(recall)))
-    _PQ_C_CURVE_CACHE[sf_dir] = rows
-    return rows
-
-
-@query("q_margin_pq_c_curve", oracle=_margin_pq_c_curve_oracle())
-def q_margin_pq_c_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shortlist-size SENSITIVITY CURVE for the flat PQ miner (VERDICT
-    r7 item 3): measured pair-recall at C = max(32, mult·ceil(√N)) for
-    mult in {1, 2, 3} over ONE shared fit/encode/padc — the curve that
-    makes C sizable from a recall target (size_adc_mult) instead of
-    frozen at the mult-2 rule whose recall decays toward the floor at
-    scale (0.9689/0.9628 driver scales → 0.898 at 60×). The scale probe
-    runs this same ladder at the deep factors and records the SIZED
-    mult holding the floor there."""
-    return local_rows_df(spark, 
-        _pq_c_curve_rows(spark, sf_dir),
-        "mult bigint, c_short bigint, n_mined bigint, n_hit bigint, "
-        "recall_x10k bigint",
-    )
-
-
-@query("q_margin_c_sized", oracle=_margin_c_sized_oracle())
-def q_margin_c_sized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The C-sizing decision, certified: the smallest measured
-    multiplier clearing the 0.85 floor, AND where the PRODUCTION rule
-    (size_adc_shortlist's mult 2 — what every registered PQ composite
-    actually runs) sits on the same measured curve. prod_meets_target
-    is the no-drift contract of VERDICT r7 item 4: the composites keep
-    reading size_adc_shortlist (their oracles encode that exact rule),
-    and this row — re-measured every round — certifies that the frozen
-    production point still clears the floor on each driver corpus,
-    while sized_mult documents the cheapest-safe alternative
-    (measured: mult 1 suffices at both driver scales; the 60× probe is
-    where the gap between sized and production narrows)."""
-    rows = _pq_c_curve_rows(spark, sf_dir)
-    hit = next((r for r in rows if r[4] >= _MARGIN_PQ_FLOOR_X10K), None)
-    prod = next(r for r in rows if r[0] == 2)
-    out = (
-        (
-            _MARGIN_PQ_FLOOR_X10K,
-            hit[0] if hit else None,
-            hit[1] if hit else None,
-            hit is not None,
-            2,
-            prod[1],
-            prod[4],
-            prod[4] >= _MARGIN_PQ_FLOOR_X10K,
-        ),
-    )
-    return local_rows_df(spark, 
-        out,
-        "target_x10k bigint, sized_mult bigint, sized_c bigint, "
-        "reached boolean, prod_mult bigint, prod_c bigint, "
-        "prod_recall_x10k bigint, prod_meets_target boolean",
     )
 
 

@@ -15,6 +15,8 @@ import re
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+#: Driver heap when SPARK_GRAFT_DRIVER_MEM is unset.
+DEFAULT_DRIVER_MEM = "16g"
 SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 INITIAL_PARTITIONS = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 DAEMON_MODULE = "spark.python.daemon.module"
@@ -72,7 +74,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", DEFAULT_DRIVER_MEM))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

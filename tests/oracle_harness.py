@@ -11,11 +11,16 @@ both sides.
 from __future__ import annotations
 
 import math
+import os
+import shutil
+import tempfile
+from contextlib import contextmanager
 from datetime import date, datetime
 
 import duckdb
 
 from dais2021imageprocessingondeltalake_spark.catalog import TABLES
+from dais2021imageprocessingondeltalake_spark.session import DEFAULT_DRIVER_MEM
 
 
 #: DuckDB result types with no Spark equivalent. The driver's value hash
@@ -36,29 +41,68 @@ _NON_SPARK_TYPES = {
 }
 
 
-def run_oracle(sql: str, sf_dir: str):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    rel = con.sql(sql)
-    cols = list(rel.columns)
-    bad_types = [
-        f"{c}: {t}"
-        for c, t in zip(cols, (str(t).upper() for t in rel.types))
-        if t in _NON_SPARK_TYPES
-    ]
-    if bad_types:
+def phys_mem_bytes() -> int:
+    """Physical memory of the host."""
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def mem_bytes(size: str) -> int:
+    """Bytes of a JVM-style size: "16g", "512m", "64k" or plain bytes."""
+    size = size.strip().lower()
+    unit = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}.get(size[-1:])
+    return int(float(size[:-1]) * unit) if unit else int(size)
+
+
+def duckdb_memory_limit(phys_bytes: int, heap_bytes: int) -> int:
+    """Bytes one oracle connection may hold: physical memory less the
+    Spark driver heap and 2 GiB for the rest of both processes, kept
+    between a quarter and a half of physical memory. DuckDB's own
+    default (80 % of RAM) let an oracle and the Spark heap together run
+    a 15 GB host out of memory, and the kernel killed the whole sweep."""
+    spare = phys_bytes - heap_bytes - (2 << 30)
+    return min(phys_bytes // 2, max(phys_bytes // 4, spare))
+
+
+@contextmanager
+def oracle_connection(sf_dir: str):
+    """A DuckDB connection with every corpus table as a view, bounded to
+    duckdb_memory_limit (the heap is SPARK_GRAFT_DRIVER_MEM, or
+    get_spark's default) and spilling to its own temp_directory, which
+    is removed on close. An oracle past the bound raises
+    duckdb.OutOfMemoryException, so a sweep records it as failed."""
+    heap = mem_bytes(os.environ.get("SPARK_GRAFT_DRIVER_MEM", DEFAULT_DRIVER_MEM))
+    limit = duckdb_memory_limit(phys_mem_bytes(), heap)
+    tmp = tempfile.mkdtemp(prefix="oracle-duckdb-")
+    con = duckdb.connect(
+        config={"memory_limit": f"{limit >> 20}MiB", "temp_directory": tmp}
+    )
+    try:
+        for t in TABLES:
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+            )
+        yield con
+    finally:
         con.close()
-        raise AssertionError(
-            "oracle result types not Spark-representable (the driver's "
-            f"type-sensitive hash WILL mismatch): {bad_types}; wrap the "
-            "offending expression in CAST(... AS BIGINT) in the oracle SQL"
-        )
-    rows = rel.fetchall()
-    con.close()
-    return cols, rows
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def run_oracle(sql: str, sf_dir: str):
+    with oracle_connection(sf_dir) as con:
+        rel = con.sql(sql)
+        cols = list(rel.columns)
+        bad_types = [
+            f"{c}: {t}"
+            for c, t in zip(cols, (str(t).upper() for t in rel.types))
+            if t in _NON_SPARK_TYPES
+        ]
+        if bad_types:
+            raise AssertionError(
+                "oracle result types not Spark-representable (the driver's "
+                f"type-sensitive hash WILL mismatch): {bad_types}; wrap the "
+                "offending expression in CAST(... AS BIGINT) in the oracle SQL"
+            )
+        return cols, rel.fetchall()
 
 
 def _norm(v):

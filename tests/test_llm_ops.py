@@ -4,6 +4,8 @@ duplicates, ANN recall vs the brute-force baseline."""
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,6 +14,21 @@ from dais2021imageprocessingondeltalake_spark.operators import dedup as D
 from dais2021imageprocessingondeltalake_spark.operators import similarity as SIM
 
 from .conftest import SF_DIR
+
+
+@contextlib.contextmanager
+def _stored_ladder(QL, sf_dir, family, rows):
+    """Serve `rows` as the stored `family` ladder of `sf_dir` inside the
+    block; the store entry it replaced is put back after."""
+    key = QL._store_key(sf_dir, family)
+    old = QL._LADDER_STORE.pop(key, None)
+    QL._LADDER_STORE[key] = rows
+    try:
+        yield
+    finally:
+        del QL._LADDER_STORE[key]
+        if old is not None:
+            QL._LADDER_STORE[key] = old
 
 
 def test_minhash_lsh_recall_vs_exact(spark):
@@ -1638,15 +1655,12 @@ class TestIvfadc:
         assert got == (None, False, "residual_ivfadc,m32")
         assert (row["sized_kind"], row["reached"], row["route"]) == got
         # the sized MINER refuses loudly, routing to the escapes,
-        # BEFORE any mine runs (cache-injected saturating ladder)
-        QL._IVFADC_CURVE_CACHE["__sat__"] = sat
-        try:
+        # BEFORE any mine runs (a saturating ladder served by the store)
+        with _stored_ladder(QL, SF_DIR, "ivfadc", sat):
             with pytest.raises(
                 SIM.LadderSaturatedError, match="residual_ivfadc,m32"
             ):
-                QL._ivfadc_sized_mine(spark, "__sat__", residual=False)
-        finally:
-            del QL._IVFADC_CURVE_CACHE["__sat__"]
+                QL._ivfadc_sized_mine(spark, SF_DIR, residual=False)
 
     def test_routed_oracle_composition(self):
         """The r11 res-core split must be lossless and the combined
@@ -1669,8 +1683,8 @@ class TestIvfadc:
     def test_routed_miner_executes_the_route(self, spark):
         """VERDICT r10 item 2: the routed composite must EXECUTE the
         route the refusal emits, not just print it. Leg certification
-        by cache injection: (a) flat ladder saturated → the miner
-        follows 'residual_ivfadc' — rows identical to the residual
+        by ladders injected into the store: (a) flat ladder saturated →
+        the miner follows 'residual_ivfadc' — rows identical to the residual
         sized mine, provenance says so; (b) BOTH ladders saturated →
         the m=32 code-budget escape executes — rows identical to the
         m32 flat-ADC chain; (c) nothing saturated → route='flat', rows
@@ -1699,9 +1713,7 @@ class TestIvfadc:
         assert [r[:-1] for r in got] == flat_rows
 
         # (a) flat saturated, residual live → residual leg executes
-        old_flat = QL._IVFADC_CURVE_CACHE.get(SF_DIR)
-        QL._IVFADC_CURVE_CACHE[SF_DIR] = sat
-        try:
+        with _stored_ladder(QL, SF_DIR, "ivfadc", sat):
             res_rows = key(
                 QL._ivfadc_sized_mine(spark, SF_DIR, residual=True)
             )
@@ -1710,24 +1722,12 @@ class TestIvfadc:
             assert [r[:-1] for r in got] == res_rows
 
             # (b) both saturated → m32 escape executes
-            old_res = QL._IVFADC_RES_CURVE_CACHE.get(SF_DIR)
-            QL._IVFADC_RES_CURVE_CACHE[SF_DIR] = sat
-            try:
+            with _stored_ladder(QL, SF_DIR, "ivfadc_res", sat):
                 m32_rows = key(QL._m32_flat_mine(spark, SF_DIR))
                 got = key(routed(spark, SF_DIR))
                 assert {r[-1] for r in got} == {"m32"}
                 assert [r[:-1] for r in got] == m32_rows
                 assert m32_rows  # the escape actually mines pairs
-            finally:
-                if old_res is None:
-                    del QL._IVFADC_RES_CURVE_CACHE[SF_DIR]
-                else:
-                    QL._IVFADC_RES_CURVE_CACHE[SF_DIR] = old_res
-        finally:
-            if old_flat is None:
-                del QL._IVFADC_CURVE_CACHE[SF_DIR]
-            else:
-                QL._IVFADC_CURVE_CACHE[SF_DIR] = old_flat
 
         # (d) DuckDB replays the cascade decision over the same
         # injected ladders: flat-saturated/res-live → residual leg;
@@ -1737,10 +1737,9 @@ class TestIvfadc:
         )
         live = ", ".join(
             f"('{k}', {r}, {np_}, {rec})"
-            for k, r, np_, _, _, _, rec in QL._IVFADC_RES_CURVE_CACHE.get(
-                SF_DIR
+            for k, r, np_, _, _, _, rec in QL._ivfadc_ladder_exec(
+                spark, SF_DIR, residual=True
             )
-            or QL._ivfadc_ladder_exec(spark, SF_DIR, residual=True)
         )
         for res_vals, want in ((live, "residual_ivfadc"), (vals, "m32")):
             got_route = duckdb.sql(
@@ -2723,6 +2722,55 @@ class TestLogregGrid:
             logreg_grid_search(feats, ["chars_k"], "y", lrs=[1, 2.5])
         with pytest.raises(ValueError):
             logreg_grid_search(feats, ["chars_k"], "y", lrs=[])
+
+
+def test_ladder_store_misses_after_in_place_rewrite(spark, tmp_path):
+    """The ladder store is keyed on the embeddings files' fingerprint
+    (path, size, mtime), not on the sf_dir string: a corpus rewritten in
+    place under the same path must be measured again, never served the
+    old ladder."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from dais2021imageprocessingondeltalake_spark import queries_llm as QL
+
+    path = tmp_path / "embeddings.parquet"
+    shutil.copy(f"{SF_DIR}/embeddings.parquet", path)
+    curve = lambda: sorted(
+        tuple(r) for r in QL.q_margin_ivf_curve(spark, str(tmp_path)).collect()
+    )
+    first = curve()
+    pq.write_table(pq.read_table(path).slice(0, 300), path)
+    second = curve()
+    del QL._LADDER_STORE[QL._store_key(str(tmp_path), "ivf")]
+    assert second == curve()  # a cold-store measurement
+    assert second != first
+
+
+def test_ladder_store_is_the_only_module_cache():
+    """Every measured ladder and its fitted assets live in the one
+    store: queries_llm.py binds no other module-level dict (a new sizing
+    axis is rungs plus a per-rung mine through _measured_ladder, never
+    a new cache)."""
+    import ast
+    from pathlib import Path
+
+    from dais2021imageprocessingondeltalake_spark import queries_llm as QL
+
+    tree = ast.parse(Path(QL.__file__).read_text())
+    dicts = [
+        ast.unparse(node.targets[0] if isinstance(node, ast.Assign) else node.target)
+        for node in tree.body
+        if isinstance(node, (ast.Assign, ast.AnnAssign))
+        and (
+            isinstance(node.value, (ast.Dict, ast.DictComp))
+            or isinstance(node.value, ast.Call)
+            and ast.unparse(node.value.func).split(".")[-1]
+            in ("dict", "defaultdict", "OrderedDict")
+        )
+    ]
+    assert dicts == ["_LADDER_STORE"]
 
 
 @pytest.mark.slow

@@ -14,12 +14,18 @@ Usage:
 Scale-dependent divergence is real (e.g. DuckDB's segment-tree window sums
 diverge in the last ulp only on sf0.1's longer frames), so the sf0.1 leg is
 not optional for a clean bill.
+
+The Spark session is sized to the host (session_size) unless
+SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM are set, and every DuckDB oracle
+runs under tests.oracle_harness's memory bound, so one plain run fits the
+machine; an oracle past its bound is a failed entry.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import subprocess
 import sys
 import time
@@ -28,6 +34,32 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from tests.oracle_harness import compare, phys_mem_bytes, run_oracle  # noqa: E402
+
+
+def session_size(env, cpus: int, phys_bytes: int) -> dict[str, str]:
+    """SPARK_GRAFT_CPUS and SPARK_GRAFT_DRIVER_MEM for the sweep's
+    session: the values in `env` where set, else the `cpus` this process
+    may run on and a quarter of physical memory in whole GiB (1g-16g).
+    get_spark's own defaults (local[32], 16g) assume a large host."""
+    heap_gib = min(16, max(1, (phys_bytes // 4) >> 30))
+    return {
+        "SPARK_GRAFT_CPUS": env.get("SPARK_GRAFT_CPUS") or str(cpus),
+        "SPARK_GRAFT_DRIVER_MEM": env.get("SPARK_GRAFT_DRIVER_MEM") or f"{heap_gib}g",
+    }
+
+
+def check(spec, spark, sf_dir: str):
+    """Empty when the query equals its oracle bit-exactly, else what
+    differs. A crash — an oracle past its DuckDB memory bound included —
+    is a failure, not a skip."""
+    try:
+        return compare(
+            spec.fn(spark, sf_dir), *run_oracle(spec.oracle, sf_dir), rel_tol=0.0
+        )
+    except Exception as exc:
+        return f"error: {exc}"
 
 
 def main() -> int:
@@ -40,8 +72,9 @@ def main() -> int:
 
     from dais2021imageprocessingondeltalake_spark import queries_all as q
     from dais2021imageprocessingondeltalake_spark.session import get_spark
-    from tests.oracle_harness import compare, run_oracle
 
+    size = session_size(os.environ, len(os.sched_getaffinity(0)), phys_mem_bytes())
+    os.environ.update(size)
     spark = get_spark(shuffle_partitions=8)
     names = args.queries or sorted(n for n, s in q.REGISTRY.items() if s.oracle)
     unknown = [n for n in names if n not in q.REGISTRY or not q.REGISTRY[n].oracle]
@@ -61,6 +94,8 @@ def main() -> int:
         "ts": datetime.now(timezone.utc).isoformat(timespec="seconds"),
         "git": git,
         "rel_tol": 0.0,
+        "cpus": int(size["SPARK_GRAFT_CPUS"]),
+        "driver_mem": size["SPARK_GRAFT_DRIVER_MEM"],
         "n_queries": len(names),
         "scales": {},
         "ok": True,
@@ -70,13 +105,7 @@ def main() -> int:
         t0 = time.time()
         failed = []
         for n in names:
-            spec = q.REGISTRY[n]
-            try:
-                mismatch = compare(
-                    spec.fn(spark, sf_dir), *run_oracle(spec.oracle, sf_dir), rel_tol=0.0
-                )
-            except Exception as exc:  # a crash is a failure, not a skip
-                mismatch = f"error: {exc}"
+            mismatch = check(q.REGISTRY[n], spark, sf_dir)
             if mismatch:
                 failed.append({"query": n, "why": str(mismatch)})
                 print(f"FAIL {scale} {n}: {mismatch}", file=sys.stderr, flush=True)
