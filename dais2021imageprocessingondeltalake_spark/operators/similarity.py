@@ -26,6 +26,7 @@ from __future__ import annotations
 import itertools
 import math
 import random
+from functools import partial, reduce
 
 import pandas as pd
 
@@ -278,15 +279,7 @@ def lsh_ann_topk(
     vec_d = _to_double(F.col(vec_col))
     bucketed = df.withColumn("bucket", lsh_bucket(vec_d, planes))
     cand = bucketed.filter(F.col("bucket").isin(probes))
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    sim = cosine(_to_double(F.col(vec_col)), q)
-    if round_dp is not None:
-        sim = F.round(sim, round_dp)
-    return (
-        cand.select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return cosine_topk(cand, query_vec, k, id_col, vec_col, round_dp)
 
 
 def ivf_fit_centroids(
@@ -378,13 +371,7 @@ def ivf_probe_partitioned(
     cand = spark.read.parquet(path).filter(
         F.col("centroid_id").isin([int(p) for p in probes])
     )
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    sim = cosine(_to_double(F.col(vec_col)), q)
-    return (
-        cand.select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return cosine_topk(cand, query_vec, k, id_col, vec_col)
 
 
 def ivf_ann_topk(
@@ -407,13 +394,7 @@ def ivf_ann_topk(
     probes = sorted(range(len(centroids)), key=lambda i: qd[i])[:n_probe]
     assigned = ivf_assign(df, centroids, vec_col)
     cand = assigned.filter(F.col("centroid_id").isin([int(p) for p in probes]))
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    sim = cosine(_to_double(F.col(vec_col)), q)
-    return (
-        cand.select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return cosine_topk(cand, query_vec, k, id_col, vec_col)
 
 
 def embedding_near_dup(
@@ -595,15 +576,7 @@ def quantized_ann_topk(
         .orderBy(F.col("coarse_score").desc(), F.col(id_col))
         .limit(shortlist)
     )
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    sim = cosine(_to_double(F.col(vec_col)), q)
-    if round_dp is not None:
-        sim = F.round(sim, round_dp)
-    return (
-        short.select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return cosine_topk(short, query_vec, k, id_col, vec_col, round_dp)
 
 
 def label_centroids(
@@ -1073,13 +1046,7 @@ def rp_ann_topk(
         .orderBy(F.col("coarse_sim").desc(), F.col(id_col))
         .limit(shortlist)
     )
-    q_full = F.array(*[F.lit(float(x)) for x in query_vec])
-    fine = F.round(cosine(_to_double(F.col(vec_col)), q_full), round_dp)
-    return (
-        short.select(F.col(id_col), fine.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return cosine_topk(short, query_vec, k, id_col, vec_col, round_dp)
 
 
 # --------------------------------------------------------------------------
@@ -1408,27 +1375,7 @@ def margin_mine_lsh(
             vec_col=vec_col,
             seed=seed,
         )
-        vecs = df.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
-        cos = _cosine_pairs_arrow(round_dp)
-        scored = (
-            pairs.join(
-                vecs.select(
-                    F.col("_vid").alias("probe_id"), F.col("_v").alias("_pv")
-                ),
-                "probe_id",
-            )
-            .join(
-                vecs.select(
-                    F.col("_vid").alias("nbr_id"), F.col("_v").alias("_nv")
-                ),
-                "nbr_id",
-            )
-            .select(
-                "probe_id",
-                "nbr_id",
-                cos(F.col("_pv"), F.col("_nv")).alias("s"),
-            )
-        )
+        scored = _exact_rerank_pairs(pairs, df, df, id_col, vec_col, round_dp)
         return _margin_top2(scored, min_margin_x10k)
 
     planes = _hyperplanes(dim, n_planes, seed)
@@ -1699,19 +1646,7 @@ def margin_mine_ivf(
     # exactly the partitioning _margin_top2's window needs, so its
     # Exchange is elided — one tiny shuffle buys a wide rerank for free.
     cand = cand.repartition(F.col("probe_id"))
-    vecs = df.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
-    cos = _cosine_pairs_arrow(round_dp)
-    scored = (
-        cand.join(
-            vecs.select(F.col("_vid").alias("probe_id"), F.col("_v").alias("_pv")),
-            "probe_id",
-        )
-        .join(
-            vecs.select(F.col("_vid").alias("nbr_id"), F.col("_v").alias("_nv")),
-            "nbr_id",
-        )
-        .select("probe_id", "nbr_id", cos(F.col("_pv"), F.col("_nv")).alias("s"))
-    )
+    scored = _exact_rerank_pairs(cand, df, df, id_col, vec_col, round_dp)
     return _margin_top2(scored, min_margin_x10k)
 
 
@@ -2296,7 +2231,7 @@ def adc_shortlist_pairs(
     shortlist: int | None,
     dim: int,
     m: int = 16,
-    group_col: str = "label",
+    group_col: str | None = "label",
     id_col: str = "vec_id",
     vec_col: str = "nv",
     round_dp: int = 6,
@@ -2306,62 +2241,76 @@ def adc_shortlist_pairs(
     index_df: DataFrame | None = None,
     cross_group_only: bool = True,
     validate_coverage: bool = False,
+    home_df: DataFrame | None = None,
+    cells_col: str = "cells",
+    anchors_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Per-probe top-`shortlist` CROSS-GROUP candidates by ADC inner
-    product over the compressed codes — the quadratic scan of margin
-    mining run in the compressed domain. Returns (probe_id, nbr_id).
+    """Per-probe top-`shortlist` candidates by ADC inner product over
+    the compressed codes — the quadratic scan of margin mining and the
+    kNN joins run in the compressed domain. Returns (probe_id, nbr_id).
+    The flat PQ scan and the IVF-pruned (IVFADC) scan are one kernel:
+    the flat index is the one-cell case, where every index row is in
+    cell 0 and every probe probes it.
 
-    `validate_coverage=True` asserts the codes exactly cover the index
-    rows before scanning (ADVICE r7): the codes⋈index join is INNER, so
-    a STALE persisted index — `codes_df` missing newly-ingested
-    `index_df` rows, or carrying ids deleted from it — would otherwise
-    silently scan only the intersection. The persisted-asset callers
-    (margin_mine_pq_xcorpus / pq_knn_join with a loaded pq_index) turn
-    this on; in-query-derived codes are covering by construction and
-    skip the two count jobs.
-
-    `cross_group_only=False` switches the exclusion mask from
-    same-group to same-ID (the general batched-ANN contract:
-    pq_knn_join's queries want neighbors from EVERY group, and only a
-    vector's own row is never its neighbor).
+    IVF pruning (`home_df` given — (id, cell), each index row's rank-1
+    coarse cell): `df_norm` also carries `cells_col`, the ARRAY of the
+    probe's probed cells (assign_cells_ranked sliced to nprobe;
+    membership only), and a probe scores only the codes whose home cell
+    it probes — ~nprobe/k of the flat Θ(N²·m) compute (FAISS's IVFADC,
+    Jégou-Douze-Schmid TPAMI 2011 §V). RESIDUAL mode (`anchors_df` given
+    — (cell, av) from cell_anchors): `codes_df` then holds PQ codes of
+    r = nv − av(home), and the scan scores ⟨q, av(cell)⟩ + ⟨q, r̂⟩
+    (Jégou §III). The anchor term accumulates sequentially over the dim
+    coordinates and seeds the per-cell ADC total BEFORE the m LUT
+    partials, so an oracle's left-to-right ``qa + lut_0 + … +
+    lut_{m-1}`` fold replays every score; anchors ride in the index
+    broadcast (k·dim doubles).
 
     `index_df` (default: df_norm itself) supplies the (id, group) rows
-    the codes describe — pass a DIFFERENT frame for the asymmetric
-    cross-corpus shape (new batch probes a precomputed reference index,
-    margin_mine_pq_xcorpus), where the probe side never appears in the
-    index at all.
+    the codes describe — a DIFFERENT frame for the asymmetric shapes
+    (a new batch or query set probing a standing index).
+    `cross_group_only=False` switches the exclusion mask from
+    same-group to same-ID (general batched ANN: only a vector's own row
+    is never its neighbor). `validate_coverage=True` asserts the codes
+    (and home cells) exactly cover the index rows before scanning
+    (ADVICE r7): the joins are INNER, so a STALE persisted index would
+    otherwise silently scan only the intersection; in-query codes are
+    covering by construction and skip the three count jobs.
 
     Index residency contract (how FAISS deploys ADC): the CODES —
-    m one-byte codes + id + group per vector, 16-30x smaller than the
-    raw corpus — are collected once and broadcast to every executor;
-    each probe partition then scans the in-RAM index with numpy at
-    memory bandwidth, emitting C id-pairs per probe. This is the ONLY
-    corpus-sized collect in the engine and it is guarded: the build
-    raises when the index would exceed `max_index_bytes` (default 1 GiB
-    ~ 4e7 vectors at m=16).
+    m one-byte codes + id + group (+ cell) per vector, 16-30x smaller
+    than the raw corpus — are collected once, sorted by (cell, id) on
+    the driver so each cell is one contiguous id-ascending slice (the
+    inverted-file layout as slice offsets into one array), and
+    broadcast; each probe partition scans the in-RAM index with numpy
+    at memory bandwidth. This is the ONLY corpus-sized collect in the
+    engine and it is guarded: the build raises when the index would
+    exceed `max_index_bytes` (default 1 GiB ~ 4e7 vectors at m=16).
+    `shortlist=None` sizes C = size_adc_shortlist(|index|) from the
+    rows this build collects anyway (no separate count job).
 
     Past the residency budget, pass `n_shards > 1` — the TESTED
-    shard-and-union path, not just a documented escape hatch: the codes
-    split into n deterministic hash shards (pmod(xxhash64(id), n)),
-    each shard builds its own guarded in-RAM index and scans the probes
-    independently (per-shard top-C WITH the rounded ADC sims), and one
-    bounded window (<= n·C rows per probe) re-selects the GLOBAL top-C
-    by the same (adc desc, nbr_id) total order. Bit-identical to the
-    unsharded scan — every global top-C pair ranks <= C within its own
-    shard, so the union contains it, and the window's order is the
-    scan's — which is what lets one oracle certify both paths
-    (tests/test_llm_ops.py::test_sharded_scan_equals_unsharded). The
-    raw-vector corpus is never collected anywhere.
+    shard-and-union path: the index rows split into n deterministic
+    hash shards (pmod(xxhash64(id), n)), each shard builds its own
+    guarded in-RAM index and scans the probes independently (per-shard
+    top-C WITH the rounded ADC sims), and one bounded window (<= n·C
+    rows per probe) re-selects the GLOBAL top-C by the same (adc desc,
+    nbr_id) total order. Bit-identical to the unsharded scan — every
+    global top-C pair ranks <= C within its own shard, so the union
+    contains it — which is what lets one oracle certify both paths.
+    Id shards split any cell, so a single cell over the budget still
+    builds. The raw-vector corpus is never collected anywhere.
 
     Determinism (oracle-replayable): per-sub LUT inner products
     accumulate sequentially over the sub_dim coordinates (the
     _pq_sumsq_seq convention — no BLAS reassociation/FMA), the m
     per-sub partials add in ascending sub order, the total rounds to
-    `round_dp` BEFORE ranking, and ties break to the LOWEST nbr_id
-    (stable argsort over id-ascending columns). The neighbor axis is
-    scanned in `nbr_chunk` slices with a running top-C merge — chunking
-    cannot change the result because the ranking is a total order and
-    each global top-C element survives its own chunk's local top-C."""
+    `round_dp` BEFORE ranking, and ties break to the LOWEST nbr_id. The
+    neighbour axis of each cell is scanned in `nbr_chunk` slices and
+    every slice's local top-C merges into the probe's running top-C by
+    (adc desc, nbr_id) — chunking and cell order cannot change the
+    result because the ranking is a total order and each global top-C
+    element survives its own slice's local top-C."""
     import numpy as np
 
     if shortlist is not None and shortlist < 1:
@@ -2376,187 +2325,182 @@ def adc_shortlist_pairs(
     books = _codebook_matrices(codebook.collect())
     code_mats = [books[j][1] for j in range(m)]  # k_codes x sub_dim each
     spark = df_norm.sparkSession
-
+    pruned = home_df is not None
     index_src = index_df if index_df is not None else df_norm
-    # group_col=None (general ANN, cross_group_only=False): neither side
-    # needs a group column — the index carries a constant placeholder
-    grp_expr = (
-        F.col(group_col).alias("__g")
-        if group_col is not None
-        else F.lit("").alias("__g")
-    )
-    indexed = codes_df.join(
-        index_src.select(F.col(id_col), grp_expr), id_col
-    ).select(id_col, "__g", "codes")
+    # group_col=None (general ANN): the index carries a constant group
+    grp = F.col(group_col) if group_col is not None else F.lit("")
+    indexed = codes_df.join(index_src.select(F.col(id_col), grp.alias("__g")), id_col)
+    if pruned:
+        cells = home_df.select(F.col(id_col), F.col("cell").alias("__cell"))
+        indexed = indexed.join(cells, id_col)
+    else:
+        indexed = indexed.withColumn("__cell", F.lit(0))
+    indexed = indexed.select(id_col, "__g", "__cell", "codes")
     if validate_coverage:
-        # staleness guard: ids must match EXACTLY in both directions —
-        # |codes| == |index| == |codes ⋈ index| (ids are unique on both
-        # sides by the pq_encode/table contracts, so three counts suffice)
-        n_codes = codes_df.count()
-        n_index = index_src.count()
-        n_joined = indexed.count()
+        # ids are unique on every side (pq_encode/table contracts), so
+        # |codes| == |index| == |codes ⋈ index (⋈ home)| is exact cover
+        n_codes, n_index, n_joined = codes_df.count(), index_src.count(), indexed.count()
         if not (n_codes == n_index == n_joined):
             raise ValueError(
-                f"stale PQ index: codes cover {n_joined} of {n_index} index "
-                f"rows ({n_codes} code rows) — re-encode the index "
-                "(pq_index_save) so codes and index ids match exactly. If "
-                "re-encoding does not fix it, the index table contains "
-                "zero-norm vectors (normalize_rounded drops them by "
-                "contract) — filter those rows out of the index first"
+                f"stale {'IVFADC' if pruned else 'PQ'} index: codes cover "
+                f"{n_joined} of {n_index} index rows ({n_codes} code rows) — "
+                "rebuild the persisted assets (codebook, codes, and for IVFADC "
+                "the quantizer, home cells and anchors) on the current index "
+                "table so ids match exactly. If rebuilding does not fix it, the "
+                "index table contains zero-norm vectors (normalize_rounded drops "
+                "them by contract) — filter those rows out of the index first"
             )
-    if n_shards > 1:
-        # the shard loop filters+collects this join once PER shard — pin
-        # it so the codes join and its upstream compute run once
-        indexed = indexed.localCheckpoint()
+    anchor_map = None
+    if anchors_df is not None:
+        anchor_map = {
+            int(r["cell"]): np.asarray(r["av"], dtype=np.float64)
+            for r in anchors_df.collect()
+        }
 
     def build_index(sub: DataFrame):
-        # the compressed index: (nbr_id, nbr_grp, m codes), id-ascending
-        # so column order == id order and stable argsort ties break
-        # low-id. The sort runs DRIVER-side over the already-collected
-        # rows (r12): a cluster-side orderBy+collect pays a range-
-        # partitioning sampling pass + total-sort exchange over the codes
-        # join for rows that are headed to the driver anyway — the
-        # Python sort on the bounded (max_index_bytes-guarded) row set is
-        # the same total order for free.
-        idx_rows = sorted(sub.collect(), key=lambda r: r[id_col])
-        n_idx = len(idx_rows)
-        idx_bytes = n_idx * (m + 16)
+        # the inverted file, sorted DRIVER-side (r12): a cluster-side
+        # orderBy+collect pays a sampling pass + total-sort exchange for
+        # rows headed to the driver anyway
+        rows = sub.collect()
+        n_idx = len(rows)
+        idx_bytes = n_idx * (m + (24 if pruned else 16))
         if idx_bytes > max_index_bytes:
             raise ValueError(
                 f"ADC index would be ~{idx_bytes} bytes for {n_idx} vectors at "
                 f"m={m}, over the {max_index_bytes} residency budget — raise "
                 "n_shards (the tested shard-and-union path, see docstring)"
             )
-        nbr_ids = np.array([r[id_col] for r in idx_rows], dtype=np.int64)
-        nbr_grps = np.array([r["__g"] for r in idx_rows])
-        nbr_codes = (
-            np.array([r["codes"] for r in idx_rows], dtype=np.int64)
+        ids = np.array([r[id_col] for r in rows], dtype=np.int64)
+        cells = np.array([r["__cell"] for r in rows], dtype=np.int64)
+        order = np.lexsort((ids, cells))
+        grps = np.array([rows[i]["__g"] for i in order])
+        codes = np.array([rows[i]["codes"] for i in order], dtype=np.int64)
+        ids, cells, codes = ids[order], cells[order], codes.reshape(n_idx, m)
+        # cell -> (start, end) slice offsets into the sorted arrays
+        bounds = np.flatnonzero(np.diff(cells)) + 1
+        slices = {
+            int(cells[s]): (int(s), int(e))
+            for s, e in zip([0, *bounds], [*bounds, n_idx])
             if n_idx
-            else np.zeros((0, m), dtype=np.int64)
-        )
-        return spark.sparkContext.broadcast((nbr_ids, nbr_grps, nbr_codes))
+        }
+        if anchor_map is not None and set(slices) - set(anchor_map):
+            raise ValueError(
+                "residual IVFADC: anchors_df is missing anchors for occupied "
+                f"cells {sorted(set(slices) - set(anchor_map))[:5]}… — anchors "
+                "must come from the same corpus/home assignment as codes_df"
+            )
+        index = (ids, grps, codes, slices, anchor_map)
+        return spark.sparkContext.broadcast(index), n_idx
 
-    id_type = df_norm.schema[id_col].dataType.simpleString()
-
-    def make_scan(b_index, keep_top):
+    def make_scan(b_index, top):
         def scan(batches):
-            ids_a, grps_a, codes_a = b_index.value
+            ids_a, grps_a, codes_a, slices, anchors = b_index.value
             for pdf in batches:
-                if pdf.empty or len(ids_a) == 0 or keep_top == 0:
+                if pdf.empty or len(ids_a) == 0 or top == 0:
                     continue
-                X = np.asarray(
-                    [np.asarray(e, dtype=np.float64) for e in pdf[vec_col]]
-                )
+                X = np.asarray([np.asarray(e, dtype=np.float64) for e in pdf[vec_col]])
                 pids = pdf[id_col].to_numpy()
-                pgrps = pdf[group_col].to_numpy() if cross_group_only else None
-                # per-sub LUTs, sequential over the sub_dim coords (no BLAS)
+                # masked pairs: same group (mining) or the probe's own row
+                pkey, nkey = (
+                    (pdf[group_col].to_numpy(), grps_a) if cross_group_only else (pids, ids_a)
+                )
                 luts = _adc_luts(X, code_mats, m, sub_dim)
-                best_sims = None
-                best_ids = None
-                for lo in range(0, len(ids_a), nbr_chunk):
-                    hi = min(lo + nbr_chunk, len(ids_a))
-                    adc = np.zeros((X.shape[0], hi - lo), dtype=np.float64)
-                    for j in range(m):
-                        adc += luts[j][:, codes_a[lo:hi, j]]
-                    adc = np.round(adc, round_dp)
-                    if cross_group_only:
-                        # cross-group only (self is same-group → excluded)
-                        adc[pgrps[:, None] == grps_a[None, lo:hi]] = -np.inf
-                    else:
-                        # general ANN: exclude only the probe's own row
-                        adc[pids[:, None] == ids_a[None, lo:hi]] = -np.inf
-                    keep = min(keep_top, hi - lo)
-                    part = np.argsort(-adc, axis=1, kind="stable")[:, :keep]
-                    sims = np.take_along_axis(adc, part, axis=1)
-                    ids = ids_a[lo:hi][part]
-                    if best_sims is None:
-                        best_sims, best_ids = sims, ids
-                    else:
-                        best_sims = np.concatenate([best_sims, sims], axis=1)
-                        best_ids = np.concatenate([best_ids, ids], axis=1)
-                    if best_sims.shape[1] > keep_top:
-                        # running merge: re-rank the union by (-sim, id) —
-                        # stable argsort over id-ascending chunk blocks is
-                        # not id-ordered across blocks, so sort explicitly
-                        order = np.lexsort((best_ids, -best_sims), axis=1)
-                        order = order[:, :keep_top]
-                        best_sims = np.take_along_axis(best_sims, order, axis=1)
-                        best_ids = np.take_along_axis(best_ids, order, axis=1)
-                if best_sims is None:
-                    continue
-                if best_sims.shape[1] > keep_top:
-                    order = np.lexsort((best_ids, -best_sims), axis=1)[:, :keep_top]
-                    best_sims = np.take_along_axis(best_sims, order, axis=1)
-                    best_ids = np.take_along_axis(best_ids, order, axis=1)
-                valid = np.isfinite(best_sims)
-                n_per = valid.sum(axis=1)
+                # cell -> rows of the probes that probe it
+                if pruned:
+                    cell_rows = {}
+                    for i, cl in enumerate(pdf[cells_col]):
+                        for c in cl:
+                            if int(c) in slices:
+                                cell_rows.setdefault(int(c), []).append(i)
+                else:
+                    cell_rows = {c: range(len(pids)) for c in slices}
+                best_s = np.full((len(pids), top), -np.inf)
+                best_i = np.zeros((len(pids), top), dtype=np.int64)
+                for c, rows in cell_rows.items():
+                    rp = np.asarray(rows, dtype=np.int64)
+                    lut_c = [lut[rp] for lut in luts]
+                    if anchors is not None:
+                        # residual: seed with ⟨q, av(cell)⟩, sequential
+                        # over dim (no BLAS), then the LUT partials in
+                        # ascending sub order — the SQL's qa + l0 + …
+                        xs, qa = X[rp], np.zeros(len(rp))
+                        for i in range(dim):
+                            qa += xs[:, i] * anchors[c][i]
+                    c_lo, c_hi = slices[c]
+                    for lo in range(c_lo, c_hi, nbr_chunk):
+                        hi = min(lo + nbr_chunk, c_hi)
+                        if anchors is not None:
+                            adc = np.repeat(qa[:, None], hi - lo, axis=1)
+                        else:
+                            adc = np.zeros((len(rp), hi - lo))
+                        for j in range(m):
+                            adc += lut_c[j][:, codes_a[lo:hi, j]]
+                        adc = np.round(adc, round_dp)
+                        adc[pkey[rp][:, None] == nkey[None, lo:hi]] = -np.inf
+                        # slice top-C: stable argsort over id-ascending
+                        # columns breaks ties to the lowest nbr_id
+                        keep = min(top, hi - lo)
+                        part = np.argsort(-adc, axis=1, kind="stable")[:, :keep]
+                        sims = np.take_along_axis(adc, part, axis=1)
+                        nids = ids_a[lo:hi][part]
+                        if not np.isfinite(best_s[rp]).any():
+                            best_s[rp, :keep], best_i[rp, :keep] = sims, nids
+                            continue
+                        # running merge by (adc desc, nbr_id): -inf (masked
+                        # or empty) slots sort last and are dropped below
+                        s = np.concatenate([best_s[rp], sims], axis=1)
+                        d = np.concatenate([best_i[rp], nids], axis=1)
+                        order = np.lexsort((d, -s), axis=1)[:, :top]
+                        best_s[rp] = np.take_along_axis(s, order, axis=1)
+                        best_i[rp] = np.take_along_axis(d, order, axis=1)
+                valid = np.isfinite(best_s)
                 yield pd.DataFrame(
                     {
-                        "probe_id": np.repeat(pids, n_per),
-                        "nbr_id": best_ids[valid],
-                        "adc": best_sims[valid],
+                        "probe_id": np.repeat(pids, valid.sum(axis=1)),
+                        "nbr_id": best_i[valid],
+                        "adc": best_s[valid],
                     }
                 )
 
         return scan
 
-    # parallelism floor: the scan's wall is (probes/partitions) x N ADC
-    # work per task — a single-file source would otherwise run the whole
-    # compressed-domain scan in ONE task (the _parallelize rationale in
-    # operators/dedup.py)
+    if n_shards > 1:
+        # the shard loop filters+collects this join once PER shard — pin
+        # it so the codes join and its upstream compute run once
+        indexed = indexed.localCheckpoint()
+        if shortlist is None:
+            shortlist = size_adc_shortlist(indexed.count())
+    shard = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards))
+    indexes = [
+        build_index(indexed if n_shards == 1 else indexed.filter(shard == s))
+        for s in range(n_shards)
+    ]
+    if shortlist is None:
+        shortlist = size_adc_shortlist(indexes[0][1])
+    # parallelism floor: the scan's wall is (probes/partitions) x index
+    # work per task. Built AFTER the index: the staleness/anchor raises
+    # fire before any probe-side analysis error
     from .sampling import ensure_min_partitions
 
     probe_cols = [id_col] + ([group_col] if group_col is not None else []) + [vec_col]
     probes = ensure_min_partitions(
-        df_norm.select(*probe_cols),
+        df_norm.select(*probe_cols, *([cells_col] if pruned else [])),
         spark.sparkContext.defaultParallelism,
     )
-    sim_schema = f"probe_id {id_type}, nbr_id {id_type}, adc double"
-
+    id_type = df_norm.schema[id_col].dataType.simpleString()
+    schema = f"probe_id {id_type}, nbr_id {id_type}, adc double"
     if n_shards == 1:
-        b_index = build_index(indexed)
-        if shortlist is None:
-            # shortlist=None defers C = size_adc_shortlist(|index|) to the
-            # index build itself (r12): the symmetric miners sized C from a
-            # separate norm.count() job whose answer is exactly the index
-            # row count this collect just materialized — same N (codes
-            # cover the normalized corpus by construction), one fewer
-            # driver round-trip per mine.
-            shortlist = size_adc_shortlist(len(b_index.value[0]))
-        # keep the FULL shortlist: exclusions (self/same-group) happen by
-        # mask, never by shrinking the cap — a disjoint index (xcorpus,
-        # kNN join) has no self row, so a |index|-1 cap would silently
-        # drop one valid candidate and break the oracle/sharded parity
-        top = min(shortlist, len(b_index.value[0]))
-        return probes.mapInPandas(make_scan(b_index, top), schema=sim_schema).select(
-            "probe_id", "nbr_id"
-        )
-
+        # keep the FULL shortlist: exclusions happen by mask, never by
+        # shrinking the cap (a disjoint index has no self row)
+        b_index, n_idx = indexes[0]
+        scan = make_scan(b_index, min(shortlist, n_idx))
+        return probes.mapInPandas(scan, schema=schema).select("probe_id", "nbr_id")
     from pyspark.sql import Window
 
-    if shortlist is None:
-        # sharded path: one cheap count on the already-checkpointed join
-        # replaces the caller's norm.count() job — same N by the coverage
-        # contract
-        shortlist = size_adc_shortlist(indexed.count())
-    shard_outs = []
-    for s in range(n_shards):
-        sub = indexed.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)) == s
-        )
-        b_index = build_index(sub)
-        # per-shard keep is the FULL shortlist (no n-1 shrink): a pair
-        # with global rank <= C has within-shard rank <= C, so the union
-        # provably contains every global top-C pair
-        shard_outs.append(
-            probes.mapInPandas(make_scan(b_index, shortlist), schema=sim_schema)
-        )
-    union = shard_outs[0]
-    for extra in shard_outs[1:]:
-        union = union.unionByName(extra)
-    # bounded window: <= n_shards * C rows per probe; same total order
-    # as the scan, so the selection is bit-identical to the unsharded
-    # path's top-C
+    union = reduce(
+        DataFrame.unionByName,
+        [probes.mapInPandas(make_scan(b, shortlist), schema=schema) for b, _ in indexes],
+    )
     w = Window.partitionBy("probe_id").orderBy(F.desc("adc"), F.asc("nbr_id"))
     return (
         union.withColumn("__rn", F.row_number().over(w))
@@ -2573,13 +2517,13 @@ def _exact_rerank_pairs(
     vec_col: str = "embedding",
     round_dp: int = 6,
 ) -> DataFrame:
-    """Stage 3 of every shortlist consumer (the margin miners, the kNN
-    join, hard negatives): join candidate (probe_id, nbr_id) pairs back
-    to the RAW vectors on both sides — two id-keyed hash joins — and
-    score with the Arrow-batched cosine. The determinism contract (round
-    to `round_dp` BEFORE any compare; oracles replay
-    round(list_cosine_similarity(...), dp)) lives here once. Returns
-    (probe_id, nbr_id, s)."""
+    """Stage 3 of every shortlist consumer (the LSH, IVF, PQ and IVFADC
+    margin miners, the kNN joins, hard negatives): join candidate
+    (probe_id, nbr_id) pairs back to the RAW vectors on both sides —
+    two id-keyed hash joins — and score with the Arrow-batched cosine.
+    The determinism contract (round to `round_dp` BEFORE any compare;
+    oracles replay round(list_cosine_similarity(...), dp)) lives here
+    once. Returns (probe_id, nbr_id, s)."""
     cos = _cosine_pairs_arrow(round_dp)
     return (
         pairs.join(
@@ -2595,6 +2539,24 @@ def _exact_rerank_pairs(
             "nbr_id",
         )
         .select("probe_id", "nbr_id", cos(F.col("_pv"), F.col("_nv")).alias("s"))
+    )
+
+
+def _knn_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The kNN-join finisher: per query, the top-k reranked pairs by
+    (s desc, nbr_id) as (query_id, base_id, cosine_sim) — the
+    lsh_knn_join output contract."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("probe_id").orderBy(F.col("s").desc(), F.col("nbr_id"))
+    return (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .select(
+            F.col("probe_id").alias("query_id"),
+            F.col("nbr_id").alias("base_id"),
+            F.col("s").alias("cosine_sim"),
+        )
     )
 
 
@@ -2633,43 +2595,20 @@ def margin_mine_pq(
          the N² work happens at memory bandwidth over bytes, never as
          row-per-pair Spark state;
       4. exact re-rank: the C·N shortlist pairs join back to the RAW
-         vectors (two id-keyed hash joins — the margin_mine_lsh stage-3
-         shape) and the Arrow cosine + _margin_top2 pivot apply the
-         margin filter on EXACT 6dp sims — emitted sims are identical
-         to brute force wherever the shortlist contains the true top-2.
+         vectors (_exact_rerank_pairs) and the Arrow cosine +
+         _margin_top2 pivot apply the margin filter on EXACT 6dp sims —
+         emitted sims are identical to brute force wherever the
+         shortlist contains the true top-2.
 
     Every stage rounds at `round_dp` before compares, so an unrolled
     CTE oracle replays fit, encode, LUT, shortlist, and margin filter
     bit-for-bit (queries_llm._margin_mine_pq_oracle)."""
-    norm = normalize_rounded(
-        df, id_col=id_col, vec_col=vec_col, out_col="__nv", round_dp=round_dp
-    ).localCheckpoint()
-    # shortlist=None passes through: adc_shortlist_pairs sizes
-    # C = size_adc_shortlist(|index|) from the index rows it collects
-    # anyway (same N as the old norm.count() job — codes cover norm)
-    book = pq_fit(
-        norm, dim=dim, m=m, k_codes=k_codes, iters=iters,
-        id_col=id_col, vec_col="__nv", round_dp=round_dp,
+    return _adc_join(
+        df, None, partial(_margin_top2, min_margin_x10k=min_margin_x10k),
+        dim=dim, m=m, k_codes=k_codes, iters=iters, shortlist=shortlist,
+        group_col=group_col, id_col=id_col, vec_col=vec_col, round_dp=round_dp,
+        max_index_bytes=max_index_bytes, n_shards=n_shards,
     )
-    codes = pq_encode(norm, book, dim=dim, m=m, id_col=id_col, vec_col="__nv")
-    pairs = adc_shortlist_pairs(
-        norm,
-        book,
-        codes,
-        shortlist=shortlist,
-        dim=dim,
-        m=m,
-        group_col=group_col,
-        id_col=id_col,
-        vec_col="__nv",
-        round_dp=round_dp,
-        max_index_bytes=max_index_bytes,
-        n_shards=n_shards,
-    )
-    scored = _exact_rerank_pairs(
-        pairs, df, df, id_col=id_col, vec_col=vec_col, round_dp=round_dp
-    )
-    return _margin_top2(scored, min_margin_x10k)
 
 
 def margin_mine_pq_xcorpus(
@@ -2703,66 +2642,22 @@ def margin_mine_pq_xcorpus(
 
     Pass `ref_codebook` + `ref_codes` (pq_fit / pq_encode outputs over
     the normalized reference — the persisted index) to skip the in-query
-    rebuild; when only `ref_df` is given both are derived here
-    (flag-identical output, the cross_corpus_near_dup_flags convention).
-    The codebook is fit on the REFERENCE (the asset that exists before
-    the batch arrives); probes need no encoding at all — their LUTs come
-    from the raw normalized vectors. Sizing: C = size_adc_shortlist(
-    |ref|) — the budget scales with the index being probed. Returns the
-    margin_mine schema; an unrolled CTE oracle replays the whole
-    asymmetric pipeline (queries_llm._margin_pq_xcorpus_oracle)."""
-    new_norm = normalize_rounded(
-        new_df, id_col=id_col, vec_col=vec_col, out_col="__nv", round_dp=round_dp
+    rebuild (the codes are then checked to exactly cover `ref_df`);
+    when only `ref_df` is given both are derived here (flag-identical
+    output, the cross_corpus_near_dup_flags convention). The codebook is
+    fit on the REFERENCE (the asset that exists before the batch
+    arrives); probes need no encoding at all — their LUTs come from the
+    raw normalized vectors. Sizing: C = size_adc_shortlist(|ref|) — the
+    budget scales with the index being probed. Returns the margin_mine
+    schema; an unrolled CTE oracle replays the whole asymmetric pipeline
+    (queries_llm._margin_pq_xcorpus_oracle)."""
+    return _adc_join(
+        new_df, ref_df, partial(_margin_top2, min_margin_x10k=min_margin_x10k),
+        dim=dim, m=m, k_codes=k_codes, iters=iters, shortlist=shortlist,
+        group_col=group_col, id_col=id_col, vec_col=vec_col, round_dp=round_dp,
+        max_index_bytes=max_index_bytes, n_shards=n_shards,
+        codebook=ref_codebook, codes=ref_codes,
     )
-    if shortlist is None:
-        shortlist = size_adc_shortlist(ref_df.count())
-    if ref_codebook is None or ref_codes is None:
-        # self-computing path: derive the index in-query (flag-identical
-        # to the persisted-asset path — pinned by tests)
-        ref_norm = normalize_rounded(
-            ref_df, id_col=id_col, vec_col=vec_col, out_col="__nv",
-            round_dp=round_dp,
-        ).localCheckpoint()
-        book = (
-            ref_codebook
-            if ref_codebook is not None
-            else pq_fit(
-                ref_norm, dim=dim, m=m, k_codes=k_codes, iters=iters,
-                id_col=id_col, vec_col="__nv", round_dp=round_dp,
-            )
-        )
-        codes = (
-            ref_codes
-            if ref_codes is not None
-            else pq_encode(
-                ref_norm, book, dim=dim, m=m, id_col=id_col, vec_col="__nv"
-            )
-        )
-    else:
-        # persisted-asset path: the index side never touches normalization
-        # at all — adc_shortlist_pairs only needs (id, group) from it
-        book, codes = ref_codebook, ref_codes
-    pairs = adc_shortlist_pairs(
-        new_norm.select(id_col, group_col, "__nv"),
-        book,
-        codes,
-        shortlist=shortlist,
-        dim=dim,
-        m=m,
-        group_col=group_col,
-        id_col=id_col,
-        vec_col="__nv",
-        round_dp=round_dp,
-        max_index_bytes=max_index_bytes,
-        n_shards=n_shards,
-        index_df=ref_df,
-        # persisted codes can drift from the live ref table — guard it
-        validate_coverage=ref_codes is not None,
-    )
-    scored = _exact_rerank_pairs(
-        pairs, new_df, ref_df, id_col=id_col, vec_col=vec_col, round_dp=round_dp
-    )
-    return _margin_top2(scored, min_margin_x10k)
 
 
 def pq_knn_join(
@@ -2799,68 +2694,12 @@ def pq_knn_join(
     schema changes. `group_col=None` (the default) matches that
     contract exactly: general ANN never reads groups — only a vector's
     own row is excluded."""
-    q_norm = normalize_rounded(
-        queries_df, id_col=id_col, vec_col=vec_col, out_col="__nv",
-        round_dp=round_dp,
-    )
-    if shortlist is None:
-        shortlist = size_adc_shortlist(base_df.count())
-    if base_codebook is None or base_codes is None:
-        base_norm = normalize_rounded(
-            base_df, id_col=id_col, vec_col=vec_col, out_col="__nv",
-            round_dp=round_dp,
-        ).localCheckpoint()
-        book = (
-            base_codebook
-            if base_codebook is not None
-            else pq_fit(
-                base_norm, dim=dim, m=m, k_codes=k_codes, iters=iters,
-                id_col=id_col, vec_col="__nv", round_dp=round_dp,
-            )
-        )
-        codes = (
-            base_codes
-            if base_codes is not None
-            else pq_encode(
-                base_norm, book, dim=dim, m=m, id_col=id_col, vec_col="__nv"
-            )
-        )
-    else:
-        book, codes = base_codebook, base_codes
-    probe_cols = [id_col] + ([group_col] if group_col is not None else []) + ["__nv"]
-    pairs = adc_shortlist_pairs(
-        q_norm.select(*probe_cols),
-        book,
-        codes,
-        shortlist=shortlist,
-        dim=dim,
-        m=m,
-        group_col=group_col,
-        id_col=id_col,
-        vec_col="__nv",
-        round_dp=round_dp,
-        max_index_bytes=max_index_bytes,
-        n_shards=n_shards,
-        index_df=base_df,
-        cross_group_only=False,
-        # persisted codes can drift from the live base table — guard it
-        validate_coverage=base_codes is not None,
-    )
-    from pyspark.sql import Window
-
-    scored = _exact_rerank_pairs(
-        pairs, queries_df, base_df, id_col=id_col, vec_col=vec_col,
-        round_dp=round_dp,
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("s").desc(), F.col("nbr_id"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(
-            F.col("probe_id").alias("query_id"),
-            F.col("nbr_id").alias("base_id"),
-            F.col("s").alias("cosine_sim"),
-        )
+    return _adc_join(
+        queries_df, base_df, partial(_knn_topk, k=k),
+        dim=dim, m=m, k_codes=k_codes, iters=iters, shortlist=shortlist,
+        group_col=group_col, id_col=id_col, vec_col=vec_col, round_dp=round_dp,
+        max_index_bytes=max_index_bytes, n_shards=n_shards,
+        codebook=base_codebook, codes=base_codes, cross_group_only=False,
     )
 
 
@@ -3084,351 +2923,167 @@ def residualize(
     )
 
 
-def _make_ivfadc_scan(
-    b_index,
-    top: int,
-    emit_adc: bool,
-    code_mats,
+def _adc_assets(
+    src: DataFrame,
+    dim: int,
     m: int,
-    sub_dim: int,
-    dim: int,
+    k_codes: int,
+    iters: int,
     id_col: str,
-    group_col: str | None,
     vec_col: str,
-    cells_col: str,
     round_dp: int,
-    cross_group_only: bool,
+    norm: DataFrame | None = None,
+    home: DataFrame | None = None,
+    anchors: DataFrame | None = None,
+    codebook: DataFrame | None = None,
+    codes: DataFrame | None = None,
 ):
-    """mapInPandas kernel for the inverted-file ADC scan — factored out
-    of ivfadc_shortlist_pairs so the unsharded path and every cell shard
-    run literally the same arithmetic (the bit-identity argument of the
-    sharded re-merge rests on this). `emit_adc` adds the rounded ADC
-    score column the sharded union re-merges on; the unsharded path
-    omits it to keep the (probe_id, nbr_id) output contract."""
-    import numpy as np
-    import pandas as pd
-
-    def scan(batches):
-        ids_a, grps_a, codes_a, slices, anchors = b_index.value
-        for pdf in batches:
-            if pdf.empty or len(ids_a) == 0 or top == 0:
-                continue
-            X = np.asarray(
-                [np.asarray(e, dtype=np.float64) for e in pdf[vec_col]]
-            )
-            pids = pdf[id_col].to_numpy()
-            pgrps = pdf[group_col].to_numpy() if cross_group_only else None
-            luts = _adc_luts(X, code_mats, m, sub_dim)
-            # invert: cell -> probe rows that probe it (iteration order is
-            # irrelevant — the final merge is a total order)
-            cell_rows: dict[int, list[int]] = {}
-            for i, cl in enumerate(pdf[cells_col]):
-                for c in cl:
-                    if int(c) in slices:
-                        cell_rows.setdefault(int(c), []).append(i)
-            best: list[list] = [[] for _ in range(len(pids))]
-            for c, rows in cell_rows.items():
-                lo, hi = slices[c]
-                rp = np.array(rows, dtype=np.int64)
-                if anchors is not None:
-                    # residual mode: seed the ADC totals with the probe's
-                    # anchor term ⟨q, av(cell)⟩, accumulated sequentially
-                    # over the dim coordinates (no BLAS reassociation) so
-                    # the oracle's list_sum fold replays it, THEN add the
-                    # m LUT partials in ascending sub order — left-to-right
-                    # exactly like the SQL's qa + l0 + … + l15
-                    a_c = anchors[c]
-                    xs = X[rp]
-                    qc = np.zeros(len(rp), dtype=np.float64)
-                    for i2 in range(dim):
-                        qc += xs[:, i2] * a_c[i2]
-                    adc = np.repeat(qc[:, None], hi - lo, axis=1)
-                else:
-                    adc = np.zeros((len(rp), hi - lo), dtype=np.float64)
-                for j in range(m):
-                    adc += luts[j][rp][:, codes_a[lo:hi, j]]
-                adc = np.round(adc, round_dp)
-                if cross_group_only:
-                    adc[pgrps[rp][:, None] == grps_a[None, lo:hi]] = -np.inf
-                else:
-                    adc[pids[rp][:, None] == ids_a[None, lo:hi]] = -np.inf
-                keep = min(top, hi - lo)
-                part = np.argsort(-adc, axis=1, kind="stable")[:, :keep]
-                sims = np.take_along_axis(adc, part, axis=1)
-                nids = ids_a[lo:hi][part]
-                for t in range(len(rp)):
-                    best[rp[t]].append((sims[t], nids[t]))
-            out_pids, out_nids, out_sims = [], [], []
-            for i, cand in enumerate(best):
-                if not cand:
-                    continue
-                s = np.concatenate([x[0] for x in cand])
-                d = np.concatenate([x[1] for x in cand])
-                keep_n = min(top, len(s))
-                order_i = np.lexsort((d, -s))[:keep_n]
-                s, d = s[order_i], d[order_i]
-                fin = np.isfinite(s)
-                if fin.any():
-                    out_pids.append(np.full(int(fin.sum()), pids[i]))
-                    out_nids.append(d[fin])
-                    out_sims.append(s[fin])
-            if out_pids:
-                out = {
-                    "probe_id": np.concatenate(out_pids),
-                    "nbr_id": np.concatenate(out_nids),
-                }
-                if emit_adc:
-                    out["adc"] = np.concatenate(out_sims)
-                yield pd.DataFrame(out)
-
-    return scan
+    """The PQ side of an ADC index over `src`: normalize (unless `norm`
+    — normalize_rounded's "__nv" — is given) → [cell anchors →
+    residualize, when `home` (id, cell) is given] → pq_fit → pq_encode.
+    Any asset the caller passes is used as it is, so a persisted index
+    skips every stage it holds. Returns (codebook, codes, anchors)."""
+    if codebook is not None and codes is not None and (home is None or anchors is not None):
+        return codebook, codes, anchors
+    if norm is None:
+        norm = normalize_rounded(
+            src, id_col=id_col, vec_col=vec_col, out_col="__nv", round_dp=round_dp
+        ).localCheckpoint()
+    enc, enc_col = norm, "__nv"
+    if home is not None:
+        if anchors is None:
+            anchors = cell_anchors(
+                norm, home, id_col=id_col, vec_col="__nv", round_dp=round_dp
+            ).localCheckpoint()
+        enc, enc_col = residualize(
+            norm.select(id_col, "__nv"), home, anchors,
+            id_col=id_col, vec_col="__nv", out_col="__rv",
+        ), "__rv"
+    if codebook is None:
+        codebook = pq_fit(
+            enc, dim=dim, m=m, k_codes=k_codes, iters=iters,
+            id_col=id_col, vec_col=enc_col, round_dp=round_dp,
+        )
+    if codes is None:
+        codes = pq_encode(enc, codebook, dim=dim, m=m, id_col=id_col, vec_col=enc_col)
+    return codebook, codes, anchors
 
 
-def ivfadc_shortlist_pairs(
-    probes_df: DataFrame,
-    codebook: DataFrame,
-    codes_df: DataFrame,
-    home_df: DataFrame,
-    shortlist: int,
+def _adc_join(
+    probe_df: DataFrame,
+    index_df: DataFrame | None,
+    finish,
     dim: int,
-    m: int = 16,
-    group_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "nv",
-    cells_col: str = "cells",
-    round_dp: int = 6,
-    max_index_bytes: int = 1 << 30,
-    index_df: DataFrame | None = None,
+    m: int,
+    k_codes: int,
+    iters: int,
+    shortlist: int | None,
+    group_col: str | None,
+    id_col: str,
+    vec_col: str,
+    round_dp: int,
+    max_index_bytes: int,
+    n_shards: int,
+    codebook: DataFrame | None = None,
+    codes: DataFrame | None = None,
     cross_group_only: bool = True,
-    anchors_df: DataFrame | None = None,
-    validate_coverage: bool = False,
-    n_cell_shards: int = 1,
+    ivf: bool = False,
+    nprobe: int | None = None,
+    k_cells: int | None = None,
+    centroids: DataFrame | None = None,
+    residual: bool = False,
+    anchors: DataFrame | None = None,
+    home: DataFrame | None = None,
+    norm: DataFrame | None = None,
+    ranked_cells: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF-pruned ADC scan: per-probe top-`shortlist` candidates by ADC
-    inner product, computed ONLY over the codes whose home cell is one
-    of the probe's probed cells. Returns (probe_id, nbr_id) — the
-    adc_shortlist_pairs contract with the Θ(N²·m) flat scan replaced by
-    Θ(Σ_probes Σ_{probed cells} |cell|·m), i.e. ~nprobe/k of the flat
-    compute.
-
-    RESIDUAL mode (`anchors_df` given — (cell, av) from cell_anchors):
-    `codes_df` then holds PQ codes of the RESIDUALS r = nv − av(home),
-    and the scan scores ⟨q, av(cell)⟩ + ⟨q, r̂⟩ — true IVFADC (Jégou
-    §III encodes residuals, not raw vectors; within-cell residuals have
-    far smaller spread, so the same 16-byte budget quantizes finer and
-    recall rises at the SAME scanned-cell fraction). The per-(probe,
-    cell) anchor term accumulates sequentially over the dim coordinates
-    (the _adc_luts convention) and seeds the per-cell ADC accumulation
-    BEFORE the m LUT partials, so an oracle's left-to-right
-    ``qa + lut_0 + … + lut_{m-1}`` fold replays every score; the
-    anchor table rides in the same broadcast as the inverted file
-    (k·dim doubles — KBs next to the codes).
-
-    Inputs: `probes_df` carries (id, group, normalized vec, and
-    `cells_col` — the ARRAY of probed cell ids from assign_cells_ranked
-    sliced to nprobe; membership only, order irrelevant); `home_df`
-    carries (id, cell) — each index row's rank-1 cell. The broadcast
-    index stores codes GROUPED BY CELL (sorted by (cell, id), one
-    contiguous slice per cell), so a probe's scan touches exactly its
-    cells' slices — the inverted-file layout of FAISS's IVFADC, realized
-    as slice offsets into one broadcast array instead of a partitioned
-    table (the index is guarded RAM-resident, same residency contract
-    and `max_index_bytes` raise as the flat scan; past the budget, pass
-    `n_cell_shards > 1` — the CELLS are hash-partitioned across
-    broadcasts, each shard scans whole cells with the full shortlist
-    cap, and the per-shard top-C unions re-merge through the same
-    bounded (adc desc, nbr_id) window as adc_shortlist_pairs' tested
-    n_shards path, bit-identical to the unsharded scan while keeping
-    the cell PRUNING that the flat fallback loses).
-
-    Determinism (oracle-replayable, the adc_shortlist_pairs contract):
-    LUT inner products accumulate sequentially (_adc_luts), per-sub
-    partials add in ascending sub order, ADC totals round to `round_dp`
-    BEFORE ranking, within-cell ties break to the lowest nbr_id (codes
-    id-ascending inside each cell slice + stable argsort), and the
-    cross-cell merge re-sorts the per-cell survivors by the same
-    (adc desc, nbr_id) TOTAL order — so the emitted top-C is identical
-    to ranking the cell-restricted candidate set in one SQL window, and
-    is independent of cell iteration order (each global top-C candidate
-    survives its own cell's local top-C)."""
-    import numpy as np
-
-    if shortlist < 1:
-        raise ValueError(
-            f"ivfadc_shortlist_pairs requires shortlist >= 1, got {shortlist}"
+    """The one pipeline under the six PQ/IVFADC entry points: probes →
+    ADC shortlist (adc_shortlist_pairs) → exact rerank
+    (_exact_rerank_pairs) → `finish` (_margin_top2 or _knn_topk).
+    `index_df=None` mines `probe_df` against itself: one checkpointed
+    normalization serves probes and index, C is sized by the index
+    build, and with `ivf` one full cell ranking gives both the home
+    cells and every probe's cells. Otherwise the index side is
+    `index_df` (its assets built here unless passed in — passed codes
+    are checked to cover it exactly) and C = size_adc_shortlist(
+    |index_df|). `ivf` adds the coarse quantizer: √N cells
+    (kmeans_fit_distributed on the index side), each probe scanning
+    its `nprobe` nearest (default ceil(k_cells/2)); `residual` encodes
+    residuals to per-cell anchors."""
+    self_join = index_df is None
+    base = probe_df if self_join else index_df
+    if self_join:
+        if norm is None:
+            norm = normalize_rounded(
+                probe_df, id_col=id_col, vec_col=vec_col, out_col="__nv",
+                round_dp=round_dp,
+            ).localCheckpoint()
+        probe_norm = norm
+    else:
+        probe_norm = normalize_rounded(
+            probe_df, id_col=id_col, vec_col=vec_col, out_col="__nv",
+            round_dp=round_dp,
         )
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    if cross_group_only and group_col is None:
-        raise ValueError("cross_group_only=True requires a group_col")
-    if n_cell_shards < 1:
-        raise ValueError(f"n_cell_shards must be >= 1, got {n_cell_shards}")
-    sub_dim = dim // m
-    books = _codebook_matrices(codebook.collect())
-    code_mats = [books[j][1] for j in range(m)]
-    spark = probes_df.sparkSession
-
-    index_src = index_df if index_df is not None else probes_df
-    grp_expr = (
-        F.col(group_col).alias("__g")
-        if group_col is not None
-        else F.lit("").alias("__g")
+    n_index = None
+    if not self_join and (shortlist is None or (ivf and k_cells is None)):
+        n_index = index_df.count()
+        if shortlist is None:
+            shortlist = size_adc_shortlist(n_index)
+    probes = probe_norm.select(
+        id_col, *([group_col] if group_col is not None else []), "__nv"
     )
-    indexed = (
-        codes_df.join(index_src.select(F.col(id_col), grp_expr), id_col)
-        .join(home_df.select(F.col(id_col), F.col("cell").alias("__cell")), id_col)
-        .select(id_col, "__g", "__cell", "codes")
-    )
-    if validate_coverage:
-        # staleness guard (the adc_shortlist_pairs convention, ADVICE r7
-        # applied to the cell-pruned family): codes, home cells, and index
-        # ids must match EXACTLY — an inner join would otherwise silently
-        # scan only the intersection of a stale persisted index
-        n_codes = codes_df.count()
-        n_index = index_src.count()
-        n_joined = indexed.count()
-        if not (n_codes == n_index == n_joined):
-            raise ValueError(
-                f"stale IVFADC index: codes+home cover {n_joined} of "
-                f"{n_index} index rows ({n_codes} code rows) — rebuild the "
-                "persisted assets (quantizer, home cells, codes, anchors) "
-                "on the current index table so ids match exactly. If "
-                "rebuilding does not fix it, the index table contains "
-                "zero-norm vectors (normalize_rounded drops them by "
-                "contract) — filter those rows out of the index first"
+    if ivf:
+        if k_cells is None:
+            n = norm.count() if self_join else n_index
+            k_cells = max(1, math.isqrt(max(n - 1, 0)) + 1)
+        if nprobe is None:
+            nprobe = (k_cells + 1) // 2
+        if centroids is None:
+            _, centroids = kmeans_fit_distributed(
+                base, k=k_cells, iters=iters, id_col=id_col, vec_col=vec_col,
+                round_dp=round_dp,
             )
-    anchor_map: dict[int, "np.ndarray"] | None = None
-    if anchors_df is not None:
-        anchor_map = {
-            int(r["cell"]): np.asarray(r["av"], dtype=np.float64)
-            for r in anchors_df.collect()
-        }
-
-    def build_cell_index(sub):
-        """Inverted-file layout for one (sub)set of the CELLS: one
-        collect, rows sorted by (cell, id) so each cell is a contiguous,
-        id-ascending slice of the broadcast arrays. The residency guard
-        applies to what is collected HERE — per cell shard when
-        n_cell_shards > 1 — so sharding is exactly how an index past the
-        budget becomes buildable."""
-        idx_rows = sub.collect()
-        n_idx = len(idx_rows)
-        idx_bytes = n_idx * (m + 24)  # m codes + id/group/cell bookkeeping
-        if idx_bytes > max_index_bytes:
-            raise ValueError(
-                f"IVFADC index (cell shard) would be ~{idx_bytes} bytes for "
-                f"{n_idx} vectors at m={m}, over the {max_index_bytes} "
-                "residency budget — raise n_cell_shards (the cell-sharded "
-                "broadcast path, bit-identical re-merge) or use "
-                "adc_shortlist_pairs(n_shards=...)"
+        if self_join:
+            if ranked_cells is None:
+                ranked_cells = assign_cells_ranked(
+                    base, centroids, n=k_cells, id_col=id_col, vec_col=vec_col,
+                    round_dp=round_dp,
+                ).localCheckpoint()
+            home = ranked_cells.select(F.col(id_col), F.element_at("cells", 1).alias("cell"))
+            probed = F.slice("cells", 1, nprobe)
+        else:
+            if home is None:
+                home = assign_cells_ranked(
+                    base, centroids, n=1, id_col=id_col, vec_col=vec_col,
+                    round_dp=round_dp,
+                ).select(F.col(id_col), F.element_at("cells", 1).alias("cell"))
+            ranked_cells = assign_cells_ranked(
+                probe_df, centroids, n=nprobe, id_col=id_col, vec_col=vec_col,
+                round_dp=round_dp,
             )
-        nbr_ids = np.array([r[id_col] for r in idx_rows], dtype=np.int64)
-        nbr_grps = np.array([r["__g"] for r in idx_rows])
-        nbr_cells = np.array([r["__cell"] for r in idx_rows], dtype=np.int64)
-        nbr_codes = (
-            np.array([r["codes"] for r in idx_rows], dtype=np.int64)
-            if n_idx
-            else np.zeros((0, m), dtype=np.int64)
+            probed = F.col("cells")
+        probes = probes.join(
+            ranked_cells.select(F.col(id_col), probed.alias("__cells")), id_col
         )
-        order = np.lexsort((nbr_ids, nbr_cells))
-        nbr_ids, nbr_grps, nbr_cells, nbr_codes = (
-            nbr_ids[order], nbr_grps[order], nbr_cells[order], nbr_codes[order],
-        )
-        # cell -> (start, end) slice offsets into the sorted arrays
-        cell_slices: dict[int, tuple[int, int]] = {}
-        if n_idx:
-            bounds = np.flatnonzero(np.diff(nbr_cells)) + 1
-            starts = np.concatenate([[0], bounds])
-            ends = np.concatenate([bounds, [n_idx]])
-            cell_slices = {
-                int(nbr_cells[s]): (int(s), int(e)) for s, e in zip(starts, ends)
-            }
-        if anchor_map is not None:
-            missing = set(cell_slices) - set(anchor_map)
-            if missing:
-                raise ValueError(
-                    "residual IVFADC: anchors_df is missing anchors for "
-                    f"occupied cells {sorted(missing)[:5]}… — anchors must "
-                    "come from the same corpus/home assignment as codes_df"
-                )
-        return (
-            spark.sparkContext.broadcast(
-                (nbr_ids, nbr_grps, nbr_codes, cell_slices, anchor_map)
-            ),
-            n_idx,
-        )
-
-    id_type = probes_df.schema[id_col].dataType.simpleString()
-
-    def make_scan(b_index, top, emit_adc):
-        return _make_ivfadc_scan(
-            b_index, top, emit_adc, code_mats, m, sub_dim, dim,
-            id_col, group_col, vec_col, cells_col, round_dp, cross_group_only,
-        )
-
-    from .sampling import ensure_min_partitions
-
-    probe_cols = (
-        [id_col] + ([group_col] if group_col is not None else [])
-        + [vec_col, cells_col]
+    validate = codes is not None and not self_join
+    codebook, codes, anchors = _adc_assets(
+        base, dim, m, k_codes, iters, id_col, vec_col, round_dp,
+        norm=norm, home=home if residual else None, anchors=anchors,
+        codebook=codebook, codes=codes,
     )
-
-    def make_probes():
-        # built AFTER the index(es): the anchor-coverage/staleness raises
-        # must fire before any probe-side analysis error (a bad vec_col
-        # would otherwise mask the index problem — pinned by test)
-        return ensure_min_partitions(
-            probes_df.select(*probe_cols),
-            spark.sparkContext.defaultParallelism,
-        )
-
-    if n_cell_shards == 1:
-        b_index, n_idx = build_cell_index(indexed)
-        top = min(shortlist, n_idx) if n_idx else 0
-        sim_schema = f"probe_id {id_type}, nbr_id {id_type}"
-        return make_probes().mapInPandas(
-            make_scan(b_index, top, emit_adc=False), schema=sim_schema
-        ).select("probe_id", "nbr_id")
-
-    # beyond-residency path (VERDICT r8 item 3): shard the CELLS across
-    # broadcasts. Each shard holds a subset of the inverted file — whole
-    # cells only, a cell's slice is never split — scans with the FULL
-    # shortlist cap, and emits its per-probe top-C WITH the rounded adc
-    # scores; the union re-merges by the same (adc desc, nbr_id) total
-    # order. A pair with global rank <= C has rank <= C within its own
-    # cell's shard, so the union provably contains every global top-C
-    # pair and the window selection is bit-identical to the unsharded
-    # scan (adc_shortlist_pairs' tested n_shards argument, applied to
-    # cells so the PRUNING survives past residency instead of falling
-    # back to the flat sharded scan). The residency guard bounds each
-    # per-shard collect/broadcast; the re-merge window is bounded at
-    # n_cell_shards * C rows per probe.
-    from pyspark.sql import Window
-
-    sim_schema = f"probe_id {id_type}, nbr_id {id_type}, adc double"
-    shard_indexes = []
-    for s in range(n_cell_shards):
-        sub = indexed.filter(
-            F.pmod(F.xxhash64(F.col("__cell").cast("long")), F.lit(n_cell_shards))
-            == s
-        )
-        shard_indexes.append(build_cell_index(sub)[0])
-    probes = make_probes()
-    shard_outs = [
-        probes.mapInPandas(
-            make_scan(b_index, shortlist, emit_adc=True), schema=sim_schema
-        )
-        for b_index in shard_indexes
-    ]
-    union = shard_outs[0]
-    for extra in shard_outs[1:]:
-        union = union.unionByName(extra)
-    w = Window.partitionBy("probe_id").orderBy(F.desc("adc"), F.asc("nbr_id"))
-    return (
-        union.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= shortlist)
-        .select("probe_id", "nbr_id")
+    pairs = adc_shortlist_pairs(
+        probes, codebook, codes, shortlist=shortlist, dim=dim, m=m,
+        group_col=group_col, id_col=id_col, vec_col="__nv", round_dp=round_dp,
+        max_index_bytes=max_index_bytes, n_shards=n_shards,
+        index_df=None if self_join else index_df,
+        cross_group_only=cross_group_only, validate_coverage=validate,
+        home_df=home if ivf else None, cells_col="__cells",
+        anchors_df=anchors if residual else None,
     )
+    scored = _exact_rerank_pairs(
+        pairs, probe_df, base, id_col=id_col, vec_col=vec_col, round_dp=round_dp
+    )
+    return finish(scored)
 
 
 def margin_mine_ivfadc(
@@ -3453,7 +3108,7 @@ def margin_mine_ivfadc(
     codes: DataFrame | None = None,
     residual: bool = False,
     anchors: DataFrame | None = None,
-    n_cell_shards: int = 1,
+    n_shards: int = 1,
 ) -> DataFrame:
     """IVFADC margin mining — the margin_mine_pq pipeline with coarse-
     cell pruning composed in front of the ADC scan (VERDICT r7 item 2),
@@ -3481,76 +3136,18 @@ def margin_mine_ivfadc(
     the SAME scanned-cell fraction (the q_margin_ivfadc_res_curve
     measures exactly that delta per rung). In residual mode the
     codebook/codes asset params are residual-space; `anchors` (from
-    cell_anchors) is derived when not supplied."""
-    if norm is None:
-        norm = normalize_rounded(
-            df, id_col=id_col, vec_col=vec_col, out_col="__nv", round_dp=round_dp
-        ).localCheckpoint()
-    if k_cells is None:
-        k_cells = max(1, math.isqrt(max(norm.count() - 1, 0)) + 1)
-    if centroids is None:
-        _, centroids = kmeans_fit_distributed(
-            df, k=k_cells, iters=iters, id_col=id_col, vec_col=vec_col,
-            round_dp=round_dp,
-        )
-    if ranked_cells is None:
-        ranked_cells = assign_cells_ranked(
-            df, centroids, n=k_cells, id_col=id_col, vec_col=vec_col,
-            round_dp=round_dp,
-        ).localCheckpoint()
-    if shortlist is None:
-        shortlist = size_adc_shortlist(norm.count())
-    home = ranked_cells.select(
-        F.col(id_col), F.element_at("cells", 1).alias("cell")
+    cell_anchors) is derived when not supplied. `n_shards > 1` is
+    adc_shortlist_pairs' id-hash shard-and-re-merge path, bit-identical
+    to the unsharded scan."""
+    return _adc_join(
+        df, None, partial(_margin_top2, min_margin_x10k=min_margin_x10k),
+        dim=dim, m=m, k_codes=k_codes, iters=iters, shortlist=shortlist,
+        group_col=group_col, id_col=id_col, vec_col=vec_col, round_dp=round_dp,
+        max_index_bytes=max_index_bytes, n_shards=n_shards,
+        codebook=codebook, codes=codes, ivf=True, nprobe=nprobe, k_cells=k_cells,
+        centroids=centroids, residual=residual, anchors=anchors, norm=norm,
+        ranked_cells=ranked_cells,
     )
-    if residual:
-        if anchors is None:
-            anchors = cell_anchors(
-                norm, home, id_col=id_col, vec_col="__nv", round_dp=round_dp
-            ).localCheckpoint()
-        enc_src = residualize(
-            norm.select(id_col, "__nv"), home, anchors,
-            id_col=id_col, vec_col="__nv", out_col="__rv",
-        )
-        enc_col = "__rv"
-    else:
-        enc_src, enc_col = norm, "__nv"
-    if codebook is None:
-        codebook = pq_fit(
-            enc_src, dim=dim, m=m, k_codes=k_codes, iters=iters,
-            id_col=id_col, vec_col=enc_col, round_dp=round_dp,
-        )
-    if codes is None:
-        codes = pq_encode(
-            enc_src, codebook, dim=dim, m=m, id_col=id_col, vec_col=enc_col
-        )
-    probes = norm.select(id_col, group_col, "__nv").join(
-        ranked_cells.select(
-            F.col(id_col), F.slice("cells", 1, nprobe).alias("__cells")
-        ),
-        id_col,
-    )
-    pairs = ivfadc_shortlist_pairs(
-        probes,
-        codebook,
-        codes,
-        home,
-        shortlist=shortlist,
-        dim=dim,
-        m=m,
-        group_col=group_col,
-        id_col=id_col,
-        vec_col="__nv",
-        cells_col="__cells",
-        round_dp=round_dp,
-        max_index_bytes=max_index_bytes,
-        anchors_df=anchors if residual else None,
-        n_cell_shards=n_cell_shards,
-    )
-    scored = _exact_rerank_pairs(
-        pairs, df, df, id_col=id_col, vec_col=vec_col, round_dp=round_dp
-    )
-    return _margin_top2(scored, min_margin_x10k)
 
 
 def ivfadc_knn_join(
@@ -3574,7 +3171,7 @@ def ivfadc_knn_join(
     residual: bool = False,
     base_anchors: DataFrame | None = None,
     base_home: DataFrame | None = None,
-    n_cell_shards: int = 1,
+    n_shards: int = 1,
 ) -> DataFrame:
     """IVFADC batch ANN join — pq_knn_join with the coarse-cell pruning
     composed in front of its ADC scan, completing the IVFADC composition
@@ -3596,108 +3193,14 @@ def ivfadc_knn_join(
     `base_anchors`), and each query's ADC score seeds with its
     anchor inner product — finer ranking from the same code bytes, so
     fewer true neighbors fall outside the top-C at the same nprobe."""
-    if k_cells is None:
-        k_cells = max(1, math.isqrt(max(base_df.count() - 1, 0)) + 1)
-    if nprobe is None:
-        nprobe = (k_cells + 1) // 2
-    if centroids is None:
-        _, centroids = kmeans_fit_distributed(
-            base_df, k=k_cells, iters=iters, id_col=id_col, vec_col=vec_col,
-            round_dp=round_dp,
-        )
-    home = (
-        base_home
-        if base_home is not None
-        else assign_cells_ranked(
-            base_df, centroids, n=1, id_col=id_col, vec_col=vec_col,
-            round_dp=round_dp,
-        ).select(F.col(id_col), F.element_at("cells", 1).alias("cell"))
-    )
-    qcells = assign_cells_ranked(
-        queries_df, centroids, n=nprobe, id_col=id_col, vec_col=vec_col,
-        round_dp=round_dp,
-    )
-    q_norm = normalize_rounded(
-        queries_df, id_col=id_col, vec_col=vec_col, out_col="__nv",
-        round_dp=round_dp,
-    )
-    if shortlist is None:
-        shortlist = size_adc_shortlist(base_df.count())
-    if base_codebook is None or base_codes is None or (
-        residual and base_anchors is None
-    ):
-        base_norm = normalize_rounded(
-            base_df, id_col=id_col, vec_col=vec_col, out_col="__nv",
-            round_dp=round_dp,
-        ).localCheckpoint()
-        if residual:
-            if base_anchors is None:
-                base_anchors = cell_anchors(
-                    base_norm, home, id_col=id_col, vec_col="__nv",
-                    round_dp=round_dp,
-                ).localCheckpoint()
-            enc_src = residualize(
-                base_norm.select(id_col, "__nv"), home, base_anchors,
-                id_col=id_col, vec_col="__nv", out_col="__rv",
-            )
-            enc_col = "__rv"
-        else:
-            enc_src, enc_col = base_norm, "__nv"
-        book = (
-            base_codebook
-            if base_codebook is not None
-            else pq_fit(
-                enc_src, dim=dim, m=m, k_codes=k_codes, iters=iters,
-                id_col=id_col, vec_col=enc_col, round_dp=round_dp,
-            )
-        )
-        codes = (
-            base_codes
-            if base_codes is not None
-            else pq_encode(
-                enc_src, book, dim=dim, m=m, id_col=id_col, vec_col=enc_col
-            )
-        )
-    else:
-        book, codes = base_codebook, base_codes
-    probes = q_norm.select(id_col, "__nv").join(
-        qcells.select(F.col(id_col), F.col("cells").alias("__cells")), id_col
-    )
-    pairs = ivfadc_shortlist_pairs(
-        probes,
-        book,
-        codes,
-        home,
-        shortlist=shortlist,
-        dim=dim,
-        m=m,
-        group_col=None,
-        id_col=id_col,
-        vec_col="__nv",
-        cells_col="__cells",
-        round_dp=round_dp,
-        max_index_bytes=max_index_bytes,
-        index_df=base_df,
-        cross_group_only=False,
-        anchors_df=base_anchors if residual else None,
-        validate_coverage=base_codes is not None,
-        n_cell_shards=n_cell_shards,
-    )
-    from pyspark.sql import Window
-
-    scored = _exact_rerank_pairs(
-        pairs, queries_df, base_df, id_col=id_col, vec_col=vec_col,
-        round_dp=round_dp,
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("s").desc(), F.col("nbr_id"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(
-            F.col("probe_id").alias("query_id"),
-            F.col("nbr_id").alias("base_id"),
-            F.col("s").alias("cosine_sim"),
-        )
+    return _adc_join(
+        queries_df, base_df, partial(_knn_topk, k=k),
+        dim=dim, m=m, k_codes=k_codes, iters=iters, shortlist=shortlist,
+        group_col=None, id_col=id_col, vec_col=vec_col, round_dp=round_dp,
+        max_index_bytes=max_index_bytes, n_shards=n_shards,
+        codebook=base_codebook, codes=base_codes, cross_group_only=False,
+        ivf=True, nprobe=nprobe, k_cells=k_cells, centroids=centroids,
+        residual=residual, anchors=base_anchors, home=base_home,
     )
 
 
@@ -3723,7 +3226,7 @@ def margin_mine_ivfadc_xcorpus(
     residual: bool = False,
     ref_anchors: DataFrame | None = None,
     ref_home: DataFrame | None = None,
-    n_cell_shards: int = 1,
+    n_shards: int = 1,
 ) -> DataFrame:
     """Cross-corpus IVFADC margin mining — the third shape of the
     cell-pruned composition (self-mining: margin_mine_ivfadc; serving
@@ -3733,105 +3236,22 @@ def margin_mine_ivfadc_xcorpus(
     mines its best/second-best cross-group neighbors from the
     accumulated REFERENCE, scanning only its nprobe nearest cells'
     inverted lists of the ref's code index. ALL index-side artifacts —
-    coarse quantizer (`centroids`), home-cell lists, PQ codebook/codes
-    (`ref_codebook`/`ref_codes`) — are persisted serving assets built
-    once on the reference; the per-batch cost is one normalization +
-    cell ranking of the batch and a ~nprobe/k scan, which is what makes
-    continuous ingest at a 1e9-vector standing index payable where the
-    flat xcorpus scan (margin_mine_pq_xcorpus) pays Θ(|new|·|ref|) LUT
-    ops per batch. nprobe defaults to ceil(k_cells/2) — the rung the
-    certified self-mining decisions bound from above at the driver
-    scales. nprobe = k_cells reproduces margin_mine_pq_xcorpus
-    bit-identically (tested)."""
-    if k_cells is None:
-        k_cells = max(1, math.isqrt(max(ref_df.count() - 1, 0)) + 1)
-    if nprobe is None:
-        nprobe = (k_cells + 1) // 2
-    if centroids is None:
-        _, centroids = kmeans_fit_distributed(
-            ref_df, k=k_cells, iters=iters, id_col=id_col, vec_col=vec_col,
-            round_dp=round_dp,
-        )
-    home = (
-        ref_home
-        if ref_home is not None
-        else assign_cells_ranked(
-            ref_df, centroids, n=1, id_col=id_col, vec_col=vec_col,
-            round_dp=round_dp,
-        ).select(F.col(id_col), F.element_at("cells", 1).alias("cell"))
+    coarse quantizer (`centroids`), home-cell lists (`ref_home`), PQ
+    codebook/codes (`ref_codebook`/`ref_codes`) — are persisted serving
+    assets built once on the reference; the per-batch cost is one
+    normalization + cell ranking of the batch and a ~nprobe/k scan,
+    which is what makes continuous ingest at a 1e9-vector standing
+    index payable where the flat xcorpus scan (margin_mine_pq_xcorpus)
+    pays Θ(|new|·|ref|) LUT ops per batch. nprobe defaults to
+    ceil(k_cells/2) — the rung the certified self-mining decisions
+    bound from above at the driver scales. nprobe = k_cells reproduces
+    margin_mine_pq_xcorpus bit-identically (tested)."""
+    return _adc_join(
+        new_df, ref_df, partial(_margin_top2, min_margin_x10k=min_margin_x10k),
+        dim=dim, m=m, k_codes=k_codes, iters=iters, shortlist=shortlist,
+        group_col=group_col, id_col=id_col, vec_col=vec_col, round_dp=round_dp,
+        max_index_bytes=max_index_bytes, n_shards=n_shards,
+        codebook=ref_codebook, codes=ref_codes, ivf=True, nprobe=nprobe,
+        k_cells=k_cells, centroids=centroids, residual=residual,
+        anchors=ref_anchors, home=ref_home,
     )
-    qcells = assign_cells_ranked(
-        new_df, centroids, n=nprobe, id_col=id_col, vec_col=vec_col,
-        round_dp=round_dp,
-    )
-    new_norm = normalize_rounded(
-        new_df, id_col=id_col, vec_col=vec_col, out_col="__nv",
-        round_dp=round_dp,
-    )
-    if shortlist is None:
-        shortlist = size_adc_shortlist(ref_df.count())
-    if ref_codebook is None or ref_codes is None or (
-        residual and ref_anchors is None
-    ):
-        ref_norm = normalize_rounded(
-            ref_df, id_col=id_col, vec_col=vec_col, out_col="__nv",
-            round_dp=round_dp,
-        ).localCheckpoint()
-        if residual:
-            if ref_anchors is None:
-                ref_anchors = cell_anchors(
-                    ref_norm, home, id_col=id_col, vec_col="__nv",
-                    round_dp=round_dp,
-                ).localCheckpoint()
-            enc_src = residualize(
-                ref_norm.select(id_col, "__nv"), home, ref_anchors,
-                id_col=id_col, vec_col="__nv", out_col="__rv",
-            )
-            enc_col = "__rv"
-        else:
-            enc_src, enc_col = ref_norm, "__nv"
-        book = (
-            ref_codebook
-            if ref_codebook is not None
-            else pq_fit(
-                enc_src, dim=dim, m=m, k_codes=k_codes, iters=iters,
-                id_col=id_col, vec_col=enc_col, round_dp=round_dp,
-            )
-        )
-        codes = (
-            ref_codes
-            if ref_codes is not None
-            else pq_encode(
-                enc_src, book, dim=dim, m=m, id_col=id_col, vec_col=enc_col
-            )
-        )
-    else:
-        book, codes = ref_codebook, ref_codes
-    probes = new_norm.select(id_col, group_col, "__nv").join(
-        qcells.select(F.col(id_col), F.col("cells").alias("__cells")), id_col
-    )
-    pairs = ivfadc_shortlist_pairs(
-        probes,
-        book,
-        codes,
-        home,
-        shortlist=shortlist,
-        dim=dim,
-        m=m,
-        group_col=group_col,
-        id_col=id_col,
-        vec_col="__nv",
-        cells_col="__cells",
-        round_dp=round_dp,
-        max_index_bytes=max_index_bytes,
-        index_df=ref_df,
-        cross_group_only=True,
-        anchors_df=ref_anchors if residual else None,
-        validate_coverage=ref_codes is not None,
-        n_cell_shards=n_cell_shards,
-    )
-    scored = _exact_rerank_pairs(
-        pairs, new_df, ref_df, id_col=id_col, vec_col=vec_col,
-        round_dp=round_dp,
-    )
-    return _margin_top2(scored, min_margin_x10k)

@@ -3297,7 +3297,7 @@ def _pq_adc_res_core_sql(
     anchor(home cell) — the anchor being the 6dp-rounded per-cell mean
     of the index side's normalized vectors (cell_anchors) — and every
     ADC score is the left-to-right fold ⟨q, anchor⟩ + lut_0 + … +
-    lut_{m-1}, rounded once at the end (ivfadc_shortlist_pairs' residual
+    lut_{m-1}, rounded once at the end (adc_shortlist_pairs' residual
     determinism contract). Emits the SAME terminal CTE names as
     _pq_adc_core_sql (vn, params, padc) so _pq_shortlist_tail_sql and
     the ladder restricts splice in unchanged; EXPECTS the coarse-cell

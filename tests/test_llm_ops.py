@@ -1816,16 +1816,66 @@ class TestIvfadc:
                 emb, dim=64, nprobe=2, k_cells=k, m=16, k_codes=16,
                 iters=1, max_index_bytes=64,
             )
-        with pytest.raises(ValueError, match="n_cell_shards"):
+        with pytest.raises(ValueError, match="n_shards"):
             SIM.margin_mine_ivfadc(
                 emb, dim=64, nprobe=2, k_cells=k, m=16, k_codes=16,
-                iters=1, n_cell_shards=0,
+                iters=1, n_shards=0,
             )
+
+    def test_id_shards_split_an_over_budget_cell(self, spark):
+        """Id-hash shards split a single cell that is over the residency
+        budget: with 2 cells, a budget below the largest cell's bytes
+        but above every id shard's bytes makes the unsharded scan raise
+        while n_shards=4 returns the rows of the run without a budget."""
+        emb = load_table(spark, "embeddings", SF_DIR)
+        _, cents = SIM.kmeans_fit_distributed(emb, k=2, iters=1, round_dp=6)
+        ranked = SIM.assign_cells_ranked(emb, cents, n=2).localCheckpoint()
+        home = ranked.select("vec_id", F.element_at("cells", 1).alias("cell"))
+        row = 16 + 24
+        max_cell = max(r["count"] for r in home.groupBy("cell").count().collect())
+        max_shard = max(
+            r["count"]
+            for r in home.groupBy(F.pmod(F.xxhash64("vec_id"), F.lit(4))).count().collect()
+        )
+        budget = max_shard * row + 1
+        assert budget <= max_cell * row, "budget must sit below the largest cell"
+        kwargs = dict(
+            dim=64, nprobe=1, k_cells=2, m=16, k_codes=16, iters=1,
+            min_margin_x10k=11000, centroids=cents, ranked_cells=ranked,
+        )
+        with pytest.raises(ValueError, match="residency budget"):
+            SIM.margin_mine_ivfadc(emb, max_index_bytes=budget, **kwargs).collect()
+        over = SIM.margin_mine_ivfadc(
+            emb, max_index_bytes=budget, n_shards=4, **kwargs
+        ).collect()
+        full = SIM.margin_mine_ivfadc(emb, **kwargs).collect()
+        assert sorted(map(tuple, over)) == sorted(map(tuple, full)) and full
+
+    def test_one_index_broadcast_and_one_scan_kernel(self):
+        """similarity.py has exactly one sparkContext.broadcast call site
+        and only adc_shortlist_pairs and gram_matrix call mapInPandas, so
+        a second ADC scan fork cannot grow back unnoticed."""
+        import ast
+        import inspect
+
+        tree = ast.parse(inspect.getsource(SIM))
+        broadcasts, scanners = 0, set()
+        for fn in tree.body:
+            for node in ast.walk(fn):
+                if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                    continue
+                owner = node.func.value
+                if node.func.attr == "broadcast" and isinstance(owner, ast.Attribute) and owner.attr == "sparkContext":
+                    broadcasts += 1
+                if node.func.attr == "mapInPandas":
+                    scanners.add(fn.name)
+        assert broadcasts == 1
+        assert scanners == {"adc_shortlist_pairs", "gram_matrix"}
 
     @pytest.mark.slow
     def test_cell_sharded_scan_bit_identical_and_beyond_residency(self, spark):
-        """VERDICT r8 item 3: the cell-sharded IVFADC scan (cells
-        hash-partitioned across broadcasts, per-shard top-C union,
+        """VERDICT r8 item 3: the sharded IVFADC scan (index rows
+        id-hash-partitioned across broadcasts, per-shard top-C union,
         bounded (adc desc, nbr_id) re-merge) must be BIT-IDENTICAL to
         the unsharded scan — flat and residual encodings both — and
         must run where the unsharded scan's residency guard RAISES,
@@ -1845,7 +1895,7 @@ class TestIvfadc:
             sharded = SIM.margin_mine_ivfadc(
                 emb, dim=64, nprobe=(k + 1) // 2, k_cells=k, m=16,
                 k_codes=16, iters=1, min_margin_x10k=11000,
-                residual=residual, n_cell_shards=3,
+                residual=residual, n_shards=3,
             ).collect()
             assert sorted(map(tuple, base)) == sorted(map(tuple, sharded))
             assert base, "vacuous bit-identity: miner returned no rows"
@@ -1857,9 +1907,7 @@ class TestIvfadc:
         home = ranked.select("vec_id", F.element_at("cells", 1).alias("cell"))
         shards = 4
         shard_sizes = (
-            home.groupBy(
-                F.pmod(F.xxhash64(F.col("cell").cast("long")), F.lit(shards))
-            )
+            home.groupBy(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(shards)))
             .count()
             .collect()
         )
@@ -1874,7 +1922,7 @@ class TestIvfadc:
         with pytest.raises(ValueError, match="residency budget"):
             SIM.margin_mine_ivfadc(emb, **kwargs).collect()
         over = SIM.margin_mine_ivfadc(
-            emb, n_cell_shards=shards, **kwargs
+            emb, n_shards=shards, **kwargs
         ).collect()
         full = SIM.margin_mine_ivfadc(
             emb, dim=64, nprobe=(k + 1) // 2, k_cells=k, m=16, k_codes=16,
@@ -1885,7 +1933,7 @@ class TestIvfadc:
 
     @pytest.mark.slow
     def test_cell_sharded_serving_and_ingest_shapes(self, spark):
-        """The n_cell_shards passthrough on the OTHER two production
+        """The n_shards passthrough on the OTHER two production
         shapes: the serving kNN join and the incremental-ingest miner
         must be row-identical sharded vs not — the index an ingest
         pipeline or a serving fleet holds resident is exactly the one
@@ -1899,7 +1947,7 @@ class TestIvfadc:
         ).collect()))
         j2 = sorted(map(key, SIM.ivfadc_knn_join(
             queries, base, dim=64, k=3, m=16, k_codes=16, iters=1,
-            n_cell_shards=3,
+            n_shards=3,
         ).collect()))
         assert j1 == j2 and j1
         new = emb.filter(F.col("vec_id") % 3 == 0)
@@ -1910,7 +1958,7 @@ class TestIvfadc:
         ).collect()))
         x2 = sorted(map(key, SIM.margin_mine_ivfadc_xcorpus(
             new, ref, dim=64, m=16, k_codes=16, iters=1,
-            min_margin_x10k=11000, residual=True, n_cell_shards=3,
+            min_margin_x10k=11000, residual=True, n_shards=3,
         ).collect()))
         assert x1 == x2 and x1
 
@@ -1997,9 +2045,9 @@ class TestIvfadc:
             "vec_id",
         )
         with pytest.raises(ValueError, match="missing anchors"):
-            SIM.ivfadc_shortlist_pairs(
-                probes, book, codes, home, shortlist=8, dim=64, m=16,
-                anchors_df=truncated,
+            SIM.adc_shortlist_pairs(
+                probes, book, codes, shortlist=8, dim=64, m=16,
+                home_df=home, cells_col="__cells", anchors_df=truncated,
             ).count()
 
     def test_residual_recall_dominates_flat_at_top_rung(self, spark):

@@ -945,9 +945,9 @@ def main() -> int:
                             ),
                             "vec_id",
                         )
-                        pairs = SIM.ivfadc_shortlist_pairs(
-                            probes, book, codes, iv_home,
-                            shortlist=pq_c, dim=64, m=16, vec_col="nv",
+                        pairs = SIM.adc_shortlist_pairs(
+                            probes, book, codes, shortlist=pq_c, dim=64,
+                            m=16, vec_col="nv", home_df=iv_home,
                             cells_col="pc", anchors_df=anchors,
                         )
                         iscored = _score_pairs_broadcast(spark, pairs, ids, vecs)
