@@ -469,8 +469,6 @@ def knn_join(
     paths (lsh_ann_topk / ivf_ann_topk); this exact form doubles as
     their recall oracle. Similarities ranked after rounding to 6dp with
     an id tie-break so ordering is engine-deterministic."""
-    from pyspark.sql import Window
-
     base = df.select(
         F.col(id_col).alias("nbr_id"), _to_double(F.col(vec_col)).alias("nbr_v")
     ).withColumn("nbr_nrm", l2_norm(F.col("nbr_v")))
@@ -490,12 +488,7 @@ def knn_join(
         .filter(F.col("probe_id") != F.col("nbr_id"))
         .select("probe_id", "nbr_id", sim.alias("cosine_sim"))
     )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cosine_sim").desc(), F.col("nbr_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("probe_id", "nbr_id", "cosine_sim")
-    )
+    return _knn_topk(scored, k)
 
 
 def quantize_embeddings_int8(
@@ -924,8 +917,6 @@ def lsh_knn_join(
         # the base side never shuffles (locally AQE would otherwise pick
         # whichever side is smaller — usually the base in tests)
         probes = F.broadcast(probes)
-    from pyspark.sql import Window
-
     # norms hoisted per row (FP-identical to cosine(), 3x less pair work)
     cand = probes.join(base, ["bucket"]).select(
         "query_id",
@@ -934,14 +925,7 @@ def lsh_knn_join(
             dot(F.col("qv"), F.col("bv")) / (F.col("qnrm") * F.col("bnrm")), round_dp
         ).alias("cosine_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("base_id")
-    )
-    return (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return _knn_topk(cand, k)
 
 
 def rrf_fuse(
@@ -1636,16 +1620,6 @@ def margin_mine_ivf(
         round_dp=round_dp,
         materialize=materialize,
     )
-    # Re-key the ID-PAIR stream (16 bytes/row — guide §8: shuffle
-    # metadata, not payloads) by probe_id BEFORE the vectors attach: the
-    # candidate join's output partitioning tracks the tiny cell-keyed
-    # exchange, which AQE coalesces to a handful of partitions — and the
-    # Arrow cosine then serializes ~|cand| x 2·dim doubles through the
-    # Python boundary on those few tasks (measured: a single 1.5 s task
-    # at sf0.1). Hash(probe_id) at spark.sql.shuffle.partitions is also
-    # exactly the partitioning _margin_top2's window needs, so its
-    # Exchange is elided — one tiny shuffle buys a wide rerank for free.
-    cand = cand.repartition(F.col("probe_id"))
     scored = _exact_rerank_pairs(cand, df, df, id_col, vec_col, round_dp)
     return _margin_top2(scored, min_margin_x10k)
 
@@ -2327,12 +2301,16 @@ def adc_shortlist_pairs(
     spark = df_norm.sparkSession
     pruned = home_df is not None
     index_src = index_df if index_df is not None else df_norm
+    # an unsharded index is collected whole, so its id-keyed sides fit a
+    # broadcast; shuffle joins here let AQE re-plan at run time and the
+    # collect's job count varied between identical runs
+    side = F.broadcast if n_shards == 1 else (lambda d: d)
     # group_col=None (general ANN): the index carries a constant group
     grp = F.col(group_col) if group_col is not None else F.lit("")
-    indexed = codes_df.join(index_src.select(F.col(id_col), grp.alias("__g")), id_col)
+    indexed = codes_df.join(side(index_src.select(F.col(id_col), grp.alias("__g"))), id_col)
     if pruned:
         cells = home_df.select(F.col(id_col), F.col("cell").alias("__cell"))
-        indexed = indexed.join(cells, id_col)
+        indexed = indexed.join(side(cells), id_col)
     else:
         indexed = indexed.withColumn("__cell", F.lit(0))
     indexed = indexed.select(id_col, "__g", "__cell", "codes")
@@ -2392,7 +2370,9 @@ def adc_shortlist_pairs(
         index = (ids, grps, codes, slices, anchor_map)
         return spark.sparkContext.broadcast(index), n_idx
 
-    def make_scan(b_index, top):
+    def make_scan(b_index, top, emit_adc):
+        # `emit_adc`: the rounded ADC column the sharded union re-merges
+        # on; the unsharded scan ships (probe_id, nbr_id) only
         def scan(batches):
             ids_a, grps_a, codes_a, slices, anchors = b_index.value
             for pdf in batches:
@@ -2454,13 +2434,10 @@ def adc_shortlist_pairs(
                         best_s[rp] = np.take_along_axis(s, order, axis=1)
                         best_i[rp] = np.take_along_axis(d, order, axis=1)
                 valid = np.isfinite(best_s)
-                yield pd.DataFrame(
-                    {
-                        "probe_id": np.repeat(pids, valid.sum(axis=1)),
-                        "nbr_id": best_i[valid],
-                        "adc": best_s[valid],
-                    }
-                )
+                out = {"probe_id": np.repeat(pids, valid.sum(axis=1)), "nbr_id": best_i[valid]}
+                if emit_adc:
+                    out["adc"] = best_s[valid]
+                yield pd.DataFrame(out)
 
         return scan
 
@@ -2488,18 +2465,20 @@ def adc_shortlist_pairs(
         spark.sparkContext.defaultParallelism,
     )
     id_type = df_norm.schema[id_col].dataType.simpleString()
-    schema = f"probe_id {id_type}, nbr_id {id_type}, adc double"
+    schema = f"probe_id {id_type}, nbr_id {id_type}"
     if n_shards == 1:
         # keep the FULL shortlist: exclusions happen by mask, never by
         # shrinking the cap (a disjoint index has no self row)
         b_index, n_idx = indexes[0]
-        scan = make_scan(b_index, min(shortlist, n_idx))
-        return probes.mapInPandas(scan, schema=schema).select("probe_id", "nbr_id")
+        return probes.mapInPandas(make_scan(b_index, min(shortlist, n_idx), False), schema=schema)
     from pyspark.sql import Window
 
     union = reduce(
         DataFrame.unionByName,
-        [probes.mapInPandas(make_scan(b, shortlist), schema=schema) for b, _ in indexes],
+        [
+            probes.mapInPandas(make_scan(b, shortlist, True), schema=f"{schema}, adc double")
+            for b, _ in indexes
+        ],
     )
     w = Window.partitionBy("probe_id").orderBy(F.desc("adc"), F.asc("nbr_id"))
     return (
@@ -2542,22 +2521,20 @@ def _exact_rerank_pairs(
     )
 
 
-def _knn_topk(scored: DataFrame, k: int) -> DataFrame:
-    """The kNN-join finisher: per query, the top-k reranked pairs by
-    (s desc, nbr_id) as (query_id, base_id, cosine_sim) — the
-    lsh_knn_join output contract."""
+def _knn_topk(
+    scored: DataFrame, k: int, names: tuple[str, str, str] | None = None
+) -> DataFrame:
+    """The kNN-join finisher: `scored` is (probe key, neighbour id,
+    rounded sim) in that order; per probe, the top-k rows by (sim desc,
+    neighbour id), renamed to `names` when given — the ADC joins pass
+    ("query_id", "base_id", "cosine_sim"), the lsh_knn_join output
+    contract."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy("probe_id").orderBy(F.col("s").desc(), F.col("nbr_id"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(
-            F.col("probe_id").alias("query_id"),
-            F.col("nbr_id").alias("base_id"),
-            F.col("s").alias("cosine_sim"),
-        )
-    )
+    key, nbr, sim = scored.columns
+    w = Window.partitionBy(key).orderBy(F.col(sim).desc(), F.col(nbr))
+    top = scored.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k)
+    return top.select(*(F.col(c).alias(n) for c, n in zip(scored.columns, names or scored.columns)))
 
 
 def margin_mine_pq(
@@ -2695,7 +2672,9 @@ def pq_knn_join(
     contract exactly: general ANN never reads groups — only a vector's
     own row is excluded."""
     return _adc_join(
-        queries_df, base_df, partial(_knn_topk, k=k),
+        queries_df,
+        base_df,
+        partial(_knn_topk, k=k, names=("query_id", "base_id", "cosine_sim")),
         dim=dim, m=m, k_codes=k_codes, iters=iters, shortlist=shortlist,
         group_col=group_col, id_col=id_col, vec_col=vec_col, round_dp=round_dp,
         max_index_bytes=max_index_bytes, n_shards=n_shards,
@@ -3075,7 +3054,7 @@ def _adc_join(
         probes, codebook, codes, shortlist=shortlist, dim=dim, m=m,
         group_col=group_col, id_col=id_col, vec_col="__nv", round_dp=round_dp,
         max_index_bytes=max_index_bytes, n_shards=n_shards,
-        index_df=None if self_join else index_df,
+        index_df=norm if self_join else index_df,
         cross_group_only=cross_group_only, validate_coverage=validate,
         home_df=home if ivf else None, cells_col="__cells",
         anchors_df=anchors if residual else None,
@@ -3194,7 +3173,9 @@ def ivfadc_knn_join(
     anchor inner product — finer ranking from the same code bytes, so
     fewer true neighbors fall outside the top-C at the same nprobe."""
     return _adc_join(
-        queries_df, base_df, partial(_knn_topk, k=k),
+        queries_df,
+        base_df,
+        partial(_knn_topk, k=k, names=("query_id", "base_id", "cosine_sim")),
         dim=dim, m=m, k_codes=k_codes, iters=iters, shortlist=shortlist,
         group_col=None, id_col=id_col, vec_col=vec_col, round_dp=round_dp,
         max_index_bytes=max_index_bytes, n_shards=n_shards,
